@@ -3,12 +3,18 @@
 api-runner.rkt:118-168).
 
 Flow: resolve runtime config (A1) -> chapters work-list drives the
-fetch DataSource (one input partition per chapter, A2-A9) -> adapter
-normalization to the canonical event schema (A10-A18) -> per-chapter
-`{chapter}.json` files under the config's json-out-path (A21,
-api-runner.rkt:39-52) -> WROTE:/ERROR: audit lines appended under
-logfile-path (A23, api-runner.rkt:80-89). Returns the audit frame so
-callers can assert on it; the CLI prints the log lines.
+fetch: the driver takes the DataSource reader's partitions and Spark
+runs one fetch task per partition, without DataSource V2 planning
+(A2-A9) -> adapter normalization to the canonical event schema
+(A10-A18) -> per-chapter `{chapter}.json` files under the config's
+json-out-path (A21, api-runner.rkt:39-52) -> WROTE:/ERROR: audit
+lines appended under logfile-path (A23, api-runner.rkt:80-89). The
+WROTE: counts come back from the write job itself and the ERROR:
+chapters from one collect that Catalyst prunes to the error branch,
+so a run is four Spark jobs: the checkpointed fetch, the write's
+shuffle-map and write stages, and the error collect. Returns the
+audit frame so callers can assert on it; the CLI prints the log
+lines.
 
 Usage: python -m cuttlefish_spark.run [configfile]
 """
@@ -17,8 +23,11 @@ from __future__ import annotations
 
 import os
 import sys
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
+
+AUDIT_DDL = "chapter_id string, status string, n_events long, log_line string"
 
 
 def run_pipeline(
@@ -37,7 +46,7 @@ def run_pipeline(
     golden-fixture chapters are reachable only behind the explicit
     `allow_fixture_chapters` replay/test flag."""
     from cuttlefish_spark.operators.ingest import datasource_canonical
-    from cuttlefish_spark.sinks.json_sink import audit_counts, write_keyed_json
+    from cuttlefish_spark.sinks.json_sink import write_keyed_json
     from cuttlefish_spark.sources.config import load_config
 
     config = config or load_config(arg=config_arg)
@@ -50,23 +59,27 @@ def run_pipeline(
                 "built-in fixture chapters in tests/demos)"
             )
         chapters_path = None
+    # The raw fetch is checkpointed inside datasource_canonical, so the
+    # write and the error collect below re-read it, never re-fetch.
     out = datasource_canonical(
         spark,
         chapters_path=chapters_path,
         transport=transport,
-    ).persist()
+    )
 
     ok = out.filter("status = 'OK'").drop("status", "error")
-    write_keyed_json(ok, config["json-out-path"])
+    wrote = write_keyed_json(ok, config["json-out-path"])
+    errors = Counter(
+        r["chapter_id"]
+        for r in out.filter("status = 'ERROR'").select("chapter_id").collect()
+    )
 
-    audit = audit_counts(out)
-    lines = [
-        f"{r['log_line']} ({r['n_events']})"
-        for r in audit.orderBy("chapter_id", "status").collect()
-    ]
-    append_log(config["logfile-path"], lines)
-    out.unpersist()
-    return audit
+    audit = sorted(
+        [(cid, "OK", n, f"WROTE: {cid}") for cid, n in wrote.items()]
+        + [(cid, "ERROR", n, f"ERROR: {cid}") for cid, n in errors.items()]
+    )
+    append_log(config["logfile-path"], [f"{line} ({n})" for _, _, n, line in audit])
+    return spark.createDataFrame(audit, AUDIT_DDL)
 
 
 def append_log(log_dir: str, lines: list[str], today=None) -> None:

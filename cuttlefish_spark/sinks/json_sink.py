@@ -14,9 +14,10 @@ Two write shapes:
 - `write_keyed_json` — exact filename parity with the reference
   (`{key}.json`, one JSON object keyed by event_id per file): rows are
   repartitioned BY KEY so each key's rows are colocated, then each
-  executor partition writes its keys' files directly — distributed, no
-  driver collect. Use only when the one-file-per-key contract matters
-  (it implies one task's worth of data per key).
+  executor partition writes its keys' files directly — distributed;
+  only the per-key row counts come back to the driver. Use only when
+  the one-file-per-key contract matters (it implies one task's worth
+  of data per key).
 """
 
 from __future__ import annotations
@@ -33,25 +34,36 @@ def write_partitioned_json(df: DataFrame, out_dir: str, key_col: str = "chapter_
 
 
 def write_keyed_json(df: DataFrame, out_dir: str, key_col: str = "chapter_id",
-                     id_col: str = "event_id") -> None:
+                     id_col: str = "event_id") -> dict:
     """One `{key}.json` per key holding `{event_id: record}` — byte-
-    shape parity with api-runner.rkt:39-52 (replace mode)."""
+    shape parity with api-runner.rkt:39-52 (replace mode; each file is
+    written to a dot-tmp and renamed into place, so readers never see a
+    torn file). Rows are hash-repartitioned by key into
+    `defaultParallelism` partitions: a fixed count, so AQE cannot
+    coalesce the write into one serial task. Returns `{key: n_rows}`,
+    collected from the same job that writes the files — the WROTE:
+    counts of the audit (api-runner.rkt:80-89) without a second scan."""
     os.makedirs(out_dir, exist_ok=True)
     cols = [c for c in df.columns if c != key_col]
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
 
-    def write_partition(rows) -> None:
+    def write_partition(rows):
         by_key: dict[str, dict] = {}
+        counts: dict[str, int] = {}
         for row in rows:
             d = row.asDict(recursive=True)
             key = d.pop(key_col)
             by_key.setdefault(key, {})[d.get(id_col)] = d
+            counts[key] = counts.get(key, 0) + 1
         for key, events in by_key.items():
             tmp = os.path.join(out_dir, f".{key}.json.tmp")
             with open(tmp, "w") as fh:
                 json.dump(events, fh, sort_keys=True, default=str)
             os.replace(tmp, os.path.join(out_dir, f"{key}.json"))
+        return counts.items()
 
-    df.select(key_col, *cols).repartition(F.col(key_col)).foreachPartition(write_partition)
+    keyed = df.select(key_col, *cols).repartition(n_parts, F.col(key_col))
+    return dict(keyed.rdd.mapPartitions(write_partition).collect())
 
 
 def audit_counts(df: DataFrame, key_col: str = "chapter_id",

@@ -527,3 +527,119 @@ def test_streaming_datasource_matches_batch(spark):
     a = streaming_ingest_canonical(spark)
     b = datasource_canonical(spark)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_unknown_adapter_spends_no_throttle_token(monkeypatch):
+    """The bucket gates requests only (throttle.py, meetup.rkt:67,86):
+    an unknown-adapter chapter makes no request, so a work-list of only
+    unknown adapters never acquires (and so never sleeps), while a
+    known adapter acquires once per GET."""
+    from cuttlefish_spark.sources.datasource import (
+        ChapterPartition,
+        ChapterReplayReader,
+    )
+    from cuttlefish_spark.sources.throttle import TokenBucket
+
+    calls = []
+    monkeypatch.setattr(TokenBucket, "acquire", lambda self: calls.append(1))
+    reader = ChapterReplayReader({"rate_per_sec": 1.0})
+    unknown = [(f"x{i}", "X", "carrierpigeon", "deep-six", None) for i in range(20)]
+    rows = list(reader.read(ChapterPartition(unknown)))
+    assert [r[4] for r in rows] == ["ERROR"] * 20
+    assert calls == []
+
+    known = [("newyork", "New York", "meetup", "papers-we-love", None)]
+    list(reader.read(ChapterPartition(known)))
+    assert len(calls) == 1
+
+
+def _worklist_with_404s(path: str) -> None:
+    """write_chapters_json(1000) plus one unknown-service chapter per
+    adapter, which the fixture transport answers with HTTP 404."""
+    import json as _json
+
+    from cuttlefish_spark.sources.fixtures import write_chapters_json
+
+    write_chapters_json(1000, path)
+    with open(path, encoding="utf-8") as fh:
+        doc = _json.load(fh)
+    doc["lost_meetup"] = {"title": "Lost", "dataService": {
+        "adapter": "meetup", "id": "no-such-group"}}
+    doc["lost_facebook"] = {"title": "Lost", "dataService": {
+        "adapter": "facebook", "id": "0000000000"}}
+    doc["lost_eventbrite"] = {"title": "Lost", "dataService": {
+        "adapter": "eventbrite", "id": "no-such-org", "organization": "0"}}
+    with open(path, "w", encoding="utf-8") as fh:
+        _json.dump(doc, fh)
+
+
+def _format_raw(spark, path: str, **options):
+    from cuttlefish_spark.sources.datasource import register
+
+    register(spark)
+    reader = (
+        spark.read.format("cuttlefish_replay")
+        .option("chapters_path", path)
+        .option("auto_batch_parallelism", spark.sparkContext.defaultParallelism)
+    )
+    for k, v in options.items():
+        reader = reader.option(k, v)
+    return reader.load()
+
+
+def test_reader_entry_points_same_rows(spark, tmp_path):
+    """The batch pipeline's direct reader driver (fetch_raw) and the
+    registered `cuttlefish_replay` format return the same raw rows in
+    the same partitioning, both auto-batched and at one chapter per
+    partition, 404 and unknown-adapter rows included."""
+    from cuttlefish_spark.operators.ingest import fetch_raw
+
+    path = str(tmp_path / "chapters.json")
+    _worklist_with_404s(path)
+    for cpp in (None, 1):
+        opts = {} if cpp is None else {"chapters_per_partition": cpp}
+        direct = fetch_raw(spark, chapters_path=path, chapters_per_partition=cpp)
+        via_format = _format_raw(spark, path, **opts)
+        assert direct.rdd.getNumPartitions() == via_format.rdd.getNumPartitions()
+        a = sorted(tuple(r) for r in direct.collect())
+        b = sorted(tuple(r) for r in via_format.collect())
+        assert a == b, f"entry points diverge (chapters_per_partition={cpp})"
+        errs = {r[0]: r[5] for r in a if r[4] == "ERROR"}
+        assert errs["lost_meetup"].endswith("404")
+        assert errs["lost_eventbrite"].endswith("404")
+        assert errs["c00003"] == "No adapter found: carrierpigeon"
+
+
+def test_run_pipeline_matches_format_composition(spark, tmp_path):
+    """run_pipeline's files, audit log and audit frame equal the
+    composition it replaces: format read -> canonical_from_raw ->
+    write_keyed_json -> audit_counts."""
+    import json as _json
+
+    from cuttlefish_spark.operators.ingest import canonical_from_raw
+    from cuttlefish_spark.run import run_pipeline
+    from cuttlefish_spark.sinks.json_sink import write_keyed_json
+
+    path = str(tmp_path / "chapters.json")
+    _worklist_with_404s(path)
+
+    out = canonical_from_raw(_format_raw(spark, path))
+    old_dir = tmp_path / "old"
+    write_keyed_json(out.filter("status = 'OK'").drop("status", "error"), str(old_dir))
+    old_audit = audit_counts(out).orderBy("chapter_id", "status").collect()
+    old_lines = [f"{r['log_line']} ({r['n_events']})" for r in old_audit]
+
+    new_dir, log_dir = tmp_path / "new", tmp_path / "logs"
+    audit = run_pipeline(spark, config={
+        "chapter-json-file": path, "json-out-path": str(new_dir),
+        "logfile-path": str(log_dir)})
+
+    old_files = sorted(p.name for p in old_dir.iterdir())
+    assert old_files == sorted(p.name for p in new_dir.iterdir())
+    assert len(old_files) == 750  # 3 of every 4 synth chapters fetch OK
+    for name in old_files:
+        assert (old_dir / name).read_bytes() == (new_dir / name).read_bytes()
+    assert (log_dir / "cuttlefish.log").read_text().splitlines() == old_lines
+    assert [tuple(r) for r in audit.collect()] == [tuple(r) for r in old_audit]
+    assert _json.loads((new_dir / "c00000.json").read_text()).keys() == {
+        "qxw9yzl3", "zvbxrpl2"}

@@ -104,3 +104,24 @@ def test_compact_parquet_reduces_file_count(spark, sf_dir, tmp_path):
     assert written == plan_target_files(parquet_bytes(src), 128)
     assert n_files == written < n_small
     assert spark.read.parquet(dst).count() == ev.count()
+
+
+def test_write_keyed_json_key_spread_over_partitions(spark, tmp_path):
+    """A key whose rows arrive in every one of 16 round-robin input
+    partitions is still written once, with all its events, and the
+    returned per-key row counts are right."""
+    rows = [("k0", f"e{i}", i) for i in range(64)] + [("k1", "only", 0)]
+    df = (
+        spark.createDataFrame(rows, "chapter_id string, event_id string, v long")
+        .coalesce(1)
+        .repartition(16)
+    )
+    spread = [p for p in df.rdd.glom().collect() if any(r.chapter_id == "k0" for r in p)]
+    assert len(spread) == 16
+
+    out = str(tmp_path / "spread")
+    counts = write_keyed_json(df, out)
+    assert counts == {"k0": 64, "k1": 1}
+    assert sorted(os.listdir(out)) == ["k0.json", "k1.json"]  # no tmp left
+    k0 = json.loads((tmp_path / "spread" / "k0.json").read_text())
+    assert k0 == {f"e{i}": {"event_id": f"e{i}", "v": i} for i in range(64)}
