@@ -1,9 +1,14 @@
-"""Ingestion queries: the reference's end-to-end pipeline (fixture
-replay) and the markdown pandas_udf.
+"""Ingestion queries: the reference's end-to-end pipeline and the
+markdown pandas_udf.
 
-The two pipeline queries are checked against a GOLDEN oracle: the
-fixture inputs are fixed, so the exact expected output is stated as a
-SQL VALUES block (the reference's own test strategy — golden capture,
+The three pipeline queries share one fetch body
+(`datasource._fetch_rows`) and one convert (`adapters.normalize_raw`);
+they differ only in where the fetch runs: on the driver
+(ingest_normalize), in batch reader tasks (ingest_datasource), or in
+microbatches of the streaming reader (streaming_datasource_ingest).
+All three are checked against one GOLDEN oracle: the fixture inputs
+are fixed, so the exact expected output is stated as a SQL VALUES
+block (the reference's own test strategy — golden capture,
 eventbrite.rkt:123-146). Any regression in an adapter's rename map,
 timestamp/offset math, markdown rendering, photo transform, or error
 routing changes a cell and fails the hash. markdown_html uses the same
@@ -18,11 +23,12 @@ from pyspark.sql import functions as F
 
 from cuttlefish_spark.io import load_table
 from cuttlefish_spark.registry import query
-from cuttlefish_spark.sources.adapters import dispatch_replay
+from cuttlefish_spark.sources.adapters import dispatch_replay, normalize_raw
 
 
-# Golden expected output of BOTH pipeline modes (replay and Python
-# DataSource) — generated from the verified run, asserted cell-exact.
+# Golden expected output of all three pipeline queries (driver-side
+# fetch, batch reader, streaming reader) — generated from the verified
+# run, asserted cell-exact.
 _INGEST_GOLDEN_SQL = """
     SELECT CAST(chapter_id AS VARCHAR) AS chapter_id,
            CAST(event_id AS VARCHAR) AS event_id,
@@ -53,10 +59,12 @@ _INGEST_GOLDEN_SQL = """
 
 @query("ingest_normalize", layer="A", oracle=_INGEST_GOLDEN_SQL)
 def ingest_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's whole pipeline as one declarative plan: chapters
-    work-list -> adapter dispatch -> fetch (fixture replay) ->
-    per-source normalization to the canonical event schema -> union +
-    Either status split (SURVEY.md §3.1 restatement).
+    """The reference's whole pipeline with the fetch on the driver:
+    chapters work-list -> adapter dispatch -> fetch (fixture transport)
+    -> per-source normalization to the canonical event schema -> union
+    + Either status split (SURVEY.md §3.1 restatement). The driver-side
+    twin of ingest_datasource: the same fetch body and convert, no
+    fetch tasks.
 
     Ignores sf_dir: inputs are the inline golden fixtures
     (sources.fixtures), mirroring eventbrite.rkt:123-146."""
@@ -93,10 +101,9 @@ def ingest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     (api-runner.rkt:118-168; SURVEY.md §4 custom-work item 1). The
     reader is driven directly (fetch_raw), not through the registered
     `cuttlefish_replay` format, which skips DataSource V2 planning.
-    Raw payloads are parsed with from_json per adapter and normalized
-    by the same declarative converters as replay mode — fetch and
-    convert stay split exactly like worker-* vs convert-json in the
-    reference."""
+    The raw rows then run the same convert as ingest_normalize
+    (canonical_from_raw) — fetch and convert stay split exactly like
+    worker-* vs convert-json in the reference."""
     return datasource_canonical(spark)
 
 
@@ -161,47 +168,12 @@ def datasource_canonical(
 
 
 def canonical_from_raw(raw: DataFrame) -> DataFrame:
-    """Raw fetch rows (RAW_FETCH_DDL: chapter_id/adapter/service_id/
-    payload/status/error) -> canonical frame: per-adapter from_json +
-    the declarative normalizers + Either error split — the CONVERT
-    half (worker-* vs convert-json in the reference), shared by
-    datasource_canonical (batch fetch) and streaming_datasource_ingest
-    (the drained stream of the same source's simpleStreamReader)."""
-    from cuttlefish_spark.sources import adapters as ad
-
-    schemas = {
-        "meetup": ad._MEETUP_RAW_SCHEMA,
-        "facebook": ad._FACEBOOK_RAW_SCHEMA,
-        "eventbrite": ad._EVENTBRITE_RAW_SCHEMA,
-    }
-    cols = [f.name for f in ad.CANONICAL_SCHEMA.fields] + ["status", "error"]
-    frames = []
-    for adapter, schema in schemas.items():
-        parsed = (
-            raw.filter((F.col("adapter") == adapter) & (F.col("status") == "OK"))
-            .select("chapter_id", F.from_json("payload", schema).alias("r"))
-            .select("chapter_id", "r.*")
-        )
-        frames.append(
-            ad.NORMALIZERS[adapter](parsed)
-            .withColumn("status", F.lit("OK"))
-            .withColumn("error", F.lit(None).cast("string"))
-            .select(cols)
-        )
-    err = raw.filter(F.col("status") == "ERROR").select(
-        "chapter_id",
-        *[
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in ad.CANONICAL_SCHEMA.fields
-            if f.name != "chapter_id"
-        ],
-        "status",
-        "error",
-    ).select(cols)
-    out = frames[0]
-    for fr in frames[1:] + [err]:
-        out = out.unionByName(fr)
-    return _flat_canonical(out)
+    """Raw fetch rows (RAW_FETCH_DDL) -> the flat golden-schema frame:
+    `adapters.normalize_raw` (the shared convert half) then
+    `_flat_canonical`. Used by datasource_canonical (batch fetch) and
+    streaming_ingest_canonical (the drained stream of the same
+    source's simpleStreamReader)."""
+    return _flat_canonical(normalize_raw(raw))
 
 
 @query("streaming_datasource_ingest", layer="A", oracle=_INGEST_GOLDEN_SQL)

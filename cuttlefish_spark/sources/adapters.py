@@ -1,5 +1,5 @@
 """Source adapters: per-service raw schemas, normalizers to the
-canonical event schema, and the adapter-dispatch pipeline.
+canonical event schema, and the convert step every fetch path shares.
 
 Reference parity map (all anchors in /root/reference/private):
 - adapter registry / dispatch      api-runner.rkt:19-22, 92-95, 129-147
@@ -12,11 +12,14 @@ Reference parity map (all anchors in /root/reference/private):
 - default-on-missing-path          hash.rkt:30-35 (nullable-everything)
 - Either error values              README.md:30-42, api-runner.rkt:133-147
 
-Fetch modes: `replay` reads the inline fixtures (the reference's own
-test strategy — golden capture, no network, eventbrite.rkt:123-146).
-A production `http` mode belongs in mapInPandas with a per-partition
-token-bucket throttle (meetup.rkt:9-26); it is deliberately not wired
-to the network in this container.
+Fetching lives in sources.datasource (`_fetch_rows`) over the
+transports of sources.fetch: `replay` answers from the inline fixtures
+(the reference's own test strategy — golden capture, no network,
+eventbrite.rkt:123-146), `live` performs the real GET
+(`fetch.http_transport`). Either way the fetch yields raw rows
+(RAW_FETCH_DDL), and `normalize_raw` converts them: per-adapter
+from_json, the normalizers below, and the Either split.
+`dispatch_replay` is the driver-side composition of the two.
 
 NOTE (design divergence, SURVEY.md §7): the reference keys Eventbrite
 events by computed timestamp, silently dropping simultaneous events
@@ -195,13 +198,6 @@ _EVENTBRITE_RAW_SCHEMA = T.StructType(
 )
 
 
-def _passthrough(raw: DataFrame) -> list[Column]:
-    """Keep row-level keys (chapter_id) through a normalizer when the
-    input carries them — the DataSource fetch path emits chapter_id per
-    row, while replay mode attaches it after normalization."""
-    return [F.col("chapter_id")] if "chapter_id" in raw.columns else []
-
-
 def _venue(name: Column, a1: Column, a2: Column, country: Column, city: Column,
            postal: Column, lon: Column, lat: Column) -> Column:
     return F.struct(
@@ -230,7 +226,7 @@ def normalize_meetup(raw: DataFrame) -> DataFrame:
         ),
     )
     return raw.select(
-        *_passthrough(raw),
+        F.col("chapter_id"),
         F.col("id").alias("event_id"),
         F.col("link").alias("url"),
         F.col("time").cast("long").alias("time"),
@@ -257,7 +253,7 @@ def normalize_facebook(raw: DataFrame) -> DataFrame:
     off_m = F.regexp_extract("start_time", r"[+-](\d{2})(\d{2})$", 2).cast("long")
     offset_ms = sign * (off_h * 3600 + off_m * 60) * 1000
     return raw.select(
-        *_passthrough(raw),
+        F.col("chapter_id"),
         F.col("id").alias("event_id"),
         F.concat(F.lit("https://facebook.com/"), F.col("id")).alias("url"),
         F.unix_millis(ts).alias("time"),
@@ -282,7 +278,7 @@ def normalize_eventbrite(raw: DataFrame) -> DataFrame:
     local_ts = F.to_timestamp(F.col("start.local"))
     utc_ts = F.to_utc_timestamp(local_ts, F.col("start.timezone"))
     return raw.select(
-        *_passthrough(raw),
+        F.col("chapter_id"),
         F.col("id").alias("event_id"),
         F.col("url"),
         F.unix_millis(utc_ts).alias("time"),
@@ -299,27 +295,6 @@ def normalize_eventbrite(raw: DataFrame) -> DataFrame:
     )
 
 
-def _replay_raw(spark: SparkSession, adapter: str, service_id: str,
-                organization: str | None) -> DataFrame | None:
-    """Fixture-replay fetch: return the raw per-service DataFrame, or
-    None when the fixture has no payload (stands in for an HTTP miss).
-
-    NOTE: no .coalesce(1) here — Coalesce over a parallelized local
-    relation costs a flat ~5s/job on local mode (scheduler locality
-    wait on the single merged task), measured 10x slower than leaving
-    the tiny frame on default parallelism."""
-    if adapter == "meetup":
-        rows = fixtures.MEETUP_RAW.get(service_id)
-        return None if rows is None else spark.createDataFrame(rows, _MEETUP_RAW_SCHEMA)
-    if adapter == "facebook":
-        env = fixtures.FACEBOOK_RAW.get(service_id)
-        return None if env is None else spark.createDataFrame(env["data"], _FACEBOOK_RAW_SCHEMA)
-    if adapter == "eventbrite":
-        env = fixtures.EVENTBRITE_RAW.get(organization or service_id)
-        return None if env is None else spark.createDataFrame(env["events"], _EVENTBRITE_RAW_SCHEMA)
-    return None
-
-
 NORMALIZERS = {
     "meetup": normalize_meetup,
     "facebook": normalize_facebook,
@@ -327,128 +302,62 @@ NORMALIZERS = {
 }
 
 
-def dispatch_replay(spark: SparkSession, chapters=None) -> DataFrame:
-    """The full Layer-A pipeline in replay mode: chapters work-list ->
-    per-adapter dispatch -> fetch(replay) -> normalize -> union, with
-    Either-style status/error columns.
-
-    The chapters list is *config*, not data (36 rows in the shipped
-    reference file, api-runner.rkt:171-178), so driver-side iteration
-    over it mirrors the reference's broadcast of config to workers
-    (api-runner.rkt:196-199) and is scale-safe: per-chapter DataFrames
-    are unioned into one distributed plan; only the work-list itself is
-    driver-resident.
-    """
-    chapters = chapters if chapters is not None else fixtures.CHAPTERS
-    frames: list[DataFrame] = []
-    err_rows: list[dict] = []
-    err_schema = T.StructType(
-        list(CANONICAL_SCHEMA.fields)
-        + [T.StructField("status", T.StringType()), T.StructField("error", T.StringType())]
-    )
-    for chapter_id, _title, adapter, service_id, organization in chapters:
-        normalizer = NORMALIZERS.get(adapter)
-        if normalizer is None:
-            # unknown adapter -> error value (api-runner.rkt:144-147)
-            err_rows.append(
-                {
-                    "chapter_id": chapter_id,
-                    "status": "ERROR",
-                    "error": f"No adapter found: {adapter}",
-                }
-            )
-            continue
-        raw = _replay_raw(spark, adapter, service_id, organization)
-        if raw is None:
-            # fetch failure -> error value (meetup.rkt:74-81)
-            err_rows.append(
-                {
-                    "chapter_id": chapter_id,
-                    "status": "ERROR",
-                    "error": f"fetch failed for {service_id}",
-                }
-            )
-            continue
-        frames.append(
-            normalizer(raw)
-            .withColumn("chapter_id", F.lit(chapter_id))
-            .withColumn("status", F.lit("OK"))
-            .withColumn("error", F.lit(None).cast("string"))
-            .select([f.name for f in err_schema.fields])
+def normalize_raw(raw: DataFrame) -> DataFrame:
+    """Raw fetch rows (RAW_FETCH_DDL: chapter_id/adapter/service_id/
+    payload/status/error) -> nested canonical frame plus Either
+    status/error columns: per-adapter from_json, the declarative
+    normalizers, and the ERROR rows passed through with null event
+    fields. The CONVERT half (worker-* vs convert-json in the
+    reference), shared by every fetch path; the plan is one union
+    branch per adapter plus one for errors, whatever the work-list
+    length."""
+    schemas = {
+        "meetup": _MEETUP_RAW_SCHEMA,
+        "facebook": _FACEBOOK_RAW_SCHEMA,
+        "eventbrite": _EVENTBRITE_RAW_SCHEMA,
+    }
+    cols = [f.name for f in CANONICAL_SCHEMA.fields] + ["status", "error"]
+    frames = []
+    for adapter, schema in schemas.items():
+        parsed = (
+            raw.filter((F.col("adapter") == adapter) & (F.col("status") == "OK"))
+            .select("chapter_id", F.from_json("payload", schema).alias("r"))
+            .select("chapter_id", "r.*")
         )
-    if err_rows:
-        # One frame for ALL error rows — a per-row createDataFrame
-        # would bloat the unioned plan with one scan per error.
-        frames.append(spark.createDataFrame(err_rows, err_schema))
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
-    return out
-
-
-def dispatch_replay_bulk(spark: SparkSession, chapters) -> DataFrame:
-    """SCALED replay: fetch + normalize ONCE per DISTINCT (adapter,
-    service, organization) proto, then fan the chapter ids out
-    declaratively through a broadcast join — the plan stays O(protos)
-    no matter how long the work-list grows. dispatch_replay's
-    frame-per-chapter union is the right shape for the reference's
-    36-row config; at a 10k-chapter work-list the PLANNER (10k union
-    branches) — not the data — becomes the bottleneck, and collapsing
-    identical fetches is exactly what a production replay/cache layer
-    does. Results are identical to dispatch_replay row-for-row."""
-    seen: set[str] = set()
-    protos: list[tuple] = []
-    assign_rows = []
-    for chapter_id, _title, adapter, service_id, organization in chapters:
-        pk = f"{adapter}|{service_id}|{organization}"
-        assign_rows.append((chapter_id, pk))
-        if pk not in seen:
-            seen.add(pk)
-            protos.append((pk, adapter, service_id, organization))
-    assign = spark.createDataFrame(
-        assign_rows, "chapter_id string, pk string"
-    )
-    proto_schema = T.StructType(
-        [T.StructField("pk", T.StringType())]
-        + [f for f in CANONICAL_SCHEMA.fields if f.name != "chapter_id"]
-        + [
-            T.StructField("status", T.StringType()),
-            T.StructField("error", T.StringType()),
-        ]
-    )
-    cols = [f.name for f in proto_schema.fields]
-    frames: list[DataFrame] = []
-    err_rows: list[dict] = []
-    for pk, adapter, service_id, organization in protos:
-        normalizer = NORMALIZERS.get(adapter)
-        if normalizer is None:
-            err_rows.append(
-                {"pk": pk, "status": "ERROR",
-                 "error": f"No adapter found: {adapter}"}
-            )
-            continue
-        raw = _replay_raw(spark, adapter, service_id, organization)
-        if raw is None:
-            err_rows.append(
-                {"pk": pk, "status": "ERROR",
-                 "error": f"fetch failed for {service_id}"}
-            )
-            continue
         frames.append(
-            normalizer(raw)
-            .withColumn("pk", F.lit(pk))
+            NORMALIZERS[adapter](parsed)
             .withColumn("status", F.lit("OK"))
             .withColumn("error", F.lit(None).cast("string"))
             .select(cols)
         )
-    if err_rows:
-        frames.append(spark.createDataFrame(err_rows, proto_schema).select(cols))
-    if not frames:
-        # Empty work-list: an empty canonical frame, not an IndexError
-        # (a dynamically derived chapters.json can legitimately filter
-        # down to zero items).
-        frames.append(spark.createDataFrame([], proto_schema).select(cols))
-    proto_df = frames[0]
-    for f in frames[1:]:
-        proto_df = proto_df.unionByName(f)
-    return assign.join(F.broadcast(proto_df), "pk").drop("pk")
+    err = raw.filter(F.col("status") == "ERROR").select(
+        "chapter_id",
+        *[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in CANONICAL_SCHEMA.fields
+            if f.name != "chapter_id"
+        ],
+        "status",
+        "error",
+    ).select(cols)
+    out = frames[0]
+    for fr in frames[1:] + [err]:
+        out = out.unionByName(fr)
+    return out
+
+
+def dispatch_replay(spark: SparkSession, chapters=None) -> DataFrame:
+    """The full Layer-A pipeline with the fetch on the driver: chapters
+    work-list -> per-adapter dispatch -> fetch (fixture transport) ->
+    normalize -> union, with Either-style status/error columns.
+
+    The fetch body is the DataSource reader's (`_fetch_rows`: throttle
+    -> GET -> Either rows), run in-process instead of in fetch tasks;
+    `normalize_raw` then converts the rows exactly as it does for the
+    reader. `chapters` defaults to the golden fixture work-list."""
+    from cuttlefish_spark.sources.datasource import RAW_FETCH_DDL, _fetch_rows
+
+    if chapters is None:
+        chapters = fixtures.CHAPTERS
+    rows = list(_fetch_rows(chapters, {}))
+    return normalize_raw(spark.createDataFrame(rows, RAW_FETCH_DDL))

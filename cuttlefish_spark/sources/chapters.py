@@ -1,80 +1,58 @@
-"""Chapters work-list ingestion: the reference's JSON config-table scan
-and map->rows explode, as Spark operators.
+"""Chapters work-list ingestion: the reference's JSON config-table read
+and map->rows explode, plus the YAML converter.
 
 Parity anchors (/root/reference/private):
-- A2 JSON table scan, crash-out on missing path  api-runner.rkt:171-178
+- A2 JSON table read, crash-out on missing path  api-runner.rkt:171-178
 - A3 id-keyed hash -> list of (id, payload) rows api-runner.rkt:152-155
 - chapters file shape (36 rows, id -> {title, dataService:{adapter,
   id[, organization]}})                          data/chapters.json:1-255,
                                                  data/data_formats.md:1-13
+- lenient nested access                          hash.rkt:30-35
 
-The chapters file is a JSON *map* keyed by dynamic chapter ids, so a
-plain spark.read.json would infer one COLUMN per chapter. The faithful
-relational form reads the document whole and explodes
-map_entries(from_json(..., MapType)) into rows — dynamic keys become a
-key column, which is the A3 hash->list semantics exactly.
+The chapters file is *config*, not data (36 rows in the shipped
+reference file), and is keyed by dynamic chapter ids. `load_chapters`
+reads it on the driver into the work-list tuples
+(chapter_id, title, adapter, service_id, organization) that every
+fetch path takes: the batch reader's partitions, the streaming
+reader's offset space, and the driver-side `dispatch_replay`. Driver
+residency mirrors the reference broadcasting config to its workers
+(api-runner.rkt:196-199).
 """
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-CHAPTER_PAYLOAD_SCHEMA = T.StructType(
-    [
-        T.StructField("title", T.StringType()),
-        T.StructField(
-            "dataService",
-            T.StructType(
-                [
-                    T.StructField("adapter", T.StringType()),
-                    T.StructField("id", T.StringType()),
-                    T.StructField("organization", T.StringType()),
-                ]
-            ),
-        ),
-    ]
-)
 
+def load_chapters(path: str | None = None) -> list[tuple]:
+    """The chapter work-list of the chapters.json file at `path`; with
+    no path, the golden fixture chapters.
 
-def read_chapters_json(spark: SparkSession, path: str) -> DataFrame:
-    """Read a chapters config file into the canonical work-list frame
-    [chapter_id, title, adapter, service_id, organization].
+    A missing file raises FileNotFoundError and a top level that is not
+    a JSON object raises ValueError — the reference aborts the run on
+    an unreadable chapters table (api-runner.rkt:174-178). A chapter
+    whose payload or `dataService` is not an object reads as null
+    fields (hash.rkt:30-35), so it becomes one `No adapter found: None`
+    ERROR row instead of failing the run."""
+    if not path:
+        from cuttlefish_spark.sources import fixtures
 
-    Missing path raises (AnalysisException) — the reference crashes out
-    likewise (api-runner.rkt:174-178). Unknown/missing nested fields
-    degrade to null, matching the reference's lenient path access
-    (hash.rkt:30-35)."""
-    doc = spark.read.text(path, wholetext=True)
-    entries = doc.select(
-        F.explode(
-            F.map_entries(
-                F.from_json(
-                    F.col("value"), T.MapType(T.StringType(), CHAPTER_PAYLOAD_SCHEMA)
-                )
-            )
-        ).alias("e")
-    )
-    return entries.select(
-        F.col("e.key").alias("chapter_id"),
-        F.col("e.value.title").alias("title"),
-        F.col("e.value.dataService.adapter").alias("adapter"),
-        F.col("e.value.dataService.id").alias("service_id"),
-        F.col("e.value.dataService.organization").alias("organization"),
-    )
-
-
-def worklist(chapters: DataFrame) -> list[tuple]:
-    """Collect the chapters frame to the driver-side work list consumed
-    by dispatch_replay. The chapters table is *config*, not data (36
-    rows in the shipped reference file) — driver-residency mirrors the
-    reference broadcasting config to its workers (api-runner.rkt:196-199)
-    and is the one sanctioned collect in the engine."""
-    return [
-        (r.chapter_id, r.title, r.adapter, r.service_id, r.organization)
-        for r in chapters.collect()
-    ]
+        return list(fixtures.CHAPTERS)
+    with open(path, encoding="utf-8") as fh:
+        doc = json.load(fh)
+    if not isinstance(doc, dict):
+        raise ValueError(f"chapters file {path} must hold a JSON object")
+    items = []
+    for cid, payload in doc.items():
+        payload = payload if isinstance(payload, dict) else {}
+        svc = payload.get("dataService")
+        svc = svc if isinstance(svc, dict) else {}
+        items.append((cid, payload.get("title"), svc.get("adapter"),
+                      svc.get("id"), svc.get("organization")))
+    return items
 
 
 def convert_chapters_yaml(spark: SparkSession, yaml_path: str,
@@ -83,7 +61,7 @@ def convert_chapters_yaml(spark: SparkSession, yaml_path: str,
     default adapter where absent (A26 parity,
     utils/convert-chapters-yaml.rkt:29-38). Driver-side yaml parse of a
     config-sized file, then createDataFrame — same driver-residency
-    rationale as worklist()."""
+    rationale as load_chapters."""
     import yaml  # baked into this container; config-sized input only
 
     with open(yaml_path) as fh:

@@ -17,8 +17,6 @@ import json
 import os
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
-
 
 def default_config(cwd: str | None = None) -> dict:
     """main.rkt:48-51."""
@@ -52,13 +50,3 @@ def load_config(
     if not isinstance(overrides, dict):
         raise ValueError(f"config file {path} must hold a JSON object")
     return {**defaults, **overrides}
-
-
-def chapters_from_config(spark: SparkSession, config: dict) -> DataFrame:
-    """The A1->A2 handoff: the resolved config's chapter-json-file
-    feeds the chapters work-list scan (run-workers receives the config
-    hash at main.rkt:62; api-runner reads the chapters table from it
-    at api-runner.rkt:171-178)."""
-    from cuttlefish_spark.sources.chapters import read_chapters_json
-
-    return read_chapters_json(spark, config["chapter-json-file"])

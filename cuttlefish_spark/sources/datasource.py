@@ -25,10 +25,10 @@ test strategy, eventbrite.rkt:123-146); `transport=live` performs the
 real urllib GET against the worker APIs (meetup.rkt:83-84,
 facebook.rkt:82-83, eventbrite.rkt:114).
 
-Two entry points drive the same `ChapterReplayReader`:
+Three callers share the fetch body `_fetch_rows`:
 - the batch pipeline (`operators.ingest.fetch_raw`, behind
-  `datasource_canonical` and `run.run_pipeline`) calls `partitions()`
-  on the driver and runs `read` over
+  `datasource_canonical` and `run.run_pipeline`) calls the reader's
+  `partitions()` on the driver and runs `read` over
   `sparkContext.parallelize(parts, len(parts)).flatMap(...)`. It never
   enters DataSource V2 planning, which cost a measured 6.5 s before
   the first fetch task on every CLI run (4 cores): 2.2 s of Spark's
@@ -36,9 +36,12 @@ Two entry points drive the same `ChapterReplayReader`:
   `register()` triggers in a fresh Python process walking `sys.path`,
   plus 4.3 s of create/plan round-trips to Python;
 - the registered `cuttlefish_replay` format, for `spark.read` and
-  `readStream` callers (`streaming_datasource_ingest`).
-Partitioning, options, the one-bucket-per-task rule and the Either
-rows are therefore identical on both.
+  `readStream` callers (`streaming_datasource_ingest`);
+- the driver-side `adapters.dispatch_replay` (`ingest_normalize`),
+  which runs the fetch in-process, without fetch tasks.
+The two reader entry points have identical partitioning, options and
+one-bucket-per-task rule; all three yield the same Either rows, which
+`adapters.normalize_raw` converts.
 """
 
 from __future__ import annotations
@@ -54,6 +57,8 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import StructType
 
+from cuttlefish_spark.sources.chapters import load_chapters
+
 RAW_FETCH_DDL = (
     "chapter_id string, adapter string, service_id string, "
     "payload string, status string, error string"
@@ -65,36 +70,12 @@ class ChapterPartition(InputPartition):
         self.chapters = chapters
 
 
-def _load_items(options: dict) -> list[tuple]:
-    """The chapter work-list (the reference's config-driven table,
-    api-runner.rkt:171-178): `chapters_path` points at a chapters.json
-    file; without it the golden fixture chapters drive the replay.
-    Shared by the batch reader's partitions() and the streaming
-    reader's offset space."""
-    path = options.get("chapters_path")
-    if path:
-        with open(path, encoding="utf-8") as fh:
-            doc = json.load(fh)
-        return [
-            (
-                cid,
-                payload.get("title"),
-                (payload.get("dataService") or {}).get("adapter"),
-                (payload.get("dataService") or {}).get("id"),
-                (payload.get("dataService") or {}).get("organization"),
-            )
-            for cid, payload in doc.items()
-        ]
-    from cuttlefish_spark.sources import fixtures
-
-    return list(fixtures.CHAPTERS)
-
-
 def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[tuple]:
     """The shared fetch body (throttle -> GET -> Either rows), one
     TokenBucket per caller (a task for the batch reader, a microbatch
-    slice for the streaming reader) — the reference's adaptive
-    throttle placed per worker (meetup.rkt:9-26)."""
+    slice for the streaming reader, the whole work-list for
+    dispatch_replay) — the reference's adaptive throttle placed per
+    worker (meetup.rkt:9-26)."""
     from cuttlefish_spark.sources.fetch import (
         FixtureTransport,
         fetch_events,
@@ -161,7 +142,7 @@ class ChapterReplayReader(DataSourceReader):
         # `chapters_path` points at a chapters.json work-list (the
         # reference's config-driven table, api-runner.rkt:171-178);
         # without it the golden fixture chapters drive the replay.
-        items = _load_items(self.options)
+        items = load_chapters(self.options.get("chapters_path"))
         explicit = self.options.get("chapters_per_partition")
         if explicit is not None:
             per = max(1, int(explicit))
@@ -205,7 +186,7 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
 
     def __init__(self, options: dict):
         self.options = options
-        self._items = _load_items(options)
+        self._items = load_chapters(options.get("chapters_path"))
         self._per = max(1, int(options.get("chapters_per_batch", 2)))
 
     def initialOffset(self) -> dict:

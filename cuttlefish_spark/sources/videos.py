@@ -5,10 +5,9 @@ The reference documents a canonical videos store
 (/root/reference/private/data/data_formats.md:46-74 — id-keyed map of
 {embedUrl, published, title, description, thumbnails{default, medium,
 high}{url, width, height}}) but ships no reader for it; the engine
-closes that gap with the same declarative map->rows explode the
-chapters config uses (sources/chapters.read_chapters_json): one
-wholetext read, from_json with an explicit payload schema, map_entries
-explode, nested-struct flatten. Missing thumbnails degrade to null
+closes that gap with a declarative map->rows explode: one wholetext
+read, from_json with an explicit payload schema, map_entries explode,
+nested-struct flatten. Missing thumbnails degrade to null
 columns (hash.rkt:30-35 lenient-access semantics); `published` is an
 ISO-8601 UTC instant and is emitted as epoch milliseconds
 (unix_millis), which is session-timezone-independent in both engines.
@@ -115,8 +114,8 @@ VIDEOS_RAW = {
 
 def read_videos_json(spark: SparkSession, path: str) -> DataFrame:
     """Read a videos.json file (id-keyed map) into the canonical flat
-    videos frame. Same mechanism as read_chapters_json: wholetext ->
-    from_json(map<string, payload>) -> map_entries explode -> project.
+    videos frame: wholetext -> from_json(map<string, payload>) ->
+    map_entries explode -> project.
     """
     doc = spark.read.text(path, wholetext=True)
     entries = doc.select(

@@ -388,11 +388,11 @@ FIXTURE_MD_REPS = 1_000
 
 def _scaled_ingest_normalize(spark):
     from cuttlefish_spark.operators.ingest import _flat_canonical
-    from cuttlefish_spark.sources.adapters import dispatch_replay_bulk
+    from cuttlefish_spark.sources.adapters import dispatch_replay
     from cuttlefish_spark.sources.fixtures import synth_chapters
 
     return _flat_canonical(
-        dispatch_replay_bulk(spark, synth_chapters(FIXTURE_N_CHAPTERS))
+        dispatch_replay(spark, synth_chapters(FIXTURE_N_CHAPTERS))
     )
 
 
@@ -481,7 +481,7 @@ SCALED_FIXTURE = {
     "ingest_normalize": (
         _scaled_ingest_normalize,
         _scaled_ingest_oracle,
-        f"fixture-{FIXTURE_N_CHAPTERS}-chapters (bulk-replay twin)",
+        f"fixture-{FIXTURE_N_CHAPTERS}-chapters (driver-side fetch)",
     ),
     "ingest_datasource": (
         _scaled_ingest_datasource,

@@ -92,16 +92,36 @@ def test_audit_counts(spark):
     assert audit[("atlantis", "ERROR")][1] == "ERROR: atlantis"
 
 
-def test_datasource_matches_replay(spark, sf_dir):
-    """The Spark-4 Python DataSource fetch path (one input partition
-    per chapter, scheduler-owned fan-out) must produce byte-identical
-    canonical rows to the driver-side replay path."""
-    from cuttlefish_spark.operators.ingest import ingest_datasource, ingest_normalize
+def test_datasource_matches_replay(spark, sf_dir, tmp_path):
+    """The Spark-4 Python DataSource fetch path (scheduler-owned
+    fan-out) must produce byte-identical canonical rows to the
+    driver-side fetch, on the fixture work-list and on a 1,003-chapter
+    one with 404 chapters."""
+    from cuttlefish_spark.operators.ingest import (
+        _flat_canonical,
+        datasource_canonical,
+        ingest_datasource,
+        ingest_normalize,
+    )
+    from cuttlefish_spark.sources.chapters import load_chapters
 
     a = sorted(tuple(r) for r in ingest_datasource(spark, sf_dir).collect())
     b = sorted(tuple(r) for r in ingest_normalize(spark, sf_dir).collect())
     assert a == b
     assert len(a) == 8
+
+    path = str(tmp_path / "chapters.json")
+    _worklist_with_404s(path)
+    a = sorted(tuple(r) for r in datasource_canonical(spark, chapters_path=path).collect())
+    b = sorted(
+        tuple(r)
+        for r in _flat_canonical(dispatch_replay(spark, load_chapters(path))).collect()
+    )
+    assert a == b
+    # 250 cycles of the 4 protos (2 + 2 + 3 events + 1 error) + 3 lost
+    assert len(a) == 2003
+    lost = [r for r in a if r[0].startswith("lost_")]
+    assert len(lost) == 3 and all(r[-1].endswith(": 404") for r in lost)
 
 
 def test_datasource_partitions_per_chapter(spark):
@@ -115,16 +135,15 @@ def test_datasource_partitions_per_chapter(spark):
     assert raw.rdd.getNumPartitions() == 4
 
 
-def test_read_chapters_json(spark, tmp_path):
-    """A2/A3 parity: map-shaped chapters JSON -> one row per chapter
-    with dynamic keys as a column; missing nested fields -> null;
+def test_read_chapters_json(tmp_path):
+    """A2/A3 parity: map-shaped chapters JSON -> one work item per
+    chapter with dynamic keys as the id; missing nested fields -> null;
     missing file -> error."""
     import json
 
     import pytest
-    from pyspark.errors.exceptions.captured import AnalysisException
 
-    from cuttlefish_spark.sources.chapters import read_chapters_json, worklist
+    from cuttlefish_spark.sources.chapters import load_chapters
 
     doc = {
         "newyork": {"title": "New York",
@@ -137,17 +156,16 @@ def test_read_chapters_json(spark, tmp_path):
     p = tmp_path / "chapters.json"
     p.write_text(json.dumps(doc))
 
-    rows = {r.chapter_id: r for r in read_chapters_json(spark, str(p)).collect()}
+    wl = load_chapters(str(p))
+    rows = {r[0]: r for r in wl}
     assert set(rows) == {"newyork", "london", "ghost"}
-    assert rows["newyork"].adapter == "meetup" and rows["newyork"].organization is None
-    assert rows["london"].organization == "2417467656"
-    assert rows["ghost"].adapter is None  # lenient path access
-
-    wl = worklist(read_chapters_json(spark, str(p)))
+    assert rows["newyork"][2] == "meetup" and rows["newyork"][4] is None
+    assert rows["london"][4] == "2417467656"
+    assert rows["ghost"][2] is None  # lenient path access
     assert ("london", "London", "eventbrite", "pwl-london", "2417467656") in wl
 
-    with pytest.raises(AnalysisException):
-        read_chapters_json(spark, str(tmp_path / "missing.json")).collect()
+    with pytest.raises(FileNotFoundError):
+        load_chapters(str(tmp_path / "missing.json"))
 
 
 def test_chapters_drive_dispatch(spark, tmp_path):
@@ -155,13 +173,13 @@ def test_chapters_drive_dispatch(spark, tmp_path):
     dispatch_replay exactly like the inline fixture work-list."""
     import json
 
-    from cuttlefish_spark.sources.chapters import read_chapters_json, worklist
+    from cuttlefish_spark.sources.chapters import load_chapters
 
     doc = {"newyork": {"title": "New York",
                        "dataService": {"adapter": "meetup", "id": "papers-we-love"}}}
     p = tmp_path / "chapters.json"
     p.write_text(json.dumps(doc))
-    out = dispatch_replay(spark, worklist(read_chapters_json(spark, str(p))))
+    out = dispatch_replay(spark, load_chapters(str(p)))
     assert out.filter("status = 'OK'").count() == 2  # the two meetup fixture events
 
 
@@ -301,10 +319,10 @@ def test_runtime_config_defaults_and_override(spark, tmp_path):
     assert cfg["json-out-path"] == str(tmp_path / "out")
     assert cfg["logfile-path"] == str(tmp_path / "logs")  # default kept
 
-    from cuttlefish_spark.sources.config import chapters_from_config
+    from cuttlefish_spark.sources.chapters import load_chapters
 
-    rows = chapters_from_config(spark, cfg).collect()
-    assert [(r["chapter_id"], r["adapter"], r["service_id"]) for r in rows] == [
+    rows = load_chapters(cfg["chapter-json-file"])
+    assert [(r[0], r[2], r[3]) for r in rows] == [
         ("boston", "meetup", "papers-we-love")
     ]
 
@@ -332,6 +350,8 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
                                    "organization": "2417467656"}},
         "atlantis": {"title": "Atlantis",
                      "dataService": {"adapter": "carrierpigeon", "id": "deep-six"}},
+        "ghost": None,
+        "odd": {"dataService": "x"},
     }))
     (tmp_path / ".cuttlefishrc").write_text(_json.dumps({
         "chapter-json-file": str(chapters),
@@ -343,6 +363,9 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
     assert rows[("newyork", "OK")] == 2
     assert rows[("london", "OK")] == 3
     assert rows[("atlantis", "ERROR")] == 1
+    # malformed chapters read as null fields: one ERROR row each
+    assert rows[("ghost", "ERROR")] == 1
+    assert rows[("odd", "ERROR")] == 1
 
     out_files = sorted(p.name for p in (tmp_path / "out").iterdir())
     assert out_files == ["london.json", "newyork.json"]
@@ -351,6 +374,7 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
 
     log = (tmp_path / "logs" / "cuttlefish.log").read_text()
     assert "ERROR: atlantis" in log and "WROTE: newyork" in log
+    assert "ERROR: ghost (1)" in log and "ERROR: odd (1)" in log
 
 
 def test_log_rotation_daily(tmp_path):
@@ -391,32 +415,10 @@ def test_run_pipeline_missing_chapters_raises(spark, tmp_path):
     audit = run_pipeline(spark, config=config, allow_fixture_chapters=True)
     assert audit.count() > 0
 
-
-def test_dispatch_replay_bulk_equivalence(spark):
-    """dispatch_replay_bulk must produce row-identical output to the
-    per-chapter dispatch_replay on the same work-list (the bulk form is
-    the O(protos)-plan twin the 10k-chapter gate runs), and must fan a
-    synthesized work-list out by pure formula."""
-    from cuttlefish_spark.operators.ingest import _flat_canonical
-    from cuttlefish_spark.sources.adapters import (
-        dispatch_replay,
-        dispatch_replay_bulk,
-    )
-    from cuttlefish_spark.sources.fixtures import CHAPTERS, synth_chapters
-
-    unit = _flat_canonical(dispatch_replay(spark)).toPandas()
-    bulk = _flat_canonical(dispatch_replay_bulk(spark, CHAPTERS)).toPandas()
-    key = sorted(unit.columns)
-    u = unit[key].sort_values(key).reset_index(drop=True).astype(str)
-    b = bulk[key].sort_values(key).reset_index(drop=True).astype(str)
-    assert u.equals(b), "bulk replay diverges from per-chapter replay"
-
-    n = 40  # 10 cycles of the 4 protos
-    fan = _flat_canonical(dispatch_replay_bulk(spark, synth_chapters(n))).toPandas()
-    # golden: 2 meetup + 2 facebook + 3 eventbrite + 1 error per cycle
-    assert len(fan) == (n // 4) * 8
-    assert fan["chapter_id"].nunique() == n
-    assert (fan[fan["status"] == "ERROR"]["error"] == "No adapter found: carrierpigeon").all()
+    listed = tmp_path / "list.json"
+    listed.write_text('[{"newyork": {}}]')
+    with _pytest.raises(ValueError, match="list.json"):
+        run_pipeline(spark, config={**config, "chapter-json-file": str(listed)})
 
 
 def test_datasource_chapter_batching_invariance(spark):
