@@ -235,9 +235,9 @@ def main() -> None:
         # reference-parity scheduler-owned fan-out cost (1 task per
         # chapter); the replay default now auto-batches (r9 item 5),
         # which would silently change what this metric measures.
-        # datasource_canonical drives the DataSource reader directly
-        # (no DataSource V2 planning), so the figure holds per-task
-        # fetch cost only, not the format's ~6.5 s of lookup and
+        # datasource_canonical runs one Spark task per chunk, with no
+        # DataSource V2 planning, so the figure holds per-task fetch
+        # cost only, not a Python DataSource's ~6.5 s of lookup and
         # planner round-trips.
         datasource_canonical(
             spark,

@@ -4,7 +4,7 @@ markdown pandas_udf.
 The three pipeline queries share one fetch body
 (`datasource._fetch_rows`) and one convert (`adapters.normalize_raw`);
 they differ only in where the fetch runs: on the driver
-(ingest_normalize), in batch reader tasks (ingest_datasource), or in
+(ingest_normalize), in batch fetch tasks (ingest_datasource), or in
 microbatches of the streaming reader (streaming_datasource_ingest).
 All three are checked against one GOLDEN oracle: the fixture inputs
 are fixed, so the exact expected output is stated as a SQL VALUES
@@ -27,8 +27,8 @@ from cuttlefish_spark.sources.adapters import dispatch_replay, normalize_raw
 
 
 # Golden expected output of all three pipeline queries (driver-side
-# fetch, batch reader, streaming reader) — generated from the verified
-# run, asserted cell-exact.
+# fetch, batch fetch tasks, streaming reader) — generated from the
+# verified run, asserted cell-exact.
 _INGEST_GOLDEN_SQL = """
     SELECT CAST(chapter_id AS VARCHAR) AS chapter_id,
            CAST(event_id AS VARCHAR) AS event_id,
@@ -94,17 +94,42 @@ def _flat_canonical(out: DataFrame) -> DataFrame:
 
 @query("ingest_datasource", layer="A", oracle=_INGEST_GOLDEN_SQL)
 def ingest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same pipeline as ingest_normalize, but the fetch step runs the
-    Spark 4 Python DataSource reader (`ChapterReplayReader`) on
-    executors: one task per reader partition, so Spark's scheduler
-    owns the fan-out the reference hand-built as a 3-thread pool
-    (api-runner.rkt:118-168; SURVEY.md §4 custom-work item 1). The
-    reader is driven directly (fetch_raw), not through the registered
-    `cuttlefish_replay` format, which skips DataSource V2 planning.
+    """Same pipeline as ingest_normalize, but the fetch runs in Spark
+    tasks on executors, one per work-list chunk (fetch_raw), so Spark's
+    scheduler owns the fan-out the reference hand-built as a 3-thread
+    pool (api-runner.rkt:118-168; SURVEY.md §4 custom-work item 1).
     The raw rows then run the same convert as ingest_normalize
     (canonical_from_raw) — fetch and convert stay split exactly like
     worker-* vs convert-json in the reference."""
     return datasource_canonical(spark)
+
+
+def chapter_chunks(
+    items: list[tuple],
+    transport: str,
+    parallelism: int,
+    chapters_per_partition: int | None = None,
+) -> list[list[tuple]]:
+    """Split the work-list into fetch-task chunks — the reference's
+    chunk-list (chunk-list.rkt:6-18), balanced by count; Spark's task
+    scheduling then absorbs per-key latency skew. A fetch task costs
+    ~0.5 core-seconds of Python setup (PLANS.md Notes), so the chunk
+    size depends on the transport:
+      - an explicit `chapters_per_partition` always wins;
+      - live HTTP: 1 chapter per task, so a slow or failing endpoint
+        never stalls a batch of unrelated chapters and the scheduler
+        owns retry at item granularity;
+      - replay: max(1, n // (3 * parallelism)) — three waves per core
+        keep scheduler-level balancing without per-item setup (a
+        10k-chapter replay at 1 per task took 177.8 s at the sf1 gate,
+        ~14 s batched)."""
+    if chapters_per_partition is not None:
+        per = max(1, int(chapters_per_partition))
+    elif transport == "live":
+        per = 1
+    else:
+        per = max(1, len(items) // (3 * parallelism))
+    return [items[i : i + per] for i in range(0, len(items), per)]
 
 
 def fetch_raw(
@@ -114,30 +139,26 @@ def fetch_raw(
     chapters_per_partition: int | None = None,
 ) -> DataFrame:
     """The raw fetch frame (RAW_FETCH_DDL), eagerly checkpointed: the
-    driver asks `ChapterReplayReader` for its partitions and Spark runs
-    the reader's `read` once per partition. The rows, partitioning and
-    options are those of `spark.read.format("cuttlefish_replay")`; only
-    the DataSource V2 planning is skipped. The checkpoint makes the
-    fetch happen once, however many branches read the frame (the
-    reference likewise fetches once per chapter, api-runner.rkt:
-    129-143)."""
-    from cuttlefish_spark.sources.datasource import (
-        RAW_FETCH_DDL,
-        ChapterReplayReader,
-    )
+    work-list at `chapters_path` (the golden fixture chapters without
+    one) is split by `chapter_chunks`, and each chunk is one Spark task
+    running `_fetch_rows` with its own TokenBucket. No DataSource V2
+    planning is involved; going through a Python DataSource cost 2.2 s
+    of Spark's static Python-DataSource lookup plus 4.3 s of
+    create/plan round-trips before the first fetch task, measured on 4
+    cores. The checkpoint makes the fetch happen once, however many
+    branches read the frame (the reference likewise fetches once per
+    chapter, api-runner.rkt:129-143)."""
+    from cuttlefish_spark.sources.chapters import load_chapters
+    from cuttlefish_spark.sources.datasource import RAW_FETCH_DDL, _fetch_rows
 
     sc = spark.sparkContext
-    # partitions() has no SparkSession; hand it the parallelism the
-    # replay auto-batch default divides by.
-    options = {"transport": transport,
-               "auto_batch_parallelism": sc.defaultParallelism}
-    if chapters_per_partition is not None:
-        options["chapters_per_partition"] = chapters_per_partition
-    if chapters_path:
-        options["chapters_path"] = chapters_path
-    reader = ChapterReplayReader(options)
-    parts = reader.partitions()
-    rows = sc.parallelize(parts, max(1, len(parts))).flatMap(reader.read)
+    chunks = chapter_chunks(
+        load_chapters(chapters_path), transport, sc.defaultParallelism,
+        chapters_per_partition,
+    )
+    rows = sc.parallelize(chunks, max(1, len(chunks))).flatMap(
+        lambda chunk: _fetch_rows(chunk, {"transport": transport})
+    )
     return spark.createDataFrame(rows, RAW_FETCH_DDL).localCheckpoint(eager=True)
 
 
@@ -147,21 +168,12 @@ def datasource_canonical(
     transport: str = "replay",
     chapters_per_partition: int | None = None,
 ) -> DataFrame:
-    """Reader fetch (fetch_raw) -> canonical frame, parameterized by
+    """Batch fetch (fetch_raw) -> canonical frame, parameterized by
     work-list, transport, and task batching — the reusable body behind
     ingest_datasource and the end-to-end runner (run.run_pipeline).
     `chapters_per_partition` trades scheduler granularity for per-task
-    overhead; None picks the transport-dependent default (live: one
-    chapter per task so the scheduler owns retry granularity; replay:
-    auto-sized to ~n/(3*parallelism) so a bulk re-run never pays
-    per-item Python task setup — see ChapterReplayReader.partitions).
-
-    The batch path drives the reader directly instead of reading the
-    registered `cuttlefish_replay` format (which stays for `spark.read`
-    and streaming callers): going through the format cost 2.2 s of
-    Spark's static Python-DataSource lookup plus 4.3 s of create/plan
-    round-trips to Python before the first fetch task, measured on 4
-    cores and paid on every CLI run."""
+    overhead; None picks the transport-dependent default of
+    `chapter_chunks`."""
     return canonical_from_raw(
         fetch_raw(spark, chapters_path, transport, chapters_per_partition)
     )
@@ -187,7 +199,7 @@ def streaming_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the deterministic fixture transport). The drained raw rows
     then run the IDENTICAL convert half (canonical_from_raw) as
     ingest_datasource — same golden oracle, so the driver hash holds
-    the streaming source to its batch twin.
+    the streaming source to the batch fetch.
 
     Engine contract, measured: availableNow on a simple stream reader
     drains exactly ONE read() slice, so the drain uses the default
@@ -197,8 +209,8 @@ def streaming_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture chapters at 1/batch = 4 non-empty microbatches). Scale
     posture: the simple API prefetches each slice DRIVER-side, bounded
     by chapters_per_batch — the rate-limit contract of a polling
-    ingest; bulk backfills use the batch reader's executor-side
-    partitions (ingest_datasource)."""
+    ingest; bulk backfills use the batch fetch's executor-side tasks
+    (ingest_datasource)."""
     return streaming_ingest_canonical(spark)
 
 

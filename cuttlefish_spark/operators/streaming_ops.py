@@ -73,9 +73,8 @@ def streaming_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     The memory sink (and the collect off it) is the harness contract
     only — a memory sink is driver-resident by definition and the
     drained aggregate is bounded (hours x event types). Production
-    points the same writeStream at a file/table sink
-    (sinks.json_sink.stream_to_keyed_json is the engine's keyed
-    variant) and never drives results through the driver."""
+    points the same writeStream at a file/table sink and never drives
+    results through the driver."""
     from cuttlefish_spark.streaming.pipeline import (
         read_events_stream,
         run_available_now,

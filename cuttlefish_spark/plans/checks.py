@@ -18,11 +18,6 @@ def formatted_plan(df: DataFrame) -> str:
     )
 
 
-def executed_plan(df: DataFrame) -> str:
-    """Final (AQE-resolved where applicable) physical plan string."""
-    return formatted_plan(df)
-
-
 def has_pushed_filter(df: DataFrame, fragment: str) -> bool:
     """True if the parquet scan advertises a pushed filter mentioning
     `fragment` (column name)."""

@@ -3,9 +3,8 @@
 api-runner.rkt:118-168).
 
 Flow: resolve runtime config (A1) -> chapters work-list drives the
-fetch: the driver takes the DataSource reader's partitions and Spark
-runs one fetch task per partition, without DataSource V2 planning
-(A2-A9) -> adapter normalization to the canonical event schema
+fetch: the driver splits it into chunks and Spark runs one fetch task
+per chunk (A2-A9) -> adapter normalization to the canonical event schema
 (A10-A18) -> per-chapter `{chapter}.json` files under the config's
 json-out-path (A21, api-runner.rkt:39-52) -> WROTE:/ERROR: audit
 lines appended under logfile-path (A23, api-runner.rkt:80-89). The
@@ -35,16 +34,13 @@ def run_pipeline(
     config: dict | None = None,
     config_arg: str | None = None,
     transport: str = "replay",
-    allow_fixture_chapters: bool = False,
 ) -> DataFrame:
     """Run the whole reference pipeline under `config`; returns the
     per-chapter audit frame (chapter_id, status, n_events, log_line).
 
-    A missing `chapter-json-file` is an ERROR, matching the reference
-    (an unreadable chapters table aborts the run) — a misconfigured
-    production run must not silently fetch demo data. The built-in
-    golden-fixture chapters are reachable only behind the explicit
-    `allow_fixture_chapters` replay/test flag."""
+    A missing `chapter-json-file` raises FileNotFoundError, matching
+    the reference (an unreadable chapters table aborts the run) — a
+    misconfigured run must not silently fetch demo data."""
     from cuttlefish_spark.operators.ingest import datasource_canonical
     from cuttlefish_spark.sinks.json_sink import write_keyed_json
     from cuttlefish_spark.sources.config import load_config
@@ -52,13 +48,7 @@ def run_pipeline(
     config = config or load_config(arg=config_arg)
     chapters_path = config["chapter-json-file"]
     if not os.path.exists(chapters_path):
-        if not allow_fixture_chapters:
-            raise FileNotFoundError(
-                f"chapter-json-file not found: {chapters_path!r} "
-                "(pass allow_fixture_chapters=True to replay the "
-                "built-in fixture chapters in tests/demos)"
-            )
-        chapters_path = None
+        raise FileNotFoundError(f"chapter-json-file not found: {chapters_path!r}")
     # The raw fetch is checkpointed inside datasource_canonical, so the
     # write and the error collect below re-read it, never re-fetch.
     out = datasource_canonical(

@@ -1,4 +1,4 @@
-"""Per-key partitioned JSON sinks + audit accounting.
+"""Per-key JSON sink + audit accounting.
 
 Reference parity:
 - `write-chapter-response` writes each chapter's events map as
@@ -7,17 +7,12 @@ Reference parity:
 - The result thread logs one `WROTE: <id>` / `ERROR: <msg>` line per
   outcome (api-runner.rkt:80-89); here that audit is a DataFrame.
 
-Two write shapes:
-- `write_partitioned_json` — idiomatic Spark: partitionBy(key),
-  overwrite mode; what you actually run at 100 TB (one directory per
-  key, many files per partition, written fully parallel).
-- `write_keyed_json` — exact filename parity with the reference
-  (`{key}.json`, one JSON object keyed by event_id per file): rows are
-  repartitioned BY KEY so each key's rows are colocated, then each
-  executor partition writes its keys' files directly — distributed;
-  only the per-key row counts come back to the driver. Use only when
-  the one-file-per-key contract matters (it implies one task's worth
-  of data per key).
+`write_keyed_json` keeps exact filename parity with the reference
+(`{key}.json`, one JSON object keyed by event_id per file): rows are
+repartitioned BY KEY so each key's rows are colocated, then each
+executor partition writes its keys' files directly — distributed; only
+the per-key event counts come back to the driver. The one-file-per-key
+contract implies one task's worth of data per key.
 """
 
 from __future__ import annotations
@@ -29,10 +24,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_partitioned_json(df: DataFrame, out_dir: str, key_col: str = "chapter_id") -> None:
-    df.write.partitionBy(key_col).mode("overwrite").json(out_dir)
-
-
 def write_keyed_json(df: DataFrame, out_dir: str, key_col: str = "chapter_id",
                      id_col: str = "event_id") -> dict:
     """One `{key}.json` per key holding `{event_id: record}` — byte-
@@ -40,27 +31,27 @@ def write_keyed_json(df: DataFrame, out_dir: str, key_col: str = "chapter_id",
     written to a dot-tmp and renamed into place, so readers never see a
     torn file). Rows are hash-repartitioned by key into
     `defaultParallelism` partitions: a fixed count, so AQE cannot
-    coalesce the write into one serial task. Returns `{key: n_rows}`,
-    collected from the same job that writes the files — the WROTE:
-    counts of the audit (api-runner.rkt:80-89) without a second scan."""
+    coalesce the write into one serial task. Returns `{key: n_events}`,
+    the number of events in each written file, collected from the same
+    job that writes the files — the WROTE: counts of the audit
+    (api-runner.rkt:80-89) without a second scan. Rows repeating an
+    event id count once, as they are written once."""
     os.makedirs(out_dir, exist_ok=True)
     cols = [c for c in df.columns if c != key_col]
     n_parts = df.sparkSession.sparkContext.defaultParallelism
 
     def write_partition(rows):
         by_key: dict[str, dict] = {}
-        counts: dict[str, int] = {}
         for row in rows:
             d = row.asDict(recursive=True)
             key = d.pop(key_col)
             by_key.setdefault(key, {})[d.get(id_col)] = d
-            counts[key] = counts.get(key, 0) + 1
         for key, events in by_key.items():
             tmp = os.path.join(out_dir, f".{key}.json.tmp")
             with open(tmp, "w") as fh:
                 json.dump(events, fh, sort_keys=True, default=str)
             os.replace(tmp, os.path.join(out_dir, f"{key}.json"))
-        return counts.items()
+        return [(key, len(events)) for key, events in by_key.items()]
 
     keyed = df.select(key_col, *cols).repartition(n_parts, F.col(key_col))
     return dict(keyed.rdd.mapPartitions(write_partition).collect())
@@ -81,46 +72,3 @@ def audit_counts(df: DataFrame, key_col: str = "chapter_id",
             ),
         )
     )
-
-
-def stream_to_keyed_json(stream_df: DataFrame, out_dir: str, checkpoint_dir: str,
-                         key_col: str = "chapter_id", id_col: str = "event_id"):
-    """Streaming twin of the reference's sink: every micro-batch lands
-    as per-key `{key}.json` files via foreachBatch (replace mode per
-    key — later batches overwrite a key's file exactly like
-    api-runner.rkt:50-51 replaces on re-run). The checkpoint makes the
-    sink restartable; write_keyed_json's atomic rename keeps readers
-    from seeing torn files. Returns the started query; caller awaits."""
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        write_keyed_json(batch_df, out_dir, key_col=key_col, id_col=id_col)
-
-    return (
-        stream_df.writeStream.foreachBatch(sink_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def write_json_with_audit(df: DataFrame, out_dir: str,
-                          key_col: str = "chapter_id",
-                          status_col: str = "status") -> dict:
-    """Partitioned JSON write with in-flight audit metrics: row/OK/
-    ERROR counts ride along on the SAME job via df.observe — the
-    reference's result-thread accounting (api-runner.rkt:65-89) with
-    zero extra passes over the data (audit_counts as a separate
-    DataFrame costs a second scan; at 100 TB that second scan is the
-    difference). Returns the metrics dict after the write completes."""
-    from pyspark.sql import Observation
-
-    obs = Observation("write_audit")
-    observed = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col(status_col) == "OK", 1)).alias("n_ok"),
-        F.count(F.when(F.col(status_col) == "ERROR", 1)).alias("n_error"),
-        F.approx_count_distinct(key_col).alias("n_keys_approx"),
-    )
-    observed.write.partitionBy(key_col).mode("overwrite").json(out_dir)
-    return obs.get

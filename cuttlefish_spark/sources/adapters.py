@@ -351,10 +351,10 @@ def dispatch_replay(spark: SparkSession, chapters=None) -> DataFrame:
     work-list -> per-adapter dispatch -> fetch (fixture transport) ->
     normalize -> union, with Either-style status/error columns.
 
-    The fetch body is the DataSource reader's (`_fetch_rows`: throttle
-    -> GET -> Either rows), run in-process instead of in fetch tasks;
+    The fetch body is the batch fetch's (`_fetch_rows`: throttle ->
+    GET -> Either rows), run in-process instead of in fetch tasks;
     `normalize_raw` then converts the rows exactly as it does for the
-    reader. `chapters` defaults to the golden fixture work-list."""
+    fetch tasks. `chapters` defaults to the golden fixture work-list."""
     from cuttlefish_spark.sources.datasource import RAW_FETCH_DDL, _fetch_rows
 
     if chapters is None:

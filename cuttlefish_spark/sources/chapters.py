@@ -1,5 +1,5 @@
 """Chapters work-list ingestion: the reference's JSON config-table read
-and map->rows explode, plus the YAML converter.
+and map->rows explode.
 
 Parity anchors (/root/reference/private):
 - A2 JSON table read, crash-out on missing path  api-runner.rkt:171-178
@@ -13,7 +13,7 @@ The chapters file is *config*, not data (36 rows in the shipped
 reference file), and is keyed by dynamic chapter ids. `load_chapters`
 reads it on the driver into the work-list tuples
 (chapter_id, title, adapter, service_id, organization) that every
-fetch path takes: the batch reader's partitions, the streaming
+fetch path takes: the batch fetch's chunks, the streaming
 reader's offset space, and the driver-side `dispatch_replay`. Driver
 residency mirrors the reference broadcasting config to its workers
 (api-runner.rkt:196-199).
@@ -22,9 +22,6 @@ residency mirrors the reference broadcasting config to its workers
 from __future__ import annotations
 
 import json
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 
 def load_chapters(path: str | None = None) -> list[tuple]:
@@ -53,39 +50,3 @@ def load_chapters(path: str | None = None) -> list[tuple]:
         items.append((cid, payload.get("title"), svc.get("adapter"),
                       svc.get("id"), svc.get("organization")))
     return items
-
-
-def convert_chapters_yaml(spark: SparkSession, yaml_path: str,
-                          default_adapter: str = "meetup") -> DataFrame:
-    """YAML chapters -> canonical work-list frame, injecting the
-    default adapter where absent (A26 parity,
-    utils/convert-chapters-yaml.rkt:29-38). Driver-side yaml parse of a
-    config-sized file, then createDataFrame — same driver-residency
-    rationale as load_chapters."""
-    import yaml  # baked into this container; config-sized input only
-
-    with open(yaml_path) as fh:
-        doc = yaml.safe_load(fh) or {}
-    rows = []
-    for chapter_id, payload in doc.items():
-        payload = payload or {}
-        svc = payload.get("dataService") or {}
-        rows.append(
-            {
-                "chapter_id": str(chapter_id),
-                "title": payload.get("title"),
-                "adapter": svc.get("adapter") or default_adapter,
-                "service_id": svc.get("id"),
-                "organization": svc.get("organization"),
-            }
-        )
-    schema = T.StructType(
-        [
-            T.StructField("chapter_id", T.StringType()),
-            T.StructField("title", T.StringType()),
-            T.StructField("adapter", T.StringType()),
-            T.StructField("service_id", T.StringType()),
-            T.StructField("organization", T.StringType()),
-        ]
-    )
-    return spark.createDataFrame(rows, schema)

@@ -1,21 +1,19 @@
-"""Spark 4 Python DataSource for the chapter-fetch step.
+"""The chapter-fetch body and the streaming `cuttlefish_replay` source.
 
 The reference's fetch layer is a worker pool: chapters are chunked,
 each worker thread dispatches on the adapter key and performs an HTTPS
-GET (api-runner.rkt:118-148, meetup.rkt:83-84). Spark's native analog
-of that pool is a DataSource whose *input partitions* are the work
-items: one partition per chapter means Spark's scheduler — not a
-bespoke thread pool (A5) — owns fan-out, retry, and locality, and the
-fetch scales to any executor count with zero code change.
+GET (api-runner.rkt:118-148, meetup.rkt:83-84). Here the work items are
+Spark tasks, so Spark's scheduler — not a bespoke thread pool (A5) —
+owns fan-out, retry and locality.
 
-`ChapterReplayDataSource` emits the *raw* payload rows (one JSON string
-per event, Either-style status/error columns — README.md:30-42); the
-normalization to the canonical schema stays declarative in the
-DataFrame layer (sources.adapters), exactly like the reference splits
-fetch (worker-*) from convert (convert-json). A per-partition
-TokenBucket is acquired per request, placing the reference's adaptive
-throttle (meetup.rkt:9-26) where it belongs at scale: one bucket per
-task, not a global lock.
+`_fetch_rows` emits the *raw* payload rows (one JSON string per event,
+Either-style status/error columns — README.md:30-42); the normalization
+to the canonical schema stays declarative in the DataFrame layer
+(sources.adapters), exactly like the reference splits fetch (worker-*)
+from convert (convert-json). Each caller owns one TokenBucket, acquired
+per request, placing the reference's adaptive throttle
+(meetup.rkt:9-26) where it belongs at scale: one bucket per task, not a
+global lock.
 
 Both modes run the SAME fetch body (sources.fetch.fetch_events:
 throttle -> GET -> header-driven throttle update -> Either errors);
@@ -25,36 +23,26 @@ test strategy, eventbrite.rkt:123-146); `transport=live` performs the
 real urllib GET against the worker APIs (meetup.rkt:83-84,
 facebook.rkt:82-83, eventbrite.rkt:114).
 
-Three callers share the fetch body `_fetch_rows`:
+Three callers share `_fetch_rows`, and all yield the same Either rows,
+which `adapters.normalize_raw` converts:
 - the batch pipeline (`operators.ingest.fetch_raw`, behind
-  `datasource_canonical` and `run.run_pipeline`) calls the reader's
-  `partitions()` on the driver and runs `read` over
-  `sparkContext.parallelize(parts, len(parts)).flatMap(...)`. It never
-  enters DataSource V2 planning, which cost a measured 6.5 s before
-  the first fetch task on every CLI run (4 cores): 2.2 s of Spark's
-  one-time static Python-DataSource lookup, which the first
-  `register()` triggers in a fresh Python process walking `sys.path`,
-  plus 4.3 s of create/plan round-trips to Python;
-- the registered `cuttlefish_replay` format, for `spark.read` and
-  `readStream` callers (`streaming_datasource_ingest`);
+  `datasource_canonical` and `run.run_pipeline`) splits the work-list
+  with `chapter_chunks` and runs one fetch task per chunk over
+  `sparkContext.parallelize`;
+- the registered `cuttlefish_replay` format, a stream-only source for
+  `readStream` (`streaming_datasource_ingest`). It has no batch
+  reader, so `spark.read.format("cuttlefish_replay")` fails at
+  analysis;
 - the driver-side `adapters.dispatch_replay` (`ingest_normalize`),
   which runs the fetch in-process, without fetch tasks.
-The two reader entry points have identical partitioning, options and
-one-bucket-per-task rule; all three yield the same Either rows, which
-`adapters.normalize_raw` converts.
 """
 
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator, Sequence
+from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
 from cuttlefish_spark.sources.chapters import load_chapters
@@ -65,14 +53,9 @@ RAW_FETCH_DDL = (
 )
 
 
-class ChapterPartition(InputPartition):
-    def __init__(self, chapters: list[tuple]):
-        self.chapters = chapters
-
-
 def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[tuple]:
     """The shared fetch body (throttle -> GET -> Either rows), one
-    TokenBucket per caller (a task for the batch reader, a microbatch
+    TokenBucket per caller (a batch fetch task, a microbatch
     slice for the streaming reader, the whole work-list for
     dispatch_replay) — the reference's adaptive throttle placed per
     worker (meetup.rkt:9-26)."""
@@ -113,60 +96,9 @@ def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[tuple]:
             )
 
 
-class ChapterReplayReader(DataSourceReader):
-    def __init__(self, options: dict):
-        self.options = options
-
-    def partitions(self) -> Sequence[ChapterPartition]:
-        # One work item per partition is the reference's chunk-list
-        # (chunk-list.rkt:6-18) balanced by count; Spark balances by
-        # task scheduling, which also absorbs per-key latency skew.
-        # `chapters_per_partition` is the task-overhead amortization
-        # knob: a Python DataSource task costs ~0.5 core-seconds of
-        # setup (measured, PLANS.md Notes). DEFAULTS depend on the
-        # transport (r9 VERDICT item 5):
-        #   - live HTTP: 1/partition, so the scheduler owns retry and
-        #     latency skew at item granularity (the documented
-        #     rationale — a slow or failing endpoint must not stall a
-        #     whole batch of unrelated chapters);
-        #   - replay/cache-backed: auto-sized to
-        #     max(1, n // (3 * parallelism)) — a 10k-chapter replay at
-        #     1/partition paid ~0.5 core-s of task setup per chapter
-        #     (177.8 s measured at the sf1 gate vs ~14 s batched); 3
-        #     waves per core keep scheduler-level balancing without
-        #     paying per-item setup. The caller passes parallelism via
-        #     `auto_batch_parallelism` (partitions() runs without a
-        #     live SparkSession; operators.ingest.fetch_raw, which
-        #     calls partitions() on the driver, wires it).
-        # An explicit `chapters_per_partition` always wins.
-        # `chapters_path` points at a chapters.json work-list (the
-        # reference's config-driven table, api-runner.rkt:171-178);
-        # without it the golden fixture chapters drive the replay.
-        items = load_chapters(self.options.get("chapters_path"))
-        explicit = self.options.get("chapters_per_partition")
-        if explicit is not None:
-            per = max(1, int(explicit))
-        elif self.options.get("transport", "replay") == "live":
-            per = 1
-        else:
-            par = int(self.options.get("auto_batch_parallelism", 0))
-            per = max(1, len(items) // (3 * par)) if par > 0 else 1
-        return [
-            ChapterPartition(items[i : i + per])
-            for i in range(0, len(items), per)
-        ]
-
-    def read(self, partition: ChapterPartition) -> Iterator[tuple]:
-        # ONE bucket per task (the reference's adaptive throttle placed
-        # at scale, meetup.rkt:9-26) — batched chapters in a partition
-        # share it, exactly like a worker draining its channel.
-        return _fetch_rows(partition.chapters, self.options)
-
-
 class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
-    """Streaming half of the chapter-fetch DataSource (Spark 4
-    simpleStreamReader — the extension rung the batch reader above
-    doesn't touch): the chapter work-list becomes a RATE-LIMITED
+    """The chapter-fetch DataSource's reader (Spark 4
+    simpleStreamReader): the chapter work-list becomes a RATE-LIMITED
     stream, each microbatch serving the next `chapters_per_batch`
     work items (offset = index into the list). This is the production
     shape of a polling ingest: a bounded slice of the upstream work
@@ -178,11 +110,12 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
     The simple API prefetches each slice DRIVER-side by design —
     bounded by chapters_per_batch, which is exactly the rate-limit
     contract of a polling source; bulk backfills use the batch
-    reader's executor-side partitions instead. An exhausted list
-    returns an empty slice at a fixed offset, so processAllAvailable
-    terminates (availableNow on simple readers drains only ONE
-    read() call — measured; the streaming_datasource_ingest query
-    documents and works this engine contract)."""
+    fetch's executor-side tasks (operators.ingest.fetch_raw) instead.
+    An exhausted list returns an empty slice at a fixed offset, so
+    processAllAvailable terminates (availableNow on simple readers
+    drains only ONE read() call — measured; the
+    streaming_datasource_ingest query documents and works this engine
+    contract)."""
 
     def __init__(self, options: dict):
         self.options = options
@@ -220,9 +153,6 @@ class ChapterReplayDataSource(DataSource):
 
     def schema(self) -> str:
         return RAW_FETCH_DDL
-
-    def reader(self, schema: StructType) -> ChapterReplayReader:
-        return ChapterReplayReader(self.options)
 
     def simpleStreamReader(self, schema: StructType) -> ChapterReplayStreamReader:
         return ChapterReplayStreamReader(self.options)

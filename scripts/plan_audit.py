@@ -244,8 +244,8 @@ FOOTER = """
   in 64 syncs: batching cuts both wall-clock (~2.6x) and the
   sync count (4x) at identical answer quality per the dominance
   contract — the measured form of the 32k-merge production argument.
-- Chapter-fetch DataSource task batching (r9,
-  `chapters_per_partition` option): a Python-DataSource task costs
+- Chapter-fetch task batching (r9, `chapters_per_partition`, now
+  `operators.ingest.chapter_chunks`): a Python fetch task costs
   ~0.5 core-seconds of setup, so the 10k-chapter fixture work-list at
   the reference-parity 1 chapter/partition sustains ~108 chapters/s
   on local[32]; batching 16/partition -> 1,437/s (13x, 625 tasks) and

@@ -122,17 +122,8 @@ def test_datasource_matches_replay(spark, sf_dir, tmp_path):
     assert len(a) == 2003
     lost = [r for r in a if r[0].startswith("lost_")]
     assert len(lost) == 3 and all(r[-1].endswith(": 404") for r in lost)
-
-
-def test_datasource_partitions_per_chapter(spark):
-    """Fan-out parity with the reference's work-list chunking: the
-    source exposes one input partition per chapter (A5 superseded by
-    task scheduling)."""
-    from cuttlefish_spark.sources.datasource import register
-
-    register(spark)
-    raw = spark.read.format("cuttlefish_replay").load()
-    assert raw.rdd.getNumPartitions() == 4
+    errs = {r[0]: r[-1] for r in a if r[-2] == "ERROR"}
+    assert errs["c00003"] == "No adapter found: carrierpigeon"
 
 
 def test_read_chapters_json(tmp_path):
@@ -181,21 +172,6 @@ def test_chapters_drive_dispatch(spark, tmp_path):
     p.write_text(json.dumps(doc))
     out = dispatch_replay(spark, load_chapters(str(p)))
     assert out.filter("status = 'OK'").count() == 2  # the two meetup fixture events
-
-
-def test_convert_chapters_yaml(spark, tmp_path):
-    """A26 parity: YAML -> work-list rows with the default adapter
-    injected where absent."""
-    from cuttlefish_spark.sources.chapters import convert_chapters_yaml
-
-    p = tmp_path / "chapters.yml"
-    p.write_text(
-        "newyork:\n  title: New York\n  dataService:\n    id: papers-we-love\n"
-        "london:\n  title: London\n  dataService:\n    adapter: eventbrite\n    id: pwl\n"
-    )
-    rows = {r.chapter_id: r for r in convert_chapters_yaml(spark, str(p)).collect()}
-    assert rows["newyork"].adapter == "meetup"  # injected default
-    assert rows["london"].adapter == "eventbrite"
 
 
 def test_fetch_events_ok_and_throttle_update():
@@ -282,11 +258,10 @@ def test_fetch_request_shapes():
 
 def test_datasource_404_rows_flow_to_error_channel(spark):
     """A chapter whose fixture is missing surfaces the HTTP 404 through
-    the DataSource's Either columns instead of failing the job."""
-    from cuttlefish_spark.sources.datasource import register
+    the batch fetch's Either columns instead of failing the job."""
+    from cuttlefish_spark.operators.ingest import fetch_raw
 
-    register(spark)
-    df = spark.read.format("cuttlefish_replay").load()
+    df = fetch_raw(spark)
     errs = {
         r["error"] for r in df.filter("status = 'ERROR'").collect() if r["error"]
     }
@@ -400,7 +375,7 @@ def test_log_rotation_daily(tmp_path):
 def test_run_pipeline_missing_chapters_raises(spark, tmp_path):
     """A misconfigured run must fail loudly, not silently replay the
     built-in fixture chapters (reference: an unreadable chapters table
-    aborts the run). The fixture fallback needs the explicit flag."""
+    aborts the run)."""
     import pytest as _pytest
 
     from cuttlefish_spark.run import run_pipeline
@@ -412,8 +387,6 @@ def test_run_pipeline_missing_chapters_raises(spark, tmp_path):
     }
     with _pytest.raises(FileNotFoundError, match="chapter-json-file"):
         run_pipeline(spark, config=config)
-    audit = run_pipeline(spark, config=config, allow_fixture_chapters=True)
-    assert audit.count() > 0
 
     listed = tmp_path / "list.json"
     listed.write_text('[{"newyork": {}}]')
@@ -426,8 +399,8 @@ def test_datasource_chapter_batching_invariance(spark):
     the rows: the 4-chapter fixture work-list read at 1/partition and
     batched into a single partition must produce identical canonical
     output (and the expected partition counts)."""
-    from cuttlefish_spark.operators.ingest import datasource_canonical
-    from cuttlefish_spark.sources.datasource import ChapterReplayReader
+    from cuttlefish_spark.operators.ingest import chapter_chunks, datasource_canonical
+    from cuttlefish_spark.sources.chapters import load_chapters
 
     one = datasource_canonical(spark).toPandas()
     batched = datasource_canonical(spark, chapters_per_partition=7).toPandas()
@@ -436,13 +409,10 @@ def test_datasource_chapter_batching_invariance(spark):
     b = batched[key].sort_values(key).reset_index(drop=True).astype(str)
     assert a.equals(b), "batched DataSource output diverges"
 
-    assert len(ChapterReplayReader({}).partitions()) == 4
-    assert len(
-        ChapterReplayReader({"chapters_per_partition": 7}).partitions()
-    ) == 1
-    assert len(
-        ChapterReplayReader({"chapters_per_partition": 3}).partitions()
-    ) == 2
+    items = load_chapters()
+    assert len(chapter_chunks(items, "replay", 8)) == 4
+    assert len(chapter_chunks(items, "replay", 8, chapters_per_partition=7)) == 1
+    assert len(chapter_chunks(items, "replay", 8, chapters_per_partition=3)) == 2
 
 
 def test_datasource_replay_auto_batching(spark, tmp_path):
@@ -452,29 +422,22 @@ def test_datasource_replay_auto_batching(spark, tmp_path):
     task setup per chapter); live transport keeps 1/partition so the
     scheduler owns per-item retry granularity; an explicit value always
     wins; and the auto-batched output is row-identical."""
-    from cuttlefish_spark.operators.ingest import datasource_canonical
-    from cuttlefish_spark.sources.datasource import ChapterReplayReader
+    from cuttlefish_spark.operators.ingest import chapter_chunks, datasource_canonical
+    from cuttlefish_spark.sources.chapters import load_chapters
     from cuttlefish_spark.sources.fixtures import write_chapters_json
 
     path = str(tmp_path / "chapters.json")
     write_chapters_json(1000, path)
-
-    def n_parts(opts):
-        return len(ChapterReplayReader(opts).partitions())
+    items = load_chapters(path)
 
     # replay + parallelism 8: per = 1000 // 24 = 41 -> ceil(1000/41) = 25
-    assert n_parts({"chapters_path": path, "auto_batch_parallelism": 8}) == 25
-    # live ignores the auto knob
-    assert n_parts(
-        {"chapters_path": path, "auto_batch_parallelism": 8, "transport": "live"}
-    ) == 1000
+    assert len(chapter_chunks(items, "replay", 8)) == 25
+    # live ignores the auto size
+    assert len(chapter_chunks(items, "live", 8)) == 1000
     # explicit beats auto
-    assert n_parts(
-        {"chapters_path": path, "auto_batch_parallelism": 8,
-         "chapters_per_partition": 10}
-    ) == 100
+    assert len(chapter_chunks(items, "replay", 8, chapters_per_partition=10)) == 100
     # tiny work-lists never batch below 1/partition
-    assert n_parts({"auto_batch_parallelism": 8}) == 4
+    assert len(chapter_chunks(load_chapters(), "replay", 8)) == 4
 
     # Auto default (what ingest_datasource now runs) is row-identical
     # to explicit 1/partition on the same work-list.
@@ -536,22 +499,18 @@ def test_unknown_adapter_spends_no_throttle_token(monkeypatch):
     an unknown-adapter chapter makes no request, so a work-list of only
     unknown adapters never acquires (and so never sleeps), while a
     known adapter acquires once per GET."""
-    from cuttlefish_spark.sources.datasource import (
-        ChapterPartition,
-        ChapterReplayReader,
-    )
+    from cuttlefish_spark.sources.datasource import _fetch_rows
     from cuttlefish_spark.sources.throttle import TokenBucket
 
     calls = []
     monkeypatch.setattr(TokenBucket, "acquire", lambda self: calls.append(1))
-    reader = ChapterReplayReader({"rate_per_sec": 1.0})
     unknown = [(f"x{i}", "X", "carrierpigeon", "deep-six", None) for i in range(20)]
-    rows = list(reader.read(ChapterPartition(unknown)))
+    rows = list(_fetch_rows(unknown, {"rate_per_sec": 1.0}))
     assert [r[4] for r in rows] == ["ERROR"] * 20
     assert calls == []
 
     known = [("newyork", "New York", "meetup", "papers-we-love", None)]
-    list(reader.read(ChapterPartition(known)))
+    list(_fetch_rows(known, {"rate_per_sec": 1.0}))
     assert len(calls) == 1
 
 
@@ -575,57 +534,20 @@ def _worklist_with_404s(path: str) -> None:
         _json.dump(doc, fh)
 
 
-def _format_raw(spark, path: str, **options):
-    from cuttlefish_spark.sources.datasource import register
-
-    register(spark)
-    reader = (
-        spark.read.format("cuttlefish_replay")
-        .option("chapters_path", path)
-        .option("auto_batch_parallelism", spark.sparkContext.defaultParallelism)
-    )
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load()
-
-
-def test_reader_entry_points_same_rows(spark, tmp_path):
-    """The batch pipeline's direct reader driver (fetch_raw) and the
-    registered `cuttlefish_replay` format return the same raw rows in
-    the same partitioning, both auto-batched and at one chapter per
-    partition, 404 and unknown-adapter rows included."""
-    from cuttlefish_spark.operators.ingest import fetch_raw
-
-    path = str(tmp_path / "chapters.json")
-    _worklist_with_404s(path)
-    for cpp in (None, 1):
-        opts = {} if cpp is None else {"chapters_per_partition": cpp}
-        direct = fetch_raw(spark, chapters_path=path, chapters_per_partition=cpp)
-        via_format = _format_raw(spark, path, **opts)
-        assert direct.rdd.getNumPartitions() == via_format.rdd.getNumPartitions()
-        a = sorted(tuple(r) for r in direct.collect())
-        b = sorted(tuple(r) for r in via_format.collect())
-        assert a == b, f"entry points diverge (chapters_per_partition={cpp})"
-        errs = {r[0]: r[5] for r in a if r[4] == "ERROR"}
-        assert errs["lost_meetup"].endswith("404")
-        assert errs["lost_eventbrite"].endswith("404")
-        assert errs["c00003"] == "No adapter found: carrierpigeon"
-
-
 def test_run_pipeline_matches_format_composition(spark, tmp_path):
     """run_pipeline's files, audit log and audit frame equal the
-    composition it replaces: format read -> canonical_from_raw ->
+    composition it replaces: fetch_raw -> canonical_from_raw ->
     write_keyed_json -> audit_counts."""
     import json as _json
 
-    from cuttlefish_spark.operators.ingest import canonical_from_raw
+    from cuttlefish_spark.operators.ingest import canonical_from_raw, fetch_raw
     from cuttlefish_spark.run import run_pipeline
     from cuttlefish_spark.sinks.json_sink import write_keyed_json
 
     path = str(tmp_path / "chapters.json")
     _worklist_with_404s(path)
 
-    out = canonical_from_raw(_format_raw(spark, path))
+    out = canonical_from_raw(fetch_raw(spark, chapters_path=path))
     old_dir = tmp_path / "old"
     write_keyed_json(out.filter("status = 'OK'").drop("status", "error"), str(old_dir))
     old_audit = audit_counts(out).orderBy("chapter_id", "status").collect()
