@@ -61,8 +61,8 @@ _INGEST_GOLDEN_SQL = """
 def ingest_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's whole pipeline with the fetch on the driver:
     chapters work-list -> adapter dispatch -> fetch (fixture transport)
-    -> per-source normalization to the canonical event schema -> union
-    + Either status split (SURVEY.md §3.1 restatement). The driver-side
+    -> per-source normalization to the canonical event schema, with
+    the Either status split (SURVEY.md §3.1 restatement). The driver-side
     twin of ingest_datasource: the same fetch body and convert, no
     fetch tasks.
 
@@ -111,24 +111,23 @@ def chapter_chunks(
     chapters_per_partition: int | None = None,
 ) -> list[list[tuple]]:
     """Split the work-list into fetch-task chunks — the reference's
-    chunk-list (chunk-list.rkt:6-18), balanced by count; Spark's task
-    scheduling then absorbs per-key latency skew. A fetch task costs
-    ~0.5 core-seconds of Python setup (PLANS.md Notes), so the chunk
-    size depends on the transport:
+    chunk-list (chunk-list.rkt:6-18), balanced by count. A fetch task
+    costs ~0.5 core-seconds of Python setup (PLANS.md Notes), so the
+    chunk size depends on the transport:
       - an explicit `chapters_per_partition` always wins;
       - live HTTP: 1 chapter per task, so a slow or failing endpoint
         never stalls a batch of unrelated chapters and the scheduler
         owns retry at item granularity;
-      - replay: max(1, n // (3 * parallelism)) — three waves per core
-        keep scheduler-level balancing without per-item setup (a
-        10k-chapter replay at 1 per task took 177.8 s at the sf1 gate,
-        ~14 s batched)."""
+      - replay: ceil(n / parallelism), one chunk per core, so the
+        whole work-list runs in one wave and each core pays the task
+        setup once (a 10k-chapter replay at 1 per task took 177.8 s at
+        the sf1 gate, ~14 s batched)."""
     if chapters_per_partition is not None:
         per = max(1, int(chapters_per_partition))
     elif transport == "live":
         per = 1
     else:
-        per = max(1, len(items) // (3 * parallelism))
+        per = max(1, -(-len(items) // parallelism))
     return [items[i : i + per] for i in range(0, len(items), per)]
 
 
@@ -137,16 +136,18 @@ def fetch_raw(
     chapters_path: str | None = None,
     transport: str = "replay",
     chapters_per_partition: int | None = None,
+    config: dict | None = None,
 ) -> DataFrame:
-    """The raw fetch frame (RAW_FETCH_DDL), eagerly checkpointed: the
-    work-list at `chapters_path` (the golden fixture chapters without
-    one) is split by `chapter_chunks`, and each chunk is one Spark task
-    running `_fetch_rows` with its own TokenBucket. No DataSource V2
-    planning is involved; going through a Python DataSource cost 2.2 s
-    of Spark's static Python-DataSource lookup plus 4.3 s of
-    create/plan round-trips before the first fetch task, measured on 4
-    cores. The checkpoint makes the fetch happen once, however many
-    branches read the frame (the reference likewise fetches once per
+    """The raw fetch frame (RAW_FETCH_DDL), lazy: the work-list at
+    `chapters_path` (the golden fixture chapters without one) is split
+    by `chapter_chunks`, and each chunk is one Spark partition running
+    `_fetch_rows` with its own TokenBucket and the run's `config` (the
+    API tokens). No DataSource V2 planning is involved; going through a
+    Python DataSource cost 2.2 s of Spark's static Python-DataSource
+    lookup plus 4.3 s of create/plan round-trips before the first fetch
+    task, measured on 4 cores. Every chapter's rows stay in its chunk's
+    partition, and the fetch runs inside the job of whatever reads the
+    frame, so read it once (the reference likewise fetches once per
     chapter, api-runner.rkt:129-143)."""
     from cuttlefish_spark.sources.chapters import load_chapters
     from cuttlefish_spark.sources.datasource import RAW_FETCH_DDL, _fetch_rows
@@ -156,10 +157,11 @@ def fetch_raw(
         load_chapters(chapters_path), transport, sc.defaultParallelism,
         chapters_per_partition,
     )
+    options = {"transport": transport, "config": config}
     rows = sc.parallelize(chunks, max(1, len(chunks))).flatMap(
-        lambda chunk: _fetch_rows(chunk, {"transport": transport})
+        lambda chunk: _fetch_rows(chunk, options)
     )
-    return spark.createDataFrame(rows, RAW_FETCH_DDL).localCheckpoint(eager=True)
+    return spark.createDataFrame(rows, RAW_FETCH_DDL)
 
 
 def datasource_canonical(
@@ -167,15 +169,16 @@ def datasource_canonical(
     chapters_path: str | None = None,
     transport: str = "replay",
     chapters_per_partition: int | None = None,
+    config: dict | None = None,
 ) -> DataFrame:
     """Batch fetch (fetch_raw) -> canonical frame, parameterized by
-    work-list, transport, and task batching — the reusable body behind
-    ingest_datasource and the end-to-end runner (run.run_pipeline).
-    `chapters_per_partition` trades scheduler granularity for per-task
-    overhead; None picks the transport-dependent default of
-    `chapter_chunks`."""
+    work-list, transport, task batching and the run's config — the
+    reusable body behind ingest_datasource and the end-to-end runner
+    (run.run_pipeline). `chapters_per_partition` trades scheduler
+    granularity for per-task overhead; None picks the
+    transport-dependent default of `chapter_chunks`."""
     return canonical_from_raw(
-        fetch_raw(spark, chapters_path, transport, chapters_per_partition)
+        fetch_raw(spark, chapters_path, transport, chapters_per_partition, config)
     )
 
 

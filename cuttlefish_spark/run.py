@@ -3,17 +3,16 @@
 api-runner.rkt:118-168).
 
 Flow: resolve runtime config (A1) -> chapters work-list drives the
-fetch: the driver splits it into chunks and Spark runs one fetch task
-per chunk (A2-A9) -> adapter normalization to the canonical event schema
-(A10-A18) -> per-chapter `{chapter}.json` files under the config's
-json-out-path (A21, api-runner.rkt:39-52) -> WROTE:/ERROR: audit
-lines appended under logfile-path (A23, api-runner.rkt:80-89). The
-WROTE: counts come back from the write job itself and the ERROR:
-chapters from one collect that Catalyst prunes to the error branch,
-so a run is four Spark jobs: the checkpointed fetch, the write's
-shuffle-map and write stages, and the error collect. Returns the
-audit frame so callers can assert on it; the CLI prints the log
-lines.
+fetch: the driver splits it into one chunk per core (A2-A9) -> adapter
+normalization to the canonical event schema (A10-A18) -> per-chapter
+`{chapter}.json` files under the config's json-out-path (A21,
+api-runner.rkt:39-52) -> WROTE:/ERROR: audit lines appended under
+logfile-path (A23, api-runner.rkt:80-89). A chapter's rows stay in its
+fetch partition, so fetch, convert and write run in the same task, as
+in the reference's worker, and the write returns every chapter's
+audit tuple: a run is one Spark job of one stage with no shuffle.
+Returns the audit frame so callers can assert on it; the CLI prints
+the log lines.
 
 Usage: python -m cuttlefish_spark.run [configfile]
 """
@@ -22,7 +21,6 @@ from __future__ import annotations
 
 import os
 import sys
-from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,24 +47,15 @@ def run_pipeline(
     chapters_path = config["chapter-json-file"]
     if not os.path.exists(chapters_path):
         raise FileNotFoundError(f"chapter-json-file not found: {chapters_path!r}")
-    # The raw fetch is checkpointed inside datasource_canonical, so the
-    # write and the error collect below re-read it, never re-fetch.
     out = datasource_canonical(
         spark,
         chapters_path=chapters_path,
         transport=transport,
+        config=config,
     )
-
-    ok = out.filter("status = 'OK'").drop("status", "error")
-    wrote = write_keyed_json(ok, config["json-out-path"])
-    errors = Counter(
-        r["chapter_id"]
-        for r in out.filter("status = 'ERROR'").select("chapter_id").collect()
-    )
-
     audit = sorted(
-        [(cid, "OK", n, f"WROTE: {cid}") for cid, n in wrote.items()]
-        + [(cid, "ERROR", n, f"ERROR: {cid}") for cid, n in errors.items()]
+        (cid, status, n, f"{'WROTE' if status == 'OK' else 'ERROR'}: {cid}")
+        for cid, status, n, _error in write_keyed_json(out, config["json-out-path"])
     )
     append_log(config["logfile-path"], [f"{line} ({n})" for _, _, n, line in audit])
     return spark.createDataFrame(audit, AUDIT_DDL)

@@ -212,144 +212,133 @@ def _venue(name: Column, a1: Column, a2: Column, country: Column, city: Column,
     )
 
 
-def normalize_meetup(raw: DataFrame) -> DataFrame:
+def normalize_meetup(r: Column) -> dict[str, Column]:
     """meetup.rkt:39-59: rename (link->url, name->title,
     utc_offset->utcOffset, venue.zip->postalCode), epoch pass-through
     (meetup.rkt:43-44), photo array transform (meetup.rkt:55-58,
     width/height null-defaulted)."""
     photos = F.transform(
-        F.coalesce(F.col("photo_album.photo_sample"), F.array()),
+        F.coalesce(r["photo_album"]["photo_sample"], F.array()),
         lambda p: F.struct(
             p["photo_link"].alias("url"),
             F.lit(None).cast("int").alias("width"),
             F.lit(None).cast("int").alias("height"),
         ),
     )
-    return raw.select(
-        F.col("chapter_id"),
-        F.col("id").alias("event_id"),
-        F.col("link").alias("url"),
-        F.col("time").cast("long").alias("time"),
-        F.col("utc_offset").cast("long").alias("utcOffset"),
-        F.col("name").alias("title"),
-        F.col("description"),
-        _venue(
-            F.col("venue.name"), F.col("venue.address_1"), F.col("venue.address_2"),
-            F.col("venue.country"), F.col("venue.city"), F.col("venue.zip"),
-            F.col("venue.lon"), F.col("venue.lat"),
-        ).alias("venue"),
-        photos.alias("photos"),
-    )
+    return {
+        "event_id": r["id"],
+        "url": r["link"],
+        "time": r["time"].cast("long"),
+        "utcOffset": r["utc_offset"].cast("long"),
+        "title": r["name"],
+        "description": r["description"],
+        "venue": _venue(
+            r["venue"]["name"], r["venue"]["address_1"], r["venue"]["address_2"],
+            r["venue"]["country"], r["venue"]["city"], r["venue"]["zip"],
+            r["venue"]["lon"], r["venue"]["lat"],
+        ),
+        "photos": photos,
+    }
 
 
-def normalize_facebook(raw: DataFrame) -> DataFrame:
+def normalize_facebook(r: Column) -> dict[str, Column]:
     """facebook.rkt:35-55: ISO8601+-HHMM parse + offset split
     (facebook.rkt:22-28), url synthesis (facebook.rkt:41), markdown
     description -> HTML (facebook.rkt:30-32,45), photos always null
     (facebook.rkt:55)."""
-    ts = F.to_timestamp(F.col("start_time"), "yyyy-MM-dd'T'HH:mm:ssxx")
-    sign = F.when(F.regexp_extract("start_time", r"([+-])\d{4}$", 1) == "-", -1).otherwise(1)
-    off_h = F.regexp_extract("start_time", r"[+-](\d{2})(\d{2})$", 1).cast("long")
-    off_m = F.regexp_extract("start_time", r"[+-](\d{2})(\d{2})$", 2).cast("long")
+    start = r["start_time"]
+    ts = F.to_timestamp(start, "yyyy-MM-dd'T'HH:mm:ssxx")
+    sign = F.when(F.regexp_extract(start, r"([+-])\d{4}$", 1) == "-", -1).otherwise(1)
+    off_h = F.regexp_extract(start, r"[+-](\d{2})(\d{2})$", 1).cast("long")
+    off_m = F.regexp_extract(start, r"[+-](\d{2})(\d{2})$", 2).cast("long")
     offset_ms = sign * (off_h * 3600 + off_m * 60) * 1000
-    return raw.select(
-        F.col("chapter_id"),
-        F.col("id").alias("event_id"),
-        F.concat(F.lit("https://facebook.com/"), F.col("id")).alias("url"),
-        F.unix_millis(ts).alias("time"),
-        offset_ms.cast("long").alias("utcOffset"),
-        F.col("name").alias("title"),
-        markdown_to_html(F.col("description")).alias("description"),
-        _venue(
-            F.col("place.name"), F.col("place.location.street"),
-            F.lit(None).cast("string"), F.col("place.location.country"),
-            F.col("place.location.city"), F.col("place.location.zip"),
-            F.col("place.location.longitude"), F.col("place.location.latitude"),
-        ).alias("venue"),
-        F.lit(None).cast(T.ArrayType(PHOTO_SCHEMA)).alias("photos"),
-    )
+    return {
+        "event_id": r["id"],
+        "url": F.concat(F.lit("https://facebook.com/"), r["id"]),
+        "time": F.unix_millis(ts),
+        "utcOffset": offset_ms.cast("long"),
+        "title": r["name"],
+        "description": markdown_to_html(r["description"]),
+        "venue": _venue(
+            r["place"]["name"], r["place"]["location"]["street"],
+            F.lit(None).cast("string"), r["place"]["location"]["country"],
+            r["place"]["location"]["city"], r["place"]["location"]["zip"],
+            r["place"]["location"]["longitude"], r["place"]["location"]["latitude"],
+        ),
+        "photos": F.lit(None).cast(T.ArrayType(PHOTO_SCHEMA)),
+    }
 
 
-def normalize_eventbrite(raw: DataFrame) -> DataFrame:
+def normalize_eventbrite(r: Column) -> dict[str, Column]:
     """eventbrite.rkt:51-85: naive-local + IANA zone -> DST-aware UTC
     epoch millis and offset (eventbrite.rkt:54-66); stringified lat/lon
     cast to double; keyed by event_id (NOT by timestamp — divergence
     from the eventbrite.rkt:68 collision bug, see module docstring)."""
-    local_ts = F.to_timestamp(F.col("start.local"))
-    utc_ts = F.to_utc_timestamp(local_ts, F.col("start.timezone"))
-    return raw.select(
-        F.col("chapter_id"),
-        F.col("id").alias("event_id"),
-        F.col("url"),
-        F.unix_millis(utc_ts).alias("time"),
-        (F.unix_millis(local_ts) - F.unix_millis(utc_ts)).cast("long").alias("utcOffset"),
-        F.col("name.text").alias("title"),
-        F.col("description.text").alias("description"),
-        _venue(
-            F.col("venue.name"), F.col("venue.address.address_1"),
-            F.col("venue.address.address_2"), F.col("venue.address.country"),
-            F.col("venue.address.city"), F.col("venue.address.postal_code"),
-            F.col("venue.address.longitude"), F.col("venue.address.latitude"),
-        ).alias("venue"),
-        F.lit(None).cast(T.ArrayType(PHOTO_SCHEMA)).alias("photos"),
-    )
+    local_ts = F.to_timestamp(r["start"]["local"])
+    utc_ts = F.to_utc_timestamp(local_ts, r["start"]["timezone"])
+    return {
+        "event_id": r["id"],
+        "url": r["url"],
+        "time": F.unix_millis(utc_ts),
+        "utcOffset": (F.unix_millis(local_ts) - F.unix_millis(utc_ts)).cast("long"),
+        "title": r["name"]["text"],
+        "description": r["description"]["text"],
+        "venue": _venue(
+            r["venue"]["name"], r["venue"]["address"]["address_1"],
+            r["venue"]["address"]["address_2"], r["venue"]["address"]["country"],
+            r["venue"]["address"]["city"], r["venue"]["address"]["postal_code"],
+            r["venue"]["address"]["longitude"], r["venue"]["address"]["latitude"],
+        ),
+        "photos": F.lit(None).cast(T.ArrayType(PHOTO_SCHEMA)),
+    }
 
 
-NORMALIZERS = {
-    "meetup": normalize_meetup,
-    "facebook": normalize_facebook,
-    "eventbrite": normalize_eventbrite,
+# adapter -> (raw payload schema, canonical field builder)
+ADAPTERS = {
+    "meetup": (_MEETUP_RAW_SCHEMA, normalize_meetup),
+    "facebook": (_FACEBOOK_RAW_SCHEMA, normalize_facebook),
+    "eventbrite": (_EVENTBRITE_RAW_SCHEMA, normalize_eventbrite),
 }
 
 
 def normalize_raw(raw: DataFrame) -> DataFrame:
     """Raw fetch rows (RAW_FETCH_DDL: chapter_id/adapter/service_id/
     payload/status/error) -> nested canonical frame plus Either
-    status/error columns: per-adapter from_json, the declarative
-    normalizers, and the ERROR rows passed through with null event
-    fields. The CONVERT half (worker-* vs convert-json in the
-    reference), shared by every fetch path; the plan is one union
-    branch per adapter plus one for errors, whatever the work-list
-    length."""
-    schemas = {
-        "meetup": _MEETUP_RAW_SCHEMA,
-        "facebook": _FACEBOOK_RAW_SCHEMA,
-        "eventbrite": _EVENTBRITE_RAW_SCHEMA,
-    }
-    cols = [f.name for f in CANONICAL_SCHEMA.fields] + ["status", "error"]
-    frames = []
-    for adapter, schema in schemas.items():
-        parsed = (
-            raw.filter((F.col("adapter") == adapter) & (F.col("status") == "OK"))
-            .select("chapter_id", F.from_json("payload", schema).alias("r"))
-            .select("chapter_id", "r.*")
-        )
-        frames.append(
-            NORMALIZERS[adapter](parsed)
-            .withColumn("status", F.lit("OK"))
-            .withColumn("error", F.lit(None).cast("string"))
-            .select(cols)
-        )
-    err = raw.filter(F.col("status") == "ERROR").select(
-        "chapter_id",
+    status/error columns. The CONVERT half (worker-* vs convert-json in
+    the reference), shared by every fetch path, as projections with no
+    union, so the raw frame is read once: each adapter's `from_json`
+    runs under `CASE WHEN status = 'OK' AND adapter = '<name>'`, and
+    each canonical field picks its adapter's builder column. ERROR rows
+    keep null event fields."""
+    hits = {name: (F.col("status") == "OK") & (F.col("adapter") == name) for name in ADAPTERS}
+    parsed = raw.select(
+        "chapter_id", "adapter", "status", "error",
         *[
-            F.lit(None).cast(f.dataType).alias(f.name)
-            for f in CANONICAL_SCHEMA.fields
-            if f.name != "chapter_id"
+            F.when(hits[name], F.from_json("payload", schema)).alias(name)
+            for name, (schema, _) in ADAPTERS.items()
         ],
+    )
+    built = {name: build(F.col(name)) for name, (_, build) in ADAPTERS.items()}
+
+    def field(f: T.StructField) -> Column:
+        (first, cols), *rest = built.items()
+        out = F.when(hits[first], cols[f.name])
+        for name, cols in rest:
+            out = out.when(hits[name], cols[f.name])
+        return out.alias(f.name)
+
+    return parsed.select(
+        "chapter_id",
+        *[field(f) for f in CANONICAL_SCHEMA.fields if f.name != "chapter_id"],
         "status",
         "error",
-    ).select(cols)
-    out = frames[0]
-    for fr in frames[1:] + [err]:
-        out = out.unionByName(fr)
-    return out
+    )
 
 
 def dispatch_replay(spark: SparkSession, chapters=None) -> DataFrame:
     """The full Layer-A pipeline with the fetch on the driver: chapters
     work-list -> per-adapter dispatch -> fetch (fixture transport) ->
-    normalize -> union, with Either-style status/error columns.
+    normalize, with Either-style status/error columns.
 
     The fetch body is the batch fetch's (`_fetch_rows`: throttle ->
     GET -> Either rows), run in-process instead of in fetch tasks;

@@ -58,7 +58,8 @@ def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[tuple]:
     TokenBucket per caller (a batch fetch task, a microbatch
     slice for the streaming reader, the whole work-list for
     dispatch_replay) — the reference's adaptive throttle placed per
-    worker (meetup.rkt:9-26)."""
+    worker (meetup.rkt:9-26). `options["config"]` is the run's
+    config, whose API tokens go into each request (build_request)."""
     from cuttlefish_spark.sources.fetch import (
         FixtureTransport,
         fetch_events,
@@ -85,6 +86,7 @@ def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[tuple]:
             organization or service_id,
             transport=transport,
             bucket=bucket,
+            config=options.get("config"),
         )
         if error is not None:
             yield (chapter_id, adapter, service_id, None, "ERROR", error)

@@ -15,7 +15,8 @@ three workers:
 - Errors mirror the worker Either contract (meetup.rkt:72-80): HTTP
   status errors -> "Couldn't fetch {id}: {code}" (the 404 path shown
   in README.md:66-72), read errors -> "Could not read data for {id}",
-  undecodable bodies -> "Couldn't format {id} into correct JSON".
+  undecodable bodies, and events that are not objects or have no id
+  -> "Couldn't format {id} into correct JSON".
 
 The transport is injectable: `http_transport` is the live stdlib
 urllib GET; tests (and the replay DataSource mode) pass
@@ -166,6 +167,9 @@ def fetch_events(
     except (json.JSONDecodeError, ValueError):
         return None, f"Couldn't format {service_id} into correct JSON"
     events = _envelope(adapter, doc)
-    if events is None:
+    # Events are keyed by id in the chapter's file, so an event that is
+    # not an object or has no id cannot be written.
+    if events is None or not all(isinstance(e, dict) and e.get("id") is not None
+                                 for e in events):
         return None, f"Couldn't format {service_id} into correct JSON"
     return events, None

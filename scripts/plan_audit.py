@@ -257,7 +257,9 @@ FOOTER = """
   1/partition — the scheduler owns retry/latency skew at item
   granularity — while replay/cache-backed work-lists auto-batch to
   ~n/(3*parallelism), which took the 10k-chapter sf1 gate row from
-  177.8 s to 11.8 s (value-match unchanged); an explicit
+  177.8 s to 11.8 s (value-match unchanged). Replay now makes one
+  chunk per core, ceil(n/parallelism) chapters each, so the fetch runs
+  in one wave and each core pays the task setup once; an explicit
   `chapters_per_partition` always wins.
 - Zipfian-vocabulary tokenizer stress (r9,
   `scripts/zipf_vocab_stress.py`; closes the r8 "vocabulary-degenerate

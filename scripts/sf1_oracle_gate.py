@@ -487,7 +487,7 @@ SCALED_FIXTURE = {
         _scaled_ingest_datasource,
         _scaled_ingest_oracle,
         f"fixture-{FIXTURE_N_CHAPTERS}-chapters (DataSource, replay "
-        "auto-batched ~n/(3*parallelism))",
+        "one chunk per core)",
     ),
     "markdown_html": (
         _scaled_markdown_html,

@@ -12,7 +12,7 @@ from cuttlefish_spark.sources.adapters import dispatch_replay
 
 def test_write_keyed_json_one_file_per_key(spark, tmp_path):
     out = str(tmp_path / "keyed")
-    df = dispatch_replay(spark).filter("status = 'OK'")
+    df = dispatch_replay(spark).filter("status = 'OK'").coalesce(1)
     write_keyed_json(df, out)
     files = sorted(os.listdir(out))
     assert files == ["london.json", "newyork.json", "stlouis.json"]
@@ -25,7 +25,7 @@ def test_write_keyed_json_replace_mode(spark, tmp_path):
     """Re-running replaces outputs (reference overwrite semantics,
     api-runner.rkt:50-51)."""
     out = str(tmp_path / "keyed2")
-    df = dispatch_replay(spark).filter("status = 'OK'")
+    df = dispatch_replay(spark).filter("status = 'OK'").coalesce(1)
     write_keyed_json(df, out)
     first = os.path.getmtime(f"{out}/london.json")
     write_keyed_json(df, out)
@@ -33,25 +33,55 @@ def test_write_keyed_json_replace_mode(spark, tmp_path):
     assert len(json.load(open(f"{out}/london.json"))) == 3
 
 
-def test_write_keyed_json_key_spread_over_partitions(spark, tmp_path):
-    """A key whose rows arrive in every one of 16 round-robin input
-    partitions is still written once, with all its events, and the
-    returned per-key row counts are right."""
-    rows = [("k0", f"e{i}", i) for i in range(64)] + [("k1", "only", 0)]
-    df = (
-        spark.createDataFrame(rows, "chapter_id string, event_id string, v long")
-        .coalesce(1)
-        .repartition(16)
-    )
+def _spread_frame(spark):
+    """Key k0's rows in every one of 4 round-robin partitions; k1 in one."""
+    rows = [("k0", f"e{i}", "OK", None) for i in range(16)] + [("k1", "only", "OK", None)]
+    schema = "chapter_id string, event_id string, status string, error string"
+    df = spark.createDataFrame(rows, schema).coalesce(1).repartition(4)
     spread = [p for p in df.rdd.glom().collect() if any(r.chapter_id == "k0" for r in p)]
-    assert len(spread) == 16
+    assert len(spread) == 4
+    return df
 
-    out = str(tmp_path / "spread")
-    counts = write_keyed_json(df, out)
-    assert counts == {"k0": 64, "k1": 1}
-    assert sorted(os.listdir(out)) == ["k0.json", "k1.json"]  # no tmp left
-    k0 = json.loads((tmp_path / "spread" / "k0.json").read_text())
-    assert k0 == {f"e{i}": {"event_id": f"e{i}", "v": i} for i in range(64)}
+
+def test_write_keyed_json_key_spread_over_partitions_raises(spark, tmp_path, monkeypatch):
+    """The sink writes each partition's keys where they sit, so a key
+    whose rows arrive from several partitions is an error naming that
+    key, and run_pipeline appends no audit for the run."""
+    import pytest
+
+    import cuttlefish_spark.operators.ingest as ingest
+    from cuttlefish_spark.run import run_pipeline
+
+    with pytest.raises(ValueError, match="k0") as err:
+        write_keyed_json(_spread_frame(spark), str(tmp_path / "spread"))
+    assert "k1" not in str(err.value)
+
+    chapters = tmp_path / "chapters.json"
+    chapters.write_text("{}")
+    monkeypatch.setattr(ingest, "datasource_canonical",
+                        lambda spark, **kw: _spread_frame(spark))
+    with pytest.raises(ValueError, match="k0"):
+        run_pipeline(spark, config={
+            "chapter-json-file": str(chapters), "json-out-path": str(tmp_path / "out"),
+            "logfile-path": str(tmp_path / "logs")})
+    assert not (tmp_path / "logs" / "cuttlefish.log").exists()
+
+
+def test_write_keyed_json_returns_audit_per_key(spark, tmp_path):
+    """One (key, status, n, error) per key from the write job: OK keys
+    count the events in their file, ERROR keys their rows, and only OK
+    keys get a file."""
+    rows = [("a", "e1", "OK", None), ("a", "e2", "OK", None),
+            ("b", None, "ERROR", "Couldn't fetch b: 404")]
+    df = spark.createDataFrame(
+        rows, "chapter_id string, event_id string, status string, error string"
+    ).coalesce(1)
+    out = tmp_path / "audit"
+    assert sorted(write_keyed_json(df, str(out))) == [
+        ("a", "OK", 2, None), ("b", "ERROR", 1, "Couldn't fetch b: 404")]
+    assert sorted(os.listdir(out)) == ["a.json"]
+    assert json.loads((out / "a.json").read_text()) == {
+        "e1": {"event_id": "e1"}, "e2": {"event_id": "e2"}}
 
 
 def test_write_keyed_json_counts_events_in_file(spark, tmp_path):
@@ -59,9 +89,12 @@ def test_write_keyed_json_counts_events_in_file(spark, tmp_path):
     returned WROTE: count is the number of events in the file, not the
     number of rows."""
     rows = [("c1", "e1", 1), ("c1", "e1", 1), ("c1", "e2", 2)]
-    df = spark.createDataFrame(rows, "chapter_id string, event_id string, v long")
+    df = spark.createDataFrame(
+        [r + ("OK", None) for r in rows],
+        "chapter_id string, event_id string, v long, status string, error string",
+    ).coalesce(1)
     out = tmp_path / "dup"
     counts = write_keyed_json(df, str(out))
     events = json.loads((out / "c1.json").read_text())
     assert sorted(events) == ["e1", "e2"]
-    assert counts == {"c1": 2}
+    assert counts == [("c1", "OK", 2, None)]
