@@ -4,22 +4,22 @@ Parity: /root/reference/private/workers/facebook.rkt:30-32 renders the
 event description from markdown and wraps it in
 `<div class="event-api-content">`.
 
-This is the engine's one genuinely-Python scalar UDF (SURVEY.md §4
-"custom Spark work" item 2), so it is a vectorized `pandas_udf`: Arrow
-batches in/out, one Python call per ~10k rows, not per row. If the
-`markdown` package is importable it renders full CommonMark-ish
-markdown; otherwise a deterministic minimal subset (headings, bold,
-emphasis, links, paragraphs) keeps behavior reproducible in this
-container.
+`render_markdown` is a plain per-row function: the chapter fetch task
+calls it on each Facebook description as it converts the payload
+(sources.adapters). For columns, `markdown_to_html` and
+`markdown_to_html_minimal` wrap the renderers in a vectorized
+`pandas_udf` (Arrow batches in/out, one Python call per ~10k rows).
+The wrappers are built on first use, so importing this module, as
+every fetch task does, does not import pandas. If the `markdown`
+package is importable it renders full CommonMark-ish markdown;
+otherwise a deterministic minimal subset (headings, bold, emphasis,
+links, paragraphs) keeps behavior reproducible in this container.
 """
 
-from __future__ import annotations
-
+import functools
 import re
 
-import pandas as pd
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
+from pyspark.sql import Column
 
 try:  # pragma: no cover - depends on container contents
     import markdown as _markdown_lib
@@ -56,9 +56,9 @@ def render_markdown(text: str | None) -> str | None:
     return _WRAPPER.format(body)
 
 
-@pandas_udf(StringType())
-def markdown_to_html(texts: pd.Series) -> pd.Series:
-    return texts.map(render_markdown)
+def markdown_to_html(col: Column) -> Column:
+    """`render_markdown` over a column, as a pandas_udf."""
+    return _pandas_udf(render_markdown)(col)
 
 
 def render_markdown_minimal(text: str | None) -> str | None:
@@ -74,9 +74,22 @@ def render_markdown_minimal(text: str | None) -> str | None:
     return _WRAPPER.format(_render_minimal(text))
 
 
-@pandas_udf(StringType())
-def markdown_to_html_minimal(texts: pd.Series) -> pd.Series:
-    return texts.map(render_markdown_minimal)
+def markdown_to_html_minimal(col: Column) -> Column:
+    """`render_markdown_minimal` over a column, as a pandas_udf."""
+    return _pandas_udf(render_markdown_minimal)(col)
+
+
+@functools.cache
+def _pandas_udf(render):
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.types import StringType
+
+    @pandas_udf(StringType())
+    def render_series(texts: pd.Series) -> pd.Series:
+        return texts.map(render)
+
+    return render_series
 
 
 # Committed markdown fixture corpus for the `markdown_html` query — one

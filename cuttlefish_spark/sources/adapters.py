@@ -29,11 +29,15 @@ intentional non-bug-parity.
 
 from __future__ import annotations
 
+import re
+from datetime import datetime, timedelta, timezone
+from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cuttlefish_spark.functions.markdown import markdown_to_html
+from cuttlefish_spark.functions.markdown import markdown_to_html, render_markdown
 from cuttlefish_spark.sources import fixtures
 
 VENUE_SCHEMA = T.StructType(
@@ -73,6 +77,229 @@ CANONICAL_SCHEMA = T.StructType(
         T.StructField("photos", T.ArrayType(PHOTO_SCHEMA)),
     ]
 )
+
+# What every fetch yields per row: the canonical record plus the Either
+# columns (README.md:30-42). ERROR rows carry null event fields.
+FETCH_SCHEMA = T.StructType(
+    CANONICAL_SCHEMA.fields
+    + [T.StructField("status", T.StringType()), T.StructField("error", T.StringType())]
+)
+
+# The flat record the `{id}.json` files and the golden ingest frames
+# carry (`flat_record`).
+FLAT_DDL = (
+    "chapter_id string, event_id string, url string, time long, utc_offset long, "
+    "title string, description string, venue_city string, venue_postal string, "
+    "venue_lon double, venue_lat double, n_photos int, status string, error string"
+)
+
+_EPOCH = datetime(1970, 1, 1, tzinfo=timezone.utc)
+_MS = timedelta(milliseconds=1)
+_DECIMAL = re.compile(r"[+-]?([0-9]+\.?[0-9]*|\.[0-9]+)([eE][+-]?[0-9]+)?")
+_FB_TIME = re.compile(
+    r"([0-9]{4})-([0-9]{2})-([0-9]{2})T([0-9]{2}):([0-9]{2}):([0-9]{2})[+-][0-9]{4}"
+)
+_FB_OFFSET = re.compile(r"([+-])([0-9]{2})([0-9]{2})$")
+_LOCAL_TIME = re.compile(
+    r"([0-9]{4})-([0-9]{1,2})-([0-9]{1,2})"
+    r"(?:[T ]([0-9]{1,2})(?::([0-9]{1,2})(?::([0-9]{1,2})(?:\.([0-9]{1,9}))?)?)?)?"
+)
+
+
+def _obj(v) -> dict:
+    """A JSON object, or {} for anything else: a missing or wrong-typed
+    path reads as null fields (hash.rkt:30-35)."""
+    return v if isinstance(v, dict) else {}
+
+
+def _str(v) -> str | None:
+    """A string field: a JSON string, or the decimal text of a JSON
+    integer (an id sent as a number keeps its file key); else null."""
+    if isinstance(v, str):
+        return v
+    if isinstance(v, int) and not isinstance(v, bool):
+        return str(v)
+    return None
+
+
+def _long(v) -> int | None:
+    if isinstance(v, int) and not isinstance(v, bool) and -(2**63) <= v < 2**63:
+        return v
+    return None
+
+
+def _double(v) -> float | None:
+    """A JSON number, or a string holding a decimal one (Eventbrite
+    sends coordinates as strings); else null."""
+    if isinstance(v, str) and _DECIMAL.fullmatch(v.strip()):
+        return float(v)
+    if isinstance(v, (int, float)) and not isinstance(v, bool):
+        try:
+            return float(v)
+        except OverflowError:
+            return None
+    return None
+
+
+def _millis(dt: datetime) -> int:
+    return (dt - _EPOCH) // _MS
+
+
+def _venue(name, a1, a2, country, city, postal, lon, lat) -> dict:
+    return {
+        "name": _str(name), "address1": _str(a1), "address2": _str(a2),
+        "country": _str(country), "city": _str(city), "postalCode": _str(postal),
+        "lon": _double(lon), "lat": _double(lat),
+    }
+
+
+def convert_meetup(e: dict) -> dict:
+    """meetup.rkt:39-59: rename (link->url, name->title,
+    utc_offset->utcOffset, venue.zip->postalCode), epoch pass-through
+    (meetup.rkt:43-44), photo list (meetup.rkt:55-58, width/height
+    null). A `photo_sample` that is not a list of objects reads empty."""
+    v = _obj(e.get("venue"))
+    sample = _obj(e.get("photo_album")).get("photo_sample")
+    if not isinstance(sample, list) or any(p is not None and not isinstance(p, dict)
+                                           for p in sample):
+        sample = []
+    return {
+        "event_id": _str(e.get("id")),
+        "url": _str(e.get("link")),
+        "time": _long(e.get("time")),
+        "utcOffset": _long(e.get("utc_offset")),
+        "title": _str(e.get("name")),
+        "description": _str(e.get("description")),
+        "venue": _venue(v.get("name"), v.get("address_1"), v.get("address_2"),
+                        v.get("country"), v.get("city"), v.get("zip"),
+                        v.get("lon"), v.get("lat")),
+        "photos": [{"url": _str(_obj(p).get("photo_link")), "width": None, "height": None}
+                   for p in sample],
+    }
+
+
+def _facebook_time(start: str | None) -> int | None:
+    """`yyyy-MM-dd'T'HH:mm:ss±HHMM` -> epoch millis; anything else
+    (a `Z` suffix, fractions, a colon in the offset) reads null."""
+    m = _FB_TIME.fullmatch(start or "")
+    off = _FB_OFFSET.search(start or "")
+    if m is None or int(off.group(2)) * 60 + int(off.group(3)) > 18 * 60 or int(off.group(3)) > 59:
+        return None
+    sign = -1 if off.group(1) == "-" else 1
+    tz = timezone(sign * timedelta(hours=int(off.group(2)), minutes=int(off.group(3))))
+    try:
+        return _millis(datetime(*map(int, m.groups()), tzinfo=tz))
+    except ValueError:
+        return None
+
+
+def convert_facebook(e: dict) -> dict:
+    """facebook.rkt:35-55: ISO8601±HHMM parse + offset split
+    (facebook.rkt:22-28; the offset is read off the string's tail even
+    when the time does not parse), url synthesis (facebook.rkt:41),
+    markdown description -> HTML (facebook.rkt:30-32,45), photos always
+    null (facebook.rkt:55)."""
+    event_id = _str(e.get("id"))
+    start = _str(e.get("start_time"))
+    off = _FB_OFFSET.search(start or "")
+    place = _obj(e.get("place"))
+    loc = _obj(place.get("location"))
+    return {
+        "event_id": event_id,
+        "url": None if event_id is None else "https://facebook.com/" + event_id,
+        "time": _facebook_time(start),
+        "utcOffset": None if off is None else (-1 if off.group(1) == "-" else 1)
+        * (int(off.group(2)) * 3600 + int(off.group(3)) * 60) * 1000,
+        "title": _str(e.get("name")),
+        "description": render_markdown(_str(e.get("description"))),
+        "venue": _venue(place.get("name"), loc.get("street"), None, loc.get("country"),
+                        loc.get("city"), loc.get("zip"), loc.get("longitude"),
+                        loc.get("latitude")),
+        "photos": None,
+    }
+
+
+def _local_time(s: str | None) -> datetime | None:
+    """A naive `yyyy-m-d[(T| )h[:m[:s[.fraction]]]]` wall-clock time."""
+    m = _LOCAL_TIME.fullmatch((s or "").strip())
+    if m is None:
+        return None
+    *fields, frac = m.groups()
+    micros = int((frac or "0")[:6].ljust(6, "0"))
+    try:
+        return datetime(*(int(f or 0) for f in fields), micros)
+    except ValueError:
+        return None
+
+
+def _zone(name: str | None) -> ZoneInfo | None:
+    """The IANA zone `name`, or None when it is unknown or malformed."""
+    try:
+        return ZoneInfo(name) if name else None
+    except (ZoneInfoNotFoundError, ValueError, OSError):
+        return None
+
+
+def convert_eventbrite(e: dict) -> dict:
+    """eventbrite.rkt:51-85: naive-local + IANA zone -> DST-aware UTC
+    epoch millis and offset (eventbrite.rkt:54-66; a time in a DST gap
+    moves forward by the gap, one in an overlap takes the earlier
+    offset); string lat/lon read as numbers; keyed by event_id (NOT by
+    timestamp — divergence from the eventbrite.rkt:68 collision bug,
+    see module docstring). An unknown zone or unparseable local time
+    gives null time and utcOffset."""
+    start = _obj(e.get("start"))
+    local = _local_time(_str(start.get("local")))
+    zone = _zone(_str(start.get("timezone")))
+    time = offset = None
+    if local is not None and zone is not None:
+        at = local.replace(tzinfo=zone)
+        time, offset = _millis(at), at.utcoffset() // _MS
+    v = _obj(e.get("venue"))
+    a = _obj(v.get("address"))
+    return {
+        "event_id": _str(e.get("id")),
+        "url": _str(e.get("url")),
+        "time": time,
+        "utcOffset": offset,
+        "title": _str(_obj(e.get("name")).get("text")),
+        "description": _str(_obj(e.get("description")).get("text")),
+        "venue": _venue(v.get("name"), a.get("address_1"), a.get("address_2"),
+                        a.get("country"), a.get("city"), a.get("postal_code"),
+                        a.get("longitude"), a.get("latitude")),
+        "photos": None,
+    }
+
+
+CONVERTERS = {
+    "meetup": convert_meetup,
+    "facebook": convert_facebook,
+    "eventbrite": convert_eventbrite,
+}
+
+
+def flat_record(rec: dict) -> dict:
+    """A canonical row (FETCH_SCHEMA) -> the flat record (FLAT_DDL):
+    venue city/postal code/coordinates lifted out, photos counted. The
+    `{id}.json` files and the golden ingest frames both carry it."""
+    venue = rec.get("venue") or {}
+    return {
+        "chapter_id": rec["chapter_id"],
+        "event_id": rec.get("event_id"),
+        "url": rec.get("url"),
+        "time": rec.get("time"),
+        "utc_offset": rec.get("utcOffset"),
+        "title": rec.get("title"),
+        "description": rec.get("description"),
+        "venue_city": venue.get("city"),
+        "venue_postal": venue.get("postalCode"),
+        "venue_lon": venue.get("lon"),
+        "venue_lat": venue.get("lat"),
+        "n_photos": len(rec.get("photos") or []),
+        "status": rec["status"],
+        "error": rec.get("error"),
+    }
+
 
 _MEETUP_RAW_SCHEMA = T.StructType(
     [
@@ -198,7 +425,7 @@ _EVENTBRITE_RAW_SCHEMA = T.StructType(
 )
 
 
-def _venue(name: Column, a1: Column, a2: Column, country: Column, city: Column,
+def _spark_venue(name: Column, a1: Column, a2: Column, country: Column, city: Column,
            postal: Column, lon: Column, lat: Column) -> Column:
     return F.struct(
         name.alias("name"),
@@ -232,7 +459,7 @@ def normalize_meetup(r: Column) -> dict[str, Column]:
         "utcOffset": r["utc_offset"].cast("long"),
         "title": r["name"],
         "description": r["description"],
-        "venue": _venue(
+        "venue": _spark_venue(
             r["venue"]["name"], r["venue"]["address_1"], r["venue"]["address_2"],
             r["venue"]["country"], r["venue"]["city"], r["venue"]["zip"],
             r["venue"]["lon"], r["venue"]["lat"],
@@ -259,7 +486,7 @@ def normalize_facebook(r: Column) -> dict[str, Column]:
         "utcOffset": offset_ms.cast("long"),
         "title": r["name"],
         "description": markdown_to_html(r["description"]),
-        "venue": _venue(
+        "venue": _spark_venue(
             r["place"]["name"], r["place"]["location"]["street"],
             F.lit(None).cast("string"), r["place"]["location"]["country"],
             r["place"]["location"]["city"], r["place"]["location"]["zip"],
@@ -283,7 +510,7 @@ def normalize_eventbrite(r: Column) -> dict[str, Column]:
         "utcOffset": (F.unix_millis(local_ts) - F.unix_millis(utc_ts)).cast("long"),
         "title": r["name"]["text"],
         "description": r["description"]["text"],
-        "venue": _venue(
+        "venue": _spark_venue(
             r["venue"]["name"], r["venue"]["address"]["address_1"],
             r["venue"]["address"]["address_2"], r["venue"]["address"]["country"],
             r["venue"]["address"]["city"], r["venue"]["address"]["postal_code"],

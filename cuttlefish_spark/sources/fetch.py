@@ -15,8 +15,9 @@ three workers:
 - Errors mirror the worker Either contract (meetup.rkt:72-80): HTTP
   status errors -> "Couldn't fetch {id}: {code}" (the 404 path shown
   in README.md:66-72), read errors -> "Could not read data for {id}",
-  undecodable bodies, and events that are not objects or have no id
-  -> "Couldn't format {id} into correct JSON".
+  undecodable bodies, and events that are not objects or whose id is
+  not a string or an integer -> "Couldn't format {id} into correct
+  JSON".
 
 The transport is injectable: `http_transport` is the live stdlib
 urllib GET; tests (and the replay DataSource mode) pass
@@ -78,7 +79,10 @@ def build_request(
     raise ValueError(f"No adapter found: {adapter}")
 
 
-def http_transport(url: str, params: dict, timeout: float = 30.0) -> tuple[int, dict, str]:
+_HTTP_TIMEOUT_S = 30.0
+
+
+def http_transport(url: str, params: dict) -> tuple[int, dict, str]:
     """Live transport: stdlib urllib GET. HTTP status errors return as
     (code, headers, '') so the caller owns the Either contract;
     network/read failures raise OSError for the caller's read-error
@@ -90,7 +94,7 @@ def http_transport(url: str, params: dict, timeout: float = 30.0) -> tuple[int, 
     full = f"{url}?{urlencode(params)}" if params else url
     req = Request(full, headers={"Accept": "application/json"})
     try:
-        with urlopen(req, timeout=timeout) as resp:  # noqa: S310 - https APIs only
+        with urlopen(req, timeout=_HTTP_TIMEOUT_S) as resp:  # noqa: S310 - https APIs only
             return resp.status, dict(resp.headers), resp.read().decode("utf-8")
     except HTTPError as e:
         return e.code, dict(e.headers or {}), ""
@@ -168,8 +172,10 @@ def fetch_events(
         return None, f"Couldn't format {service_id} into correct JSON"
     events = _envelope(adapter, doc)
     # Events are keyed by id in the chapter's file, so an event that is
-    # not an object or has no id cannot be written.
-    if events is None or not all(isinstance(e, dict) and e.get("id") is not None
-                                 for e in events):
+    # not an object, or whose id is not a string or an integer, cannot
+    # be written.
+    ids = [e.get("id") if isinstance(e, dict) else None for e in events or ()]
+    if events is None or not all(isinstance(i, (str, int)) and not isinstance(i, bool)
+                                 for i in ids):
         return None, f"Couldn't format {service_id} into correct JSON"
     return events, None

@@ -18,15 +18,18 @@ from __future__ import annotations
 import time
 
 
+# Back off when fewer requests than this remain (meetup.rkt:19-26).
+MIN_REMAINING = 3
+
+
 class TokenBucket:
     """Token-bucket limiter with header-driven adaptive backoff."""
 
     def __init__(self, rate_per_sec: float = 5.0, burst: int = 5,
-                 min_remaining: int = 3, clock=time.monotonic, sleep=time.sleep):
+                 clock=time.monotonic, sleep=time.sleep):
         self.rate = rate_per_sec
         self.capacity = float(burst)
         self.tokens = float(burst)
-        self.min_remaining = min_remaining
         self._clock = clock
         self._sleep = sleep
         self._last = clock()
@@ -50,12 +53,12 @@ class TokenBucket:
 
     def update_from_headers(self, headers: dict) -> None:
         """Adaptive backoff from API headers (update-throttle,
-        meetup.rkt:19-26): when remaining < min_remaining, pause
+        meetup.rkt:19-26): when remaining < MIN_REMAINING, pause
         reset+2 seconds."""
         try:
             remaining = int(headers.get("X-Ratelimit-Remaining", ""))
             reset = float(headers.get("X-Ratelimit-Reset", ""))
         except (TypeError, ValueError):
             return
-        if remaining < self.min_remaining:
+        if remaining < MIN_REMAINING:
             self._backoff_until = self._clock() + reset + 2.0

@@ -191,7 +191,7 @@ def test_fetch_events_ok_and_throttle_update():
         naps.append(s)
         clock_now[0] += s
 
-    # remaining below min_remaining => next acquire backs off reset+2s
+    # remaining below MIN_REMAINING => next acquire backs off reset+2s
     transport = FixtureTransport(ratelimit_remaining=1, ratelimit_reset=5.0)
     bucket = TokenBucket(rate_per_sec=1000.0, clock=clock, sleep=sleep)
     events, error = fetch_events(
@@ -632,3 +632,70 @@ def test_fetch_rows_sends_config_tokens(monkeypatch):
                 ("london", "London", "eventbrite", "pwl-london", "2417467656")]
     list(_fetch_rows(chapters, {"transport": "live", "config": cfg}))
     assert [p.get("access_token", p.get("token")) for _, p in calls] == ["fbtok", "ebtok"]
+
+
+def _replay_payload(spark, monkeypatch, adapter: str, events: list) -> dict:
+    """dispatch_replay over the fixture chapter of `adapter`, with its
+    replayed payload holding `events`; rows by event id."""
+    from cuttlefish_spark.sources import fixtures
+
+    table, key, body, chapter = {
+        "meetup": ("MEETUP_RAW", "papers-we-love", events, 0),
+        "facebook": ("FACEBOOK_RAW", "1776622612568197", {"data": events}, 1),
+        "eventbrite": ("EVENTBRITE_RAW", "2417467656", {"events": events}, 2),
+    }[adapter]
+    monkeypatch.setitem(getattr(fixtures, table), key, body)
+    out = dispatch_replay(spark, [fixtures.CHAPTERS[chapter]]).collect()
+    return {r["event_id"]: r for r in out}
+
+
+def test_convert_wrong_typed_field_reads_null(spark, monkeypatch):
+    """A field of the wrong JSON type reads null; the event's other
+    fields survive."""
+    rows = _replay_payload(spark, monkeypatch, "meetup", [
+        {"id": "w1", "time": "soon", "utc_offset": -14400000, "name": "Kept",
+         "venue": {"city": "New York", "lon": [1]}}])
+    e = rows["w1"]
+    assert e["time"] is None
+    assert e["utcOffset"] == -14400000 and e["title"] == "Kept"
+    assert e["venue"]["city"] == "New York" and e["venue"]["lon"] is None
+
+
+def test_convert_numeric_event_id_is_its_string(spark, monkeypatch):
+    """An integer id becomes its decimal string: it is the file key."""
+    rows = _replay_payload(spark, monkeypatch, "meetup", [{"id": 7, "name": "Seven"}])
+    assert list(rows) == ["7"] and rows["7"]["title"] == "Seven"
+    rows = _replay_payload(spark, monkeypatch, "facebook", [{"id": 186112975332637}])
+    assert rows["186112975332637"]["url"] == "https://facebook.com/186112975332637"
+
+
+def test_convert_non_object_photo_empties_photos(spark, monkeypatch):
+    """A `photo_sample` element that is not an object empties the
+    photos; a null element is a photo with null fields."""
+    rows = _replay_payload(spark, monkeypatch, "meetup", [
+        {"id": "p1", "photo_album": {"photo_sample": [{"photo_link": "u1"}, 3]}},
+        {"id": "p2", "photo_album": {"photo_sample": [None, {"photo_link": "u2"}]}}])
+    assert rows["p1"]["photos"] == []
+    assert [p["url"] for p in rows["p2"]["photos"]] == [None, "u2"]
+
+
+def test_convert_facebook_z_time_reads_null(spark, monkeypatch):
+    """Facebook times carry a ±HHMM offset; a `Z` time has neither a
+    time nor an offset."""
+    rows = _replay_payload(spark, monkeypatch, "facebook", [
+        {"id": "z1", "start_time": "2018-05-15T19:00:00Z"},
+        {"id": "z2", "start_time": "2018-05-15T19:00:00+0530"}])
+    assert rows["z1"]["time"] is None and rows["z1"]["utcOffset"] is None
+    assert rows["z2"]["time"] == 1526391000000 and rows["z2"]["utcOffset"] == 19800000
+
+
+def test_convert_eventbrite_local_without_seconds(spark, monkeypatch):
+    """An Eventbrite local time without seconds parses; 01:30 on the
+    2018-11-04 overlap in New York takes the earlier offset (EDT), and
+    02:30 in the 2018-03-11 gap moves forward by the gap."""
+    start = {"timezone": "America/New_York"}
+    rows = _replay_payload(spark, monkeypatch, "eventbrite", [
+        {"id": "o1", "start": {**start, "local": "2018-11-04 01:30"}},
+        {"id": "g1", "start": {**start, "local": "2018-03-11T02:30:00"}}])
+    assert rows["o1"]["time"] == 1541309400000 and rows["o1"]["utcOffset"] == -14400000
+    assert rows["g1"]["time"] == 1520753400000 and rows["g1"]["utcOffset"] == -18000000
