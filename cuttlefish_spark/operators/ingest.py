@@ -2,10 +2,13 @@
 markdown pandas_udf.
 
 The three pipeline queries share one fetch body
-(`datasource._fetch_rows`) and one convert (`adapters.normalize_raw`);
-they differ only in where the fetch runs: on the driver
-(ingest_normalize), in batch fetch tasks (ingest_datasource), or in
-microbatches of the streaming reader (streaming_datasource_ingest).
+(`datasource._fetch_rows`, which normalizes each payload in the task
+that fetched it) and one flattener (`adapters.flat_record`); they
+differ only in where the fetch runs: on the driver (ingest_normalize),
+in batch fetch tasks (ingest_datasource), or in microbatches of the
+streaming reader (streaming_datasource_ingest). Each builds its
+canonical frame with `createDataFrame(rows, FETCH_SCHEMA)` and
+flattens it with `_flat_frame`.
 All three are checked against one GOLDEN oracle: the fixture inputs
 are fixed, so the exact expected output is stated as a SQL VALUES
 block (the reference's own test strategy — golden capture,
@@ -18,12 +21,18 @@ md5(html) so the golden stays inlineable.
 
 from __future__ import annotations
 
+from pyspark import RDD
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cuttlefish_spark.io import load_table
 from cuttlefish_spark.registry import query
-from cuttlefish_spark.sources.adapters import dispatch_replay, normalize_raw
+from cuttlefish_spark.sources.adapters import (
+    FETCH_SCHEMA,
+    FLAT_DDL,
+    dispatch_replay,
+    flat_record,
+)
 
 
 # Golden expected output of all three pipeline queries (driver-side
@@ -68,39 +77,25 @@ def ingest_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ignores sf_dir: inputs are the inline golden fixtures
     (sources.fixtures), mirroring eventbrite.rkt:123-146."""
-    return _flat_canonical(dispatch_replay(spark))
+    return _flat_frame(dispatch_replay(spark))
 
 
-def _flat_canonical(out: DataFrame) -> DataFrame:
-    """Flatten the venue struct for a stable, hash-friendly shape; keep
-    nested photos (as a count) to exercise array<struct> end-to-end."""
-    return out.select(
-        "chapter_id",
-        "event_id",
-        "url",
-        "time",
-        F.col("utcOffset").alias("utc_offset"),
-        "title",
-        "description",
-        F.col("venue.city").alias("venue_city"),
-        F.col("venue.postalCode").alias("venue_postal"),
-        F.col("venue.lon").alias("venue_lon"),
-        F.col("venue.lat").alias("venue_lat"),
-        F.size(F.coalesce(F.col("photos"), F.array())).alias("n_photos"),
-        "status",
-        "error",
-    )
+def _flat_frame(df: DataFrame) -> DataFrame:
+    """A canonical frame (FETCH_SCHEMA) -> the flat, hash-friendly
+    golden frame (FLAT_DDL) through the one flattener,
+    `adapters.flat_record`, which also shapes the `{id}.json` files."""
+    rows = df.rdd.map(lambda r: flat_record(r.asDict(recursive=True)))
+    return df.sparkSession.createDataFrame(rows, FLAT_DDL)
 
 
 @query("ingest_datasource", layer="A", oracle=_INGEST_GOLDEN_SQL)
 def ingest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same pipeline as ingest_normalize, but the fetch runs in Spark
-    tasks on executors, one per work-list chunk (fetch_raw), so Spark's
+    tasks on executors, one per work-list chunk (fetch_records), so Spark's
     scheduler owns the fan-out the reference hand-built as a 3-thread
     pool (api-runner.rkt:118-168; SURVEY.md §4 custom-work item 1).
-    The raw rows then run the same convert as ingest_normalize
-    (canonical_from_raw) — fetch and convert stay split exactly like
-    worker-* vs convert-json in the reference."""
+    Each task normalizes the payloads it fetched, as the reference's
+    worker does."""
     return datasource_canonical(spark)
 
 
@@ -131,26 +126,24 @@ def chapter_chunks(
     return [items[i : i + per] for i in range(0, len(items), per)]
 
 
-def fetch_raw(
+def fetch_records(
     spark: SparkSession,
     chapters_path: str | None = None,
     transport: str = "replay",
     chapters_per_partition: int | None = None,
     config: dict | None = None,
-) -> DataFrame:
-    """The raw fetch frame (RAW_FETCH_DDL), lazy: the work-list at
-    `chapters_path` (the golden fixture chapters without one) is split
-    by `chapter_chunks`, and each chunk is one Spark partition running
-    `_fetch_rows` with its own TokenBucket and the run's `config` (the
-    API tokens). No DataSource V2 planning is involved; going through a
-    Python DataSource cost 2.2 s of Spark's static Python-DataSource
-    lookup plus 4.3 s of create/plan round-trips before the first fetch
-    task, measured on 4 cores. Every chapter's rows stay in its chunk's
-    partition, and the fetch runs inside the job of whatever reads the
-    frame, so read it once (the reference likewise fetches once per
-    chapter, api-runner.rkt:129-143)."""
+) -> RDD:
+    """The chapter fetch as a lazy RDD of canonical rows (FETCH_SCHEMA
+    dicts): the work-list at `chapters_path` (the golden fixture
+    chapters without one) is split by `chapter_chunks`, and each chunk
+    is one partition running `_fetch_rows` (fetch, then normalize) with
+    its own TokenBucket and the run's `config` (the API tokens). Every
+    chapter's rows stay in its chunk's partition, and the fetch runs
+    inside the job of whatever reads the RDD, so read it once (the
+    reference likewise fetches once per chapter,
+    api-runner.rkt:129-143)."""
     from cuttlefish_spark.sources.chapters import load_chapters
-    from cuttlefish_spark.sources.datasource import RAW_FETCH_DDL, _fetch_rows
+    from cuttlefish_spark.sources.datasource import _fetch_rows
 
     sc = spark.sparkContext
     chunks = chapter_chunks(
@@ -158,10 +151,9 @@ def fetch_raw(
         chapters_per_partition,
     )
     options = {"transport": transport, "config": config}
-    rows = sc.parallelize(chunks, max(1, len(chunks))).flatMap(
+    return sc.parallelize(chunks, max(1, len(chunks))).flatMap(
         lambda chunk: _fetch_rows(chunk, options)
     )
-    return spark.createDataFrame(rows, RAW_FETCH_DDL)
 
 
 def datasource_canonical(
@@ -171,24 +163,14 @@ def datasource_canonical(
     chapters_per_partition: int | None = None,
     config: dict | None = None,
 ) -> DataFrame:
-    """Batch fetch (fetch_raw) -> canonical frame, parameterized by
-    work-list, transport, task batching and the run's config — the
-    reusable body behind ingest_datasource and the end-to-end runner
-    (run.run_pipeline). `chapters_per_partition` trades scheduler
-    granularity for per-task overhead; None picks the
-    transport-dependent default of `chapter_chunks`."""
-    return canonical_from_raw(
-        fetch_raw(spark, chapters_path, transport, chapters_per_partition, config)
-    )
-
-
-def canonical_from_raw(raw: DataFrame) -> DataFrame:
-    """Raw fetch rows (RAW_FETCH_DDL) -> the flat golden-schema frame:
-    `adapters.normalize_raw` (the shared convert half) then
-    `_flat_canonical`. Used by datasource_canonical (batch fetch) and
-    streaming_ingest_canonical (the drained stream of the same
-    source's simpleStreamReader)."""
-    return _flat_canonical(normalize_raw(raw))
+    """Batch fetch (fetch_records) -> flat golden-schema frame, lazy,
+    parameterized by work-list, transport, task batching and the run's
+    config — the reusable body behind ingest_datasource.
+    `chapters_per_partition` trades scheduler granularity for per-task
+    overhead; None picks the transport-dependent default of
+    `chapter_chunks`."""
+    rows = fetch_records(spark, chapters_path, transport, chapters_per_partition, config)
+    return _flat_frame(spark.createDataFrame(rows, FETCH_SCHEMA))
 
 
 @query("streaming_datasource_ingest", layer="A", oracle=_INGEST_GOLDEN_SQL)
@@ -199,10 +181,10 @@ def streaming_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream, the chapter work-list served as a rate-limited stream
     of one chapter per microbatch (offset = index into the list,
     checkpointed by the engine; recovery replays readBetweenOffsets
-    over the deterministic fixture transport). The drained raw rows
-    then run the IDENTICAL convert half (canonical_from_raw) as
-    ingest_datasource — same golden oracle, so the driver hash holds
-    the streaming source to the batch fetch.
+    over the deterministic fixture transport). Its rows are the
+    canonical rows of the batch fetch, flattened by the same
+    `_flat_frame` as ingest_datasource — same golden oracle, so the
+    driver hash holds the streaming source to the batch fetch.
 
     Engine contract, measured: availableNow on a simple stream reader
     drains exactly ONE read() slice, so the drain uses the default
@@ -223,7 +205,7 @@ def streaming_ingest_canonical(
     chapters_per_batch: int = 1,
 ) -> DataFrame:
     """readStream(cuttlefish_replay) -> drain (default trigger +
-    processAllAvailable — the multi-batch offset walk) -> convert —
+    processAllAvailable — the multi-batch offset walk) -> flatten —
     the reusable body behind streaming_datasource_ingest and the sf1
     gate's 10k-chapter scaled run (which raises chapters_per_batch so
     the walk is ~20 microbatches, not 10k)."""
@@ -252,10 +234,10 @@ def streaming_ingest_canonical(
         )
         q.processAllAvailable()
         q.stop()
-        raw = spark.table(name).localCheckpoint(eager=True)
+        rows = spark.table(name).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return canonical_from_raw(raw)
+    return _flat_frame(rows)
 
 
 _VIDEOS_GOLDEN_SQL = """

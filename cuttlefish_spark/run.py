@@ -7,12 +7,14 @@ fetch: the driver splits it into one chunk per core (A2-A9) -> adapter
 normalization to the canonical event schema (A10-A18) -> per-chapter
 `{chapter}.json` files under the config's json-out-path (A21,
 api-runner.rkt:39-52) -> WROTE:/ERROR: audit lines appended under
-logfile-path (A23, api-runner.rkt:80-89). A chapter's rows stay in its
-fetch partition, so fetch, convert and write run in the same task, as
-in the reference's worker, and the write returns every chapter's
-audit tuple: a run is one Spark job of one stage with no shuffle.
-Returns the audit frame so callers can assert on it; the CLI prints
-the log lines.
+logfile-path (A23, api-runner.rkt:80-89). The run is
+`sc.parallelize(chunks)` with one Python task per chunk that fetches
+its chapters, converts each payload (`adapters.CONVERTERS`, then
+`flat_record`) and writes their files, as in the reference's worker;
+the write returns every chapter's audit tuple. So a run is one Spark
+job of one stage with no shuffle, and no DataFrame is built until the
+audit frame, which is returned so callers can assert on it; the CLI
+prints the log lines.
 
 Usage: python -m cuttlefish_spark.run [configfile]
 """
@@ -35,27 +37,27 @@ def run_pipeline(
 ) -> DataFrame:
     """Run the whole reference pipeline under `config`; returns the
     per-chapter audit frame (chapter_id, status, n_events, log_line).
+    A chapter that fails anywhere (fetch, an id that is not a safe file
+    name, the write) is an ERROR row; the run goes on.
 
     A missing `chapter-json-file` raises FileNotFoundError, matching
     the reference (an unreadable chapters table aborts the run) — a
     misconfigured run must not silently fetch demo data."""
-    from cuttlefish_spark.operators.ingest import datasource_canonical
+    from cuttlefish_spark.operators.ingest import fetch_records
     from cuttlefish_spark.sinks.json_sink import write_keyed_json
+    from cuttlefish_spark.sources.adapters import flat_record
     from cuttlefish_spark.sources.config import load_config
 
     config = config or load_config(arg=config_arg)
     chapters_path = config["chapter-json-file"]
     if not os.path.exists(chapters_path):
         raise FileNotFoundError(f"chapter-json-file not found: {chapters_path!r}")
-    out = datasource_canonical(
-        spark,
-        chapters_path=chapters_path,
-        transport=transport,
-        config=config,
-    )
+    records = fetch_records(
+        spark, chapters_path=chapters_path, transport=transport, config=config
+    ).map(flat_record)
     audit = sorted(
         (cid, status, n, f"{'WROTE' if status == 'OK' else 'ERROR'}: {cid}")
-        for cid, status, n, _error in write_keyed_json(out, config["json-out-path"])
+        for cid, status, n, _error in write_keyed_json(records, config["json-out-path"])
     )
     append_log(config["logfile-path"], [f"{line} ({n})" for _, _, n, line in audit])
     return spark.createDataFrame(audit, AUDIT_DDL)

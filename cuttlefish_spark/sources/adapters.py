@@ -1,5 +1,5 @@
-"""Source adapters: per-service raw schemas, normalizers to the
-canonical event schema, and the convert step every fetch path shares.
+"""Source adapters: one pure-Python normalizer per service, from the
+raw event dict of its API to the canonical event record.
 
 Reference parity map (all anchors in /root/reference/private):
 - adapter registry / dispatch      api-runner.rkt:19-22, 92-95, 129-147
@@ -12,32 +12,34 @@ Reference parity map (all anchors in /root/reference/private):
 - default-on-missing-path          hash.rkt:30-35 (nullable-everything)
 - Either error values              README.md:30-42, api-runner.rkt:133-147
 
-Fetching lives in sources.datasource (`_fetch_rows`) over the
-transports of sources.fetch: `replay` answers from the inline fixtures
-(the reference's own test strategy — golden capture, no network,
-eventbrite.rkt:123-146), `live` performs the real GET
-(`fetch.http_transport`). Either way the fetch yields raw rows
-(RAW_FETCH_DDL), and `normalize_raw` converts them: per-adapter
-from_json, the normalizers below, and the Either split.
-`dispatch_replay` is the driver-side composition of the two.
+As in the reference, where each worker does the GET and normalizes the
+JSON it got back, the fetch body (`datasource._fetch_rows`) applies
+`ADAPTERS[adapter]` to every event in the task that fetched it and
+yields canonical rows (FETCH_SCHEMA: the record plus the Either
+`status`/`error`). `flat_record` is the one flattener: the `{id}.json`
+files and the golden ingest frames carry its record.
+`dispatch_replay` is the driver-side fetch as a DataFrame.
+
+Lenient reads (hash.rkt:30-35): a missing path or a value of the wrong
+JSON type reads null and the event's other fields survive. A string
+field takes a string or the decimal text of an integer; a coordinate
+takes a number or a string holding a decimal one.
 
 NOTE (design divergence, SURVEY.md §7): the reference keys Eventbrite
 events by computed timestamp, silently dropping simultaneous events
 (eventbrite.rkt:68). We keep `event_id` as the key — documented
 intentional non-bug-parity.
 """
-
 from __future__ import annotations
 
 import re
 from datetime import datetime, timedelta, timezone
 from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from cuttlefish_spark.functions.markdown import markdown_to_html, render_markdown
+from cuttlefish_spark.functions.markdown import render_markdown
 from cuttlefish_spark.sources import fixtures
 
 VENUE_SCHEMA = T.StructType(
@@ -153,7 +155,7 @@ def _venue(name, a1, a2, country, city, postal, lon, lat) -> dict:
     }
 
 
-def convert_meetup(e: dict) -> dict:
+def normalize_meetup(e: dict) -> dict:
     """meetup.rkt:39-59: rename (link->url, name->title,
     utc_offset->utcOffset, venue.zip->postalCode), epoch pass-through
     (meetup.rkt:43-44), photo list (meetup.rkt:55-58, width/height
@@ -178,38 +180,43 @@ def convert_meetup(e: dict) -> dict:
     }
 
 
-def _facebook_time(start: str | None) -> int | None:
-    """`yyyy-MM-dd'T'HH:mm:ss±HHMM` -> epoch millis; anything else
-    (a `Z` suffix, fractions, a colon in the offset) reads null."""
-    m = _FB_TIME.fullmatch(start or "")
-    off = _FB_OFFSET.search(start or "")
-    if m is None or int(off.group(2)) * 60 + int(off.group(3)) > 18 * 60 or int(off.group(3)) > 59:
+def _facebook_offset(start: str) -> int | None:
+    """The ±HHMM tail of a Facebook time in millis, read even when the
+    time itself does not parse."""
+    m = _FB_OFFSET.search(start)
+    if m is None:
         return None
-    sign = -1 if off.group(1) == "-" else 1
-    tz = timezone(sign * timedelta(hours=int(off.group(2)), minutes=int(off.group(3))))
+    return (-1 if m.group(1) == "-" else 1) * (int(m.group(2)) * 60 + int(m.group(3))) * 60000
+
+
+def _facebook_time(start: str, offset: int | None) -> int | None:
+    """`yyyy-MM-dd'T'HH:mm:ss±HHMM` -> epoch millis. Anything else (a
+    `Z` suffix, fractions, a colon in the offset, an offset beyond
+    ±18:00 or with 60 minutes or more) reads null."""
+    m = _FB_TIME.fullmatch(start)
+    if m is None or abs(offset) > 18 * 3600000 or int(start[-2:]) > 59:
+        return None
     try:
-        return _millis(datetime(*map(int, m.groups()), tzinfo=tz))
+        return _millis(datetime(*map(int, m.groups()), tzinfo=timezone.utc)) - offset
     except ValueError:
         return None
 
 
-def convert_facebook(e: dict) -> dict:
+def normalize_facebook(e: dict) -> dict:
     """facebook.rkt:35-55: ISO8601±HHMM parse + offset split
-    (facebook.rkt:22-28; the offset is read off the string's tail even
-    when the time does not parse), url synthesis (facebook.rkt:41),
-    markdown description -> HTML (facebook.rkt:30-32,45), photos always
-    null (facebook.rkt:55)."""
+    (facebook.rkt:22-28), url synthesis (facebook.rkt:41), markdown
+    description -> HTML (facebook.rkt:30-32,45), photos always null
+    (facebook.rkt:55)."""
     event_id = _str(e.get("id"))
-    start = _str(e.get("start_time"))
-    off = _FB_OFFSET.search(start or "")
+    start = _str(e.get("start_time")) or ""
+    offset = _facebook_offset(start)
     place = _obj(e.get("place"))
     loc = _obj(place.get("location"))
     return {
         "event_id": event_id,
         "url": None if event_id is None else "https://facebook.com/" + event_id,
-        "time": _facebook_time(start),
-        "utcOffset": None if off is None else (-1 if off.group(1) == "-" else 1)
-        * (int(off.group(2)) * 3600 + int(off.group(3)) * 60) * 1000,
+        "time": _facebook_time(start, offset),
+        "utcOffset": offset,
         "title": _str(e.get("name")),
         "description": render_markdown(_str(e.get("description"))),
         "venue": _venue(place.get("name"), loc.get("street"), None, loc.get("country"),
@@ -240,7 +247,7 @@ def _zone(name: str | None) -> ZoneInfo | None:
         return None
 
 
-def convert_eventbrite(e: dict) -> dict:
+def normalize_eventbrite(e: dict) -> dict:
     """eventbrite.rkt:51-85: naive-local + IANA zone -> DST-aware UTC
     epoch millis and offset (eventbrite.rkt:54-66; a time in a DST gap
     moves forward by the gap, one in an overlap takes the earlier
@@ -271,10 +278,11 @@ def convert_eventbrite(e: dict) -> dict:
     }
 
 
-CONVERTERS = {
-    "meetup": convert_meetup,
-    "facebook": convert_facebook,
-    "eventbrite": convert_eventbrite,
+# adapter -> normalizer (event dict -> canonical fields)
+ADAPTERS = {
+    "meetup": normalize_meetup,
+    "facebook": normalize_facebook,
+    "eventbrite": normalize_eventbrite,
 }
 
 
@@ -301,279 +309,17 @@ def flat_record(rec: dict) -> dict:
     }
 
 
-_MEETUP_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("link", T.StringType()),
-        T.StructField("time", T.LongType()),
-        T.StructField("utc_offset", T.LongType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("description", T.StringType()),
-        T.StructField(
-            "venue",
-            T.StructType(
-                [
-                    T.StructField("name", T.StringType()),
-                    T.StructField("address_1", T.StringType()),
-                    T.StructField("address_2", T.StringType()),
-                    T.StructField("country", T.StringType()),
-                    T.StructField("city", T.StringType()),
-                    T.StructField("zip", T.StringType()),
-                    T.StructField("lon", T.DoubleType()),
-                    T.StructField("lat", T.DoubleType()),
-                ]
-            ),
-        ),
-        T.StructField(
-            "photo_album",
-            T.StructType(
-                [
-                    T.StructField(
-                        "photo_sample",
-                        T.ArrayType(
-                            T.StructType([T.StructField("photo_link", T.StringType())])
-                        ),
-                    )
-                ]
-            ),
-        ),
-    ]
-)
-
-_FACEBOOK_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("name", T.StringType()),
-        T.StructField("description", T.StringType()),
-        T.StructField("start_time", T.StringType()),
-        T.StructField(
-            "place",
-            T.StructType(
-                [
-                    T.StructField("name", T.StringType()),
-                    T.StructField(
-                        "location",
-                        T.StructType(
-                            [
-                                T.StructField("street", T.StringType()),
-                                T.StructField("country", T.StringType()),
-                                T.StructField("city", T.StringType()),
-                                T.StructField("zip", T.StringType()),
-                                T.StructField("longitude", T.DoubleType()),
-                                T.StructField("latitude", T.DoubleType()),
-                            ]
-                        ),
-                    ),
-                ]
-            ),
-        ),
-    ]
-)
-
-_EVENTBRITE_RAW_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField(
-            "name",
-            T.StructType(
-                [T.StructField("text", T.StringType()), T.StructField("html", T.StringType())]
-            ),
-        ),
-        T.StructField(
-            "description",
-            T.StructType(
-                [T.StructField("text", T.StringType()), T.StructField("html", T.StringType())]
-            ),
-        ),
-        T.StructField(
-            "start",
-            T.StructType(
-                [
-                    T.StructField("timezone", T.StringType()),
-                    T.StructField("local", T.StringType()),
-                    T.StructField("utc", T.StringType()),
-                ]
-            ),
-        ),
-        T.StructField(
-            "venue",
-            T.StructType(
-                [
-                    T.StructField("name", T.StringType()),
-                    T.StructField("latitude", T.StringType()),
-                    T.StructField("longitude", T.StringType()),
-                    T.StructField(
-                        "address",
-                        T.StructType(
-                            [
-                                T.StructField("address_1", T.StringType()),
-                                T.StructField("address_2", T.StringType()),
-                                T.StructField("city", T.StringType()),
-                                T.StructField("region", T.StringType()),
-                                T.StructField("postal_code", T.StringType()),
-                                T.StructField("country", T.StringType()),
-                                T.StructField("latitude", T.StringType()),
-                                T.StructField("longitude", T.StringType()),
-                            ]
-                        ),
-                    ),
-                ]
-            ),
-        ),
-    ]
-)
-
-
-def _spark_venue(name: Column, a1: Column, a2: Column, country: Column, city: Column,
-           postal: Column, lon: Column, lat: Column) -> Column:
-    return F.struct(
-        name.alias("name"),
-        a1.alias("address1"),
-        a2.alias("address2"),
-        country.alias("country"),
-        city.alias("city"),
-        postal.alias("postalCode"),
-        lon.cast("double").alias("lon"),
-        lat.cast("double").alias("lat"),
-    )
-
-
-def normalize_meetup(r: Column) -> dict[str, Column]:
-    """meetup.rkt:39-59: rename (link->url, name->title,
-    utc_offset->utcOffset, venue.zip->postalCode), epoch pass-through
-    (meetup.rkt:43-44), photo array transform (meetup.rkt:55-58,
-    width/height null-defaulted)."""
-    photos = F.transform(
-        F.coalesce(r["photo_album"]["photo_sample"], F.array()),
-        lambda p: F.struct(
-            p["photo_link"].alias("url"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-        ),
-    )
-    return {
-        "event_id": r["id"],
-        "url": r["link"],
-        "time": r["time"].cast("long"),
-        "utcOffset": r["utc_offset"].cast("long"),
-        "title": r["name"],
-        "description": r["description"],
-        "venue": _spark_venue(
-            r["venue"]["name"], r["venue"]["address_1"], r["venue"]["address_2"],
-            r["venue"]["country"], r["venue"]["city"], r["venue"]["zip"],
-            r["venue"]["lon"], r["venue"]["lat"],
-        ),
-        "photos": photos,
-    }
-
-
-def normalize_facebook(r: Column) -> dict[str, Column]:
-    """facebook.rkt:35-55: ISO8601+-HHMM parse + offset split
-    (facebook.rkt:22-28), url synthesis (facebook.rkt:41), markdown
-    description -> HTML (facebook.rkt:30-32,45), photos always null
-    (facebook.rkt:55)."""
-    start = r["start_time"]
-    ts = F.to_timestamp(start, "yyyy-MM-dd'T'HH:mm:ssxx")
-    sign = F.when(F.regexp_extract(start, r"([+-])\d{4}$", 1) == "-", -1).otherwise(1)
-    off_h = F.regexp_extract(start, r"[+-](\d{2})(\d{2})$", 1).cast("long")
-    off_m = F.regexp_extract(start, r"[+-](\d{2})(\d{2})$", 2).cast("long")
-    offset_ms = sign * (off_h * 3600 + off_m * 60) * 1000
-    return {
-        "event_id": r["id"],
-        "url": F.concat(F.lit("https://facebook.com/"), r["id"]),
-        "time": F.unix_millis(ts),
-        "utcOffset": offset_ms.cast("long"),
-        "title": r["name"],
-        "description": markdown_to_html(r["description"]),
-        "venue": _spark_venue(
-            r["place"]["name"], r["place"]["location"]["street"],
-            F.lit(None).cast("string"), r["place"]["location"]["country"],
-            r["place"]["location"]["city"], r["place"]["location"]["zip"],
-            r["place"]["location"]["longitude"], r["place"]["location"]["latitude"],
-        ),
-        "photos": F.lit(None).cast(T.ArrayType(PHOTO_SCHEMA)),
-    }
-
-
-def normalize_eventbrite(r: Column) -> dict[str, Column]:
-    """eventbrite.rkt:51-85: naive-local + IANA zone -> DST-aware UTC
-    epoch millis and offset (eventbrite.rkt:54-66); stringified lat/lon
-    cast to double; keyed by event_id (NOT by timestamp — divergence
-    from the eventbrite.rkt:68 collision bug, see module docstring)."""
-    local_ts = F.to_timestamp(r["start"]["local"])
-    utc_ts = F.to_utc_timestamp(local_ts, r["start"]["timezone"])
-    return {
-        "event_id": r["id"],
-        "url": r["url"],
-        "time": F.unix_millis(utc_ts),
-        "utcOffset": (F.unix_millis(local_ts) - F.unix_millis(utc_ts)).cast("long"),
-        "title": r["name"]["text"],
-        "description": r["description"]["text"],
-        "venue": _spark_venue(
-            r["venue"]["name"], r["venue"]["address"]["address_1"],
-            r["venue"]["address"]["address_2"], r["venue"]["address"]["country"],
-            r["venue"]["address"]["city"], r["venue"]["address"]["postal_code"],
-            r["venue"]["address"]["longitude"], r["venue"]["address"]["latitude"],
-        ),
-        "photos": F.lit(None).cast(T.ArrayType(PHOTO_SCHEMA)),
-    }
-
-
-# adapter -> (raw payload schema, canonical field builder)
-ADAPTERS = {
-    "meetup": (_MEETUP_RAW_SCHEMA, normalize_meetup),
-    "facebook": (_FACEBOOK_RAW_SCHEMA, normalize_facebook),
-    "eventbrite": (_EVENTBRITE_RAW_SCHEMA, normalize_eventbrite),
-}
-
-
-def normalize_raw(raw: DataFrame) -> DataFrame:
-    """Raw fetch rows (RAW_FETCH_DDL: chapter_id/adapter/service_id/
-    payload/status/error) -> nested canonical frame plus Either
-    status/error columns. The CONVERT half (worker-* vs convert-json in
-    the reference), shared by every fetch path, as projections with no
-    union, so the raw frame is read once: each adapter's `from_json`
-    runs under `CASE WHEN status = 'OK' AND adapter = '<name>'`, and
-    each canonical field picks its adapter's builder column. ERROR rows
-    keep null event fields."""
-    hits = {name: (F.col("status") == "OK") & (F.col("adapter") == name) for name in ADAPTERS}
-    parsed = raw.select(
-        "chapter_id", "adapter", "status", "error",
-        *[
-            F.when(hits[name], F.from_json("payload", schema)).alias(name)
-            for name, (schema, _) in ADAPTERS.items()
-        ],
-    )
-    built = {name: build(F.col(name)) for name, (_, build) in ADAPTERS.items()}
-
-    def field(f: T.StructField) -> Column:
-        (first, cols), *rest = built.items()
-        out = F.when(hits[first], cols[f.name])
-        for name, cols in rest:
-            out = out.when(hits[name], cols[f.name])
-        return out.alias(f.name)
-
-    return parsed.select(
-        "chapter_id",
-        *[field(f) for f in CANONICAL_SCHEMA.fields if f.name != "chapter_id"],
-        "status",
-        "error",
-    )
-
-
 def dispatch_replay(spark: SparkSession, chapters=None) -> DataFrame:
     """The full Layer-A pipeline with the fetch on the driver: chapters
     work-list -> per-adapter dispatch -> fetch (fixture transport) ->
-    normalize, with Either-style status/error columns.
+    normalize, as a canonical frame (FETCH_SCHEMA) with the Either
+    status/error columns.
 
     The fetch body is the batch fetch's (`_fetch_rows`: throttle ->
-    GET -> Either rows), run in-process instead of in fetch tasks;
-    `normalize_raw` then converts the rows exactly as it does for the
+    GET -> normalize -> Either rows), run in-process instead of in
     fetch tasks. `chapters` defaults to the golden fixture work-list."""
-    from cuttlefish_spark.sources.datasource import RAW_FETCH_DDL, _fetch_rows
+    from cuttlefish_spark.sources.datasource import _fetch_rows
 
     if chapters is None:
         chapters = fixtures.CHAPTERS
-    rows = list(_fetch_rows(chapters, {}))
-    return normalize_raw(spark.createDataFrame(rows, RAW_FETCH_DDL))
+    return spark.createDataFrame(list(_fetch_rows(chapters, {})), FETCH_SCHEMA)

@@ -6,14 +6,15 @@ GET (api-runner.rkt:118-148, meetup.rkt:83-84). Here the work items are
 Spark tasks, so Spark's scheduler — not a bespoke thread pool (A5) —
 owns fan-out, retry and locality.
 
-`_fetch_rows` emits the *raw* payload rows (one JSON string per event,
-Either-style status/error columns — README.md:30-42); the normalization
-to the canonical schema stays declarative in the DataFrame layer
-(sources.adapters), exactly like the reference splits fetch (worker-*)
-from convert (convert-json). Each caller owns one TokenBucket, acquired
-per request, placing the reference's adaptive throttle
-(meetup.rkt:9-26) where it belongs at scale: one bucket per task, not a
-global lock.
+`_fetch_rows` fetches and converts in one pass, as the reference's
+worker does the GET and normalizes what it got back (meetup.rkt:39-59,
+83-84): each event goes through its adapter's normalizer
+(`adapters.ADAPTERS`) in the task that fetched it, and the body yields
+canonical rows (`adapters.FETCH_SCHEMA`, with the Either-style
+status/error columns — README.md:30-42). Each caller owns one
+TokenBucket, acquired per request, placing the reference's adaptive
+throttle (meetup.rkt:9-26) where it belongs at scale: one bucket per
+task, not a global lock.
 
 Both modes run the SAME fetch body (sources.fetch.fetch_events:
 throttle -> GET -> header-driven throttle update -> Either errors);
@@ -23,43 +24,43 @@ test strategy, eventbrite.rkt:123-146); `transport=live` performs the
 real urllib GET against the worker APIs (meetup.rkt:83-84,
 facebook.rkt:82-83, eventbrite.rkt:114).
 
-Three callers share `_fetch_rows`, and all yield the same Either rows,
-which `adapters.normalize_raw` converts:
-- the batch pipeline (`operators.ingest.fetch_raw`, behind
-  `datasource_canonical` and `run.run_pipeline`) splits the work-list
+Three callers share `_fetch_rows`, and all yield the same rows:
+- the batch pipeline (`operators.ingest.fetch_records`, behind
+  `run.run_pipeline` and `datasource_canonical`) splits the work-list
   with `chapter_chunks` and runs one fetch task per chunk over
   `sparkContext.parallelize`;
-- the registered `cuttlefish_replay` format, a stream-only source for
-  `readStream` (`streaming_datasource_ingest`). It has no batch
-  reader, so `spark.read.format("cuttlefish_replay")` fails at
-  analysis;
+- the registered `cuttlefish_replay` format, a stream-only source of
+  canonical rows for `readStream` (`streaming_datasource_ingest`). It
+  has no batch reader, so `spark.read.format("cuttlefish_replay")`
+  fails at analysis;
 - the driver-side `adapters.dispatch_replay` (`ingest_normalize`),
   which runs the fetch in-process, without fetch tasks.
 """
 
 from __future__ import annotations
 
-import json
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
+from cuttlefish_spark.sources.adapters import ADAPTERS, FETCH_SCHEMA
 from cuttlefish_spark.sources.chapters import load_chapters
 
-RAW_FETCH_DDL = (
-    "chapter_id string, adapter string, service_id string, "
-    "payload string, status string, error string"
-)
+
+def _error_row(chapter_id: str, error: str) -> dict:
+    return {**dict.fromkeys(FETCH_SCHEMA.names), "chapter_id": chapter_id,
+            "status": "ERROR", "error": error}
 
 
-def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[tuple]:
-    """The shared fetch body (throttle -> GET -> Either rows), one
-    TokenBucket per caller (a batch fetch task, a microbatch
-    slice for the streaming reader, the whole work-list for
-    dispatch_replay) — the reference's adaptive throttle placed per
-    worker (meetup.rkt:9-26). `options["config"]` is the run's
-    config, whose API tokens go into each request (build_request)."""
+def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[dict]:
+    """The shared fetch body (throttle -> GET -> normalize -> Either
+    rows as FETCH_SCHEMA dicts), one TokenBucket per caller (a batch
+    fetch task, a microbatch slice for the streaming reader, the whole
+    work-list for dispatch_replay) — the reference's adaptive throttle
+    placed per worker (meetup.rkt:9-26). `options["config"]` is the
+    run's config, whose API tokens go into each request
+    (build_request)."""
     from cuttlefish_spark.sources.fetch import (
         FixtureTransport,
         fetch_events,
@@ -73,11 +74,11 @@ def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[tuple]:
     live = options.get("transport", "replay") == "live"
     for chapter in chapters:
         chapter_id, _title, adapter, service_id, organization = chapter
-        if adapter not in ("meetup", "facebook", "eventbrite"):
+        normalize = ADAPTERS.get(adapter)
+        if normalize is None:
             # No request is made, so no token is spent: the bucket
             # gates requests only (fetch_events acquires per GET).
-            yield (chapter_id, adapter, service_id, None, "ERROR",
-                   f"No adapter found: {adapter}")
+            yield _error_row(chapter_id, f"No adapter found: {adapter}")
             continue
         transport = http_transport if live else FixtureTransport()
         events, error = fetch_events(
@@ -89,13 +90,10 @@ def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[tuple]:
             config=options.get("config"),
         )
         if error is not None:
-            yield (chapter_id, adapter, service_id, None, "ERROR", error)
+            yield _error_row(chapter_id, error)
             continue
         for event in events:
-            yield (
-                chapter_id, adapter, service_id,
-                json.dumps(event), "OK", None,
-            )
+            yield {"chapter_id": chapter_id, **normalize(event), "status": "OK", "error": None}
 
 
 class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
@@ -112,7 +110,7 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
     The simple API prefetches each slice DRIVER-side by design —
     bounded by chapters_per_batch, which is exactly the rate-limit
     contract of a polling source; bulk backfills use the batch
-    fetch's executor-side tasks (operators.ingest.fetch_raw) instead.
+    fetch's executor-side tasks (operators.ingest.fetch_records) instead.
     An exhausted list returns an empty slice at a fixed offset, so
     processAllAvailable terminates (availableNow on simple readers
     drains only ONE read() call — measured; the
@@ -132,17 +130,19 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
         if i >= len(self._items):
             return iter([]), {"index": i}
         j = min(i + self._per, len(self._items))
-        # list-iterator, not generator: the engine's prefetch cache
-        # copy.copy()s the iterator it is handed, and generators don't
-        # copy. The slice is bounded by chapters_per_batch — exactly
-        # the documented driver-side prefetch budget.
-        return iter(list(_fetch_rows(self._items[i:j], self.options))), {
-            "index": j
-        }
+        return self._rows(i, j), {"index": j}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
-        i, j = int(start["index"]), int(end["index"])
-        return iter(list(_fetch_rows(self._items[i:j], self.options)))
+        return self._rows(int(start["index"]), int(end["index"]))
+
+    def _rows(self, i: int, j: int) -> Iterator[tuple]:
+        """Work items i..j fetched as FETCH_SCHEMA tuples. A
+        list-iterator, not a generator: the engine's prefetch cache
+        copy.copy()s the iterator it is handed, and generators don't
+        copy. The slice is bounded by chapters_per_batch — exactly the
+        documented driver-side prefetch budget."""
+        rows = _fetch_rows(self._items[i:j], self.options)
+        return iter([tuple(r[n] for n in FETCH_SCHEMA.names) for r in rows])
 
     def commit(self, end: dict) -> None:
         pass
@@ -153,8 +153,8 @@ class ChapterReplayDataSource(DataSource):
     def name(cls) -> str:
         return "cuttlefish_replay"
 
-    def schema(self) -> str:
-        return RAW_FETCH_DDL
+    def schema(self) -> StructType:
+        return FETCH_SCHEMA
 
     def simpleStreamReader(self, schema: StructType) -> ChapterReplayStreamReader:
         return ChapterReplayStreamReader(self.options)

@@ -387,13 +387,11 @@ FIXTURE_MD_REPS = 1_000
 
 
 def _scaled_ingest_normalize(spark):
-    from cuttlefish_spark.operators.ingest import _flat_canonical
+    from cuttlefish_spark.operators.ingest import _flat_frame
     from cuttlefish_spark.sources.adapters import dispatch_replay
     from cuttlefish_spark.sources.fixtures import synth_chapters
 
-    return _flat_canonical(
-        dispatch_replay(spark, synth_chapters(FIXTURE_N_CHAPTERS))
-    )
+    return _flat_frame(dispatch_replay(spark, synth_chapters(FIXTURE_N_CHAPTERS)))
 
 
 def _scaled_ingest_datasource(spark):

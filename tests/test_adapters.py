@@ -98,7 +98,7 @@ def test_datasource_matches_replay(spark, sf_dir, tmp_path):
     driver-side fetch, on the fixture work-list and on a 1,003-chapter
     one with 404 chapters."""
     from cuttlefish_spark.operators.ingest import (
-        _flat_canonical,
+        _flat_frame,
         datasource_canonical,
         ingest_datasource,
         ingest_normalize,
@@ -115,7 +115,7 @@ def test_datasource_matches_replay(spark, sf_dir, tmp_path):
     a = sorted(tuple(r) for r in datasource_canonical(spark, chapters_path=path).collect())
     b = sorted(
         tuple(r)
-        for r in _flat_canonical(dispatch_replay(spark, load_chapters(path))).collect()
+        for r in _flat_frame(dispatch_replay(spark, load_chapters(path))).collect()
     )
     assert a == b
     # 250 cycles of the 4 protos (2 + 2 + 3 events + 1 error) + 3 lost
@@ -259,9 +259,9 @@ def test_fetch_request_shapes():
 def test_datasource_404_rows_flow_to_error_channel(spark):
     """A chapter whose fixture is missing surfaces the HTTP 404 through
     the batch fetch's Either columns instead of failing the job."""
-    from cuttlefish_spark.operators.ingest import fetch_raw
+    from cuttlefish_spark.operators.ingest import datasource_canonical
 
-    df = fetch_raw(spark)
+    df = datasource_canonical(spark)
     errs = {
         r["error"] for r in df.filter("status = 'ERROR'").collect() if r["error"]
     }
@@ -507,7 +507,7 @@ def test_unknown_adapter_spends_no_throttle_token(monkeypatch):
     monkeypatch.setattr(TokenBucket, "acquire", lambda self: calls.append(1))
     unknown = [(f"x{i}", "X", "carrierpigeon", "deep-six", None) for i in range(20)]
     rows = list(_fetch_rows(unknown, {"rate_per_sec": 1.0}))
-    assert [r[4] for r in rows] == ["ERROR"] * 20
+    assert [r["status"] for r in rows] == ["ERROR"] * 20
     assert calls == []
 
     known = [("newyork", "New York", "meetup", "papers-we-love", None)]
@@ -537,20 +537,21 @@ def _worklist_with_404s(path: str) -> None:
 
 def test_run_pipeline_matches_format_composition(spark, tmp_path):
     """run_pipeline's files, audit log and audit frame equal the
-    composition of its parts: fetch_raw -> canonical_from_raw ->
-    write_keyed_json for the files, audit_counts for the audit."""
+    composition of its parts over the golden DataFrame path:
+    datasource_canonical -> write_keyed_json for the files,
+    audit_counts for the audit."""
     import json as _json
 
-    from cuttlefish_spark.operators.ingest import canonical_from_raw, fetch_raw
+    from cuttlefish_spark.operators.ingest import datasource_canonical
     from cuttlefish_spark.run import run_pipeline
     from cuttlefish_spark.sinks.json_sink import write_keyed_json
 
     path = str(tmp_path / "chapters.json")
     _worklist_with_404s(path)
 
-    out = canonical_from_raw(fetch_raw(spark, chapters_path=path))
+    out = datasource_canonical(spark, chapters_path=path)
     old_dir = tmp_path / "old"
-    write_keyed_json(out, str(old_dir))
+    write_keyed_json(out.rdd.map(lambda r: r.asDict()), str(old_dir))
     old_audit = audit_counts(out).orderBy("chapter_id", "status").collect()
     old_lines = [f"{r['log_line']} ({r['n_events']})" for r in old_audit]
 
@@ -699,3 +700,74 @@ def test_convert_eventbrite_local_without_seconds(spark, monkeypatch):
         {"id": "g1", "start": {**start, "local": "2018-03-11T02:30:00"}}])
     assert rows["o1"]["time"] == 1541309400000 and rows["o1"]["utcOffset"] == -14400000
     assert rows["g1"]["time"] == 1520753400000 and rows["g1"]["utcOffset"] == -18000000
+
+
+def test_eventbrite_unknown_zone_reads_null(spark, monkeypatch):
+    """An unknown IANA zone (or an unparseable local time) gives that
+    event null time and utcOffset; the chapter stays OK and its other
+    events convert (the zone lookup used to fail the whole fetch)."""
+    rows = _replay_payload(spark, monkeypatch, "eventbrite", [
+        {"id": "b1", "name": {"text": "Kept"},
+         "start": {"timezone": "Bogus/Zone", "local": "2018-03-08T18:30:00"}},
+        {"id": "b2", "start": {"timezone": "Europe/London", "local": "soon"}},
+        {"id": "g1", "start": {"timezone": "Europe/London", "local": "2018-03-08T18:30:00"}}])
+    assert {r["status"] for r in rows.values()} == {"OK"}
+    assert rows["b1"]["time"] is None and rows["b1"]["utcOffset"] is None
+    assert rows["b1"]["title"] == "Kept"
+    assert rows["b2"]["time"] is None and rows["b2"]["utcOffset"] is None
+    assert rows["g1"]["time"] == 1520533800000 and rows["g1"]["utcOffset"] == 0
+
+
+def test_convert_lenient_reads(spark, monkeypatch):
+    """How the normalizers read values of another JSON type: a
+    coordinate held in a string reads as its number for every adapter;
+    a float, boolean, object or array in a string field reads null; an
+    Eventbrite local time with a zone suffix reads null; an event whose
+    id is neither a string nor an integer makes its chapter a format
+    error."""
+    rows = _replay_payload(spark, monkeypatch, "meetup", [
+        {"id": "m1", "name": 3.5, "description": True,
+         "venue": {"lat": "40.7", "lon": " -74.0 ", "zip": {"a": 1}, "city": ["x"]}}])
+    v = rows["m1"]["venue"]
+    assert (v["lat"], v["lon"], v["postalCode"], v["city"]) == (40.7, -74.0, None, None)
+    assert rows["m1"]["title"] is None and rows["m1"]["description"] is None
+    rows = _replay_payload(spark, monkeypatch, "facebook", [
+        {"id": "f1", "place": {"location": {"latitude": "38.6", "longitude": "west"}}}])
+    assert (rows["f1"]["venue"]["lat"], rows["f1"]["venue"]["lon"]) == (38.6, None)
+    rows = _replay_payload(spark, monkeypatch, "eventbrite", [
+        {"id": "e1", "start": {"timezone": "UTC", "local": "2018-11-04T01:30:00Z"}}])
+    assert rows["e1"]["time"] is None
+    for bad_id in (1.5, True, {"x": 1}):
+        rows = _replay_payload(spark, monkeypatch, "meetup", [{"id": bad_id}])
+        assert rows[None]["error"] == "Couldn't format papers-we-love into correct JSON"
+
+
+def test_run_pipeline_bad_chapter_ids_and_failed_writes(spark, tmp_path):
+    """A chapter id that is not a safe file name, or whose file cannot
+    be written, is that chapter's ERROR row: the other chapters' files
+    and log lines still appear, nothing lands outside json-out-path and
+    no tmp file is left behind."""
+    import json as _json
+
+    from cuttlefish_spark.run import run_pipeline
+
+    meetup = {"title": "NY", "dataService": {"adapter": "meetup", "id": "papers-we-love"}}
+    bad = ["a/b", "../escape", "x" * 300, "..", "nul\x00"]
+    doc = {cid: meetup for cid in bad + ["good", "blocked", "y" * 250]}
+    path = tmp_path / "chapters.json"
+    path.write_text(_json.dumps(doc))
+    out = tmp_path / "out"
+    (out / "blocked.json").mkdir(parents=True)  # the rename onto it fails
+    audit = run_pipeline(spark, config={
+        "chapter-json-file": str(path), "json-out-path": str(out),
+        "logfile-path": str(tmp_path / "logs")})
+
+    rows = {r["chapter_id"]: (r["status"], r["n_events"]) for r in audit.collect()}
+    assert rows == {**{cid: ("ERROR", 2) for cid in bad + ["blocked"]},
+                    "good": ("OK", 2), "y" * 250: ("OK", 2)}
+    assert sorted(p.name for p in out.iterdir()) == sorted(
+        ["blocked.json", "good.json", "y" * 250 + ".json"])
+    assert not (tmp_path / "escape.json").exists()
+    log = (tmp_path / "logs" / "cuttlefish.log").read_text().splitlines()
+    assert "WROTE: good (2)" in log and "ERROR: blocked (2)" in log
+    assert "ERROR: ../escape (2)" in log and len(log) == len(doc)

@@ -10,10 +10,15 @@ from cuttlefish_spark.sinks.json_sink import write_keyed_json
 from cuttlefish_spark.sources.adapters import dispatch_replay
 
 
+def _records(df):
+    """The frame's rows as the dicts write_keyed_json takes."""
+    return df.rdd.map(lambda r: r.asDict(recursive=True))
+
+
 def test_write_keyed_json_one_file_per_key(spark, tmp_path):
     out = str(tmp_path / "keyed")
     df = dispatch_replay(spark).filter("status = 'OK'").coalesce(1)
-    write_keyed_json(df, out)
+    write_keyed_json(_records(df), out)
     files = sorted(os.listdir(out))
     assert files == ["london.json", "newyork.json", "stlouis.json"]
     ny = json.load(open(f"{out}/newyork.json"))
@@ -26,9 +31,9 @@ def test_write_keyed_json_replace_mode(spark, tmp_path):
     api-runner.rkt:50-51)."""
     out = str(tmp_path / "keyed2")
     df = dispatch_replay(spark).filter("status = 'OK'").coalesce(1)
-    write_keyed_json(df, out)
+    write_keyed_json(_records(df), out)
     first = os.path.getmtime(f"{out}/london.json")
-    write_keyed_json(df, out)
+    write_keyed_json(_records(df), out)
     assert os.path.getmtime(f"{out}/london.json") >= first
     assert len(json.load(open(f"{out}/london.json"))) == 3
 
@@ -53,13 +58,13 @@ def test_write_keyed_json_key_spread_over_partitions_raises(spark, tmp_path, mon
     from cuttlefish_spark.run import run_pipeline
 
     with pytest.raises(ValueError, match="k0") as err:
-        write_keyed_json(_spread_frame(spark), str(tmp_path / "spread"))
+        write_keyed_json(_records(_spread_frame(spark)), str(tmp_path / "spread"))
     assert "k1" not in str(err.value)
 
     chapters = tmp_path / "chapters.json"
     chapters.write_text("{}")
-    monkeypatch.setattr(ingest, "datasource_canonical",
-                        lambda spark, **kw: _spread_frame(spark))
+    monkeypatch.setattr(ingest, "fetch_records",
+                        lambda spark, **kw: _records(_spread_frame(spark)))
     with pytest.raises(ValueError, match="k0"):
         run_pipeline(spark, config={
             "chapter-json-file": str(chapters), "json-out-path": str(tmp_path / "out"),
@@ -77,7 +82,7 @@ def test_write_keyed_json_returns_audit_per_key(spark, tmp_path):
         rows, "chapter_id string, event_id string, status string, error string"
     ).coalesce(1)
     out = tmp_path / "audit"
-    assert sorted(write_keyed_json(df, str(out))) == [
+    assert sorted(write_keyed_json(_records(df), str(out))) == [
         ("a", "OK", 2, None), ("b", "ERROR", 1, "Couldn't fetch b: 404")]
     assert sorted(os.listdir(out)) == ["a.json"]
     assert json.loads((out / "a.json").read_text()) == {
@@ -94,7 +99,7 @@ def test_write_keyed_json_counts_events_in_file(spark, tmp_path):
         "chapter_id string, event_id string, v long, status string, error string",
     ).coalesce(1)
     out = tmp_path / "dup"
-    counts = write_keyed_json(df, str(out))
+    counts = write_keyed_json(_records(df), str(out))
     events = json.loads((out / "c1.json").read_text())
     assert sorted(events) == ["e1", "e2"]
     assert counts == [("c1", "OK", 2, None)]
