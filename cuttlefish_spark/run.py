@@ -7,14 +7,12 @@ fetch: the driver splits it into one chunk per core (A2-A9) -> adapter
 normalization to the canonical event schema (A10-A18) -> per-chapter
 `{chapter}.json` files under the config's json-out-path (A21,
 api-runner.rkt:39-52) -> WROTE:/ERROR: audit lines appended under
-logfile-path (A23, api-runner.rkt:80-89). The run is
-`sc.parallelize(chunks)` with one Python task per chunk that fetches
-its chapters, converts each payload (`adapters.CONVERTERS`, then
-`flat_record`) and writes their files, as in the reference's worker;
-the write returns every chapter's audit tuple. So a run is one Spark
-job of one stage with no shuffle, and no DataFrame is built until the
-audit frame, which is returned so callers can assert on it; the CLI
-prints the log lines.
+logfile-path (A23, api-runner.rkt:80-89). One Python task per chunk
+fetches its chapters, normalizes each payload (`adapters.ADAPTERS`,
+then `flat_record`) and writes their files, as in the reference's
+worker, and the write returns every chapter's audit tuple: a run is
+one Spark job of one stage with no shuffle, and builds no DataFrame
+but the returned audit frame; the CLI prints the log lines.
 
 Usage: python -m cuttlefish_spark.run [configfile]
 """

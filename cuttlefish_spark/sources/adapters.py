@@ -30,6 +30,7 @@ events by computed timestamp, silently dropping simultaneous events
 (eventbrite.rkt:68). We keep `event_id` as the key — documented
 intentional non-bug-parity.
 """
+
 from __future__ import annotations
 
 import re
