@@ -1,6 +1,5 @@
 from cuttlefish_spark.functions.columns import (
     cosine_sim,
-    dec_avg,
     dec_sum,
     dot,
     get_in,
@@ -12,7 +11,6 @@ from cuttlefish_spark.functions.columns import (
 
 __all__ = [
     "cosine_sim",
-    "dec_avg",
     "dec_sum",
     "dot",
     "get_in",

@@ -36,10 +36,15 @@ def get_in(col: Column | str, path: str, default=None) -> Column:
     return F.coalesce(extracted, F.lit(default))
 
 
-def dec_sum(col: Column, scale: int = 6, alias: str | None = None) -> Column:
-    """Order-independent SUM: quantize each input to 10^-scale units as
-    a LONG (round half-up, same quantization DECIMAL(18,scale) applies),
-    sum exactly in JVM long arithmetic, divide back to DOUBLE. Matches
+# Decimal places dec_sum quantizes to (the oracles' DECIMAL(18,6)).
+DEC_SCALE = 6
+
+
+def dec_sum(col: Column, alias: str | None = None) -> Column:
+    """Order-independent SUM: quantize each input to 10^-scale units
+    (scale = DEC_SCALE) as a LONG (round half-up, same quantization
+    DECIMAL(18,scale) applies), sum exactly in JVM long arithmetic,
+    divide back to DOUBLE. Matches
     DuckDB `CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE)` — DuckDB
     stores that decimal as a scaled int64 and its cast-to-double is the
     same integer/10^s division performed here.
@@ -60,15 +65,8 @@ def dec_sum(col: Column, scale: int = 6, alias: str | None = None) -> Column:
     / 10^scale — bit-identical to this helper at ANY magnitude, and
     value-identical to the plain decimal cast below the boundary (see
     _Q1_SQL, relational_ext.py)."""
-    q = 10 ** scale
+    q = 10 ** DEC_SCALE
     out = F.sum(F.round(col * q).cast("long")) / F.lit(float(q))
-    return out.alias(alias) if alias else out
-
-
-def dec_avg(col: Column, scale: int = 6, alias: str | None = None) -> Column:
-    """Order-independent AVG via exact quantized-long sum / count."""
-    q = 10 ** scale
-    out = (F.sum(F.round(col * q).cast("long")) / F.lit(float(q))) / F.count(F.lit(1))
     return out.alias(alias) if alias else out
 
 

@@ -77,7 +77,7 @@ def register_views(spark: SparkSession, sf_dir: str, tables: list[str] | None = 
 
 
 def write_bucketed(df: DataFrame, name: str, path: str, key: str,
-                   buckets: int = 8, sort: bool = True) -> None:
+                   buckets: int = 8) -> None:
     """Persist a table hash-bucketed (and bucket-sorted) by `key`.
 
     The 100 TB co-location play: two tables bucketed by the same key
@@ -87,10 +87,8 @@ def write_bucketed(df: DataFrame, name: str, path: str, key: str,
     (l_orderkey = o_orderkey) where a broadcast is impossible and a
     per-query shuffle of the larger side would dominate the runtime.
     """
-    w = df.write.mode("overwrite").bucketBy(buckets, key)
-    if sort:
-        w = w.sortBy(key)
-    w.option("path", path).format("parquet").saveAsTable(name)
+    (df.write.mode("overwrite").bucketBy(buckets, key).sortBy(key)
+     .option("path", path).format("parquet").saveAsTable(name))
 
 
 def memo_key(spark: SparkSession, sf_dir: str, table: str) -> tuple:
@@ -146,9 +144,9 @@ def _flat(v) -> tuple:
 _MEMO_REGISTRY: list[dict] = []
 
 
-def register_memo(d: dict | None = None) -> dict:
-    """Register (and return) a session-scoped memo dict for eviction."""
-    d = {} if d is None else d
+def register_memo() -> dict:
+    """A new session-scoped memo dict, registered for eviction."""
+    d: dict = {}
     _MEMO_REGISTRY.append(d)
     return d
 

@@ -225,13 +225,13 @@ _GR_DUP_MAX = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10}
 _GR_PACK = 1 << 32  # (count, charlen) packed argmax base
 
 
-def _gr_shingle_sql(k: int, src: str = "toks") -> str:
+def _gr_shingle_sql(k: int) -> str:
     """DuckDB twin of functions.word_shingles(toks, k): starts
     1..L-k+1 (range stop exclusive), slice i..i+k-1 inclusive, '_'
     join; empty below k tokens."""
     return (
-        f"list_transform(range(1, greatest(len({src}) - {k - 2}, 1)), "
-        f"i -> array_to_string({src}[i:i+{k - 1}], '_'))"
+        f"list_transform(range(1, greatest(len(toks) - {k - 2}, 1)), "
+        f"i -> array_to_string(toks[i:i+{k - 1}], '_'))"
     )
 
 

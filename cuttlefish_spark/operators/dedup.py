@@ -396,11 +396,11 @@ _SALT_MIN_ROWS = 256
 _SALT_A_ROWS = 48
 
 
-def _salt_band_join(a: DataFrame, b: DataFrame, id_col: str = "doc_a") -> DataFrame:
+def _salt_band_join(a: DataFrame, b: DataFrame) -> DataFrame:
     """Inner-join `a` and `b` on column `k` with hot keys salted.
 
-    Same row set as a.join(b, "k"); `id_col` names a column of `a`
-    whose hash spreads the probe side across the salt splits."""
+    Same row set as a.join(b, "k"); the hash of `a`'s `doc_a` spreads
+    the probe side across the salt splits."""
     freq = F.broadcast(
         b.groupBy("k")
         .agg(F.count(F.lit(1)).alias("kn"))
@@ -411,7 +411,7 @@ def _salt_band_join(a: DataFrame, b: DataFrame, id_col: str = "doc_a") -> DataFr
     )
     a_s = (
         a.join(freq, "k", "left")
-        .withColumn("u", F.pmod(F.xxhash64(id_col), sn).cast("int"))
+        .withColumn("u", F.pmod(F.xxhash64("doc_a"), sn).cast("int"))
         .drop("kn")
     )
     b_s = (

@@ -8,7 +8,10 @@ differ only in where the fetch runs: on the driver (ingest_normalize),
 in batch fetch tasks (ingest_datasource), or in microbatches of the
 streaming reader (streaming_datasource_ingest). Each builds its
 canonical frame with `createDataFrame(rows, FETCH_SCHEMA)` and
-flattens it with `_flat_frame`.
+flattens it with `_flat_frame`. The fetch's one throttle is the
+reference's header backoff (`throttle.Throttle`, no fixed rate); live
+transport runs one chapter per fetch task, so there that backoff never
+delays a second request.
 All three are checked against one GOLDEN oracle: the fixture inputs
 are fixed, so the exact expected output is stated as a SQL VALUES
 block (the reference's own test strategy — golden capture,
@@ -137,7 +140,7 @@ def fetch_records(
     dicts): the work-list at `chapters_path` (the golden fixture
     chapters without one) is split by `chapter_chunks`, and each chunk
     is one partition running `_fetch_rows` (fetch, then normalize) with
-    its own TokenBucket and the run's `config` (the API tokens). Every
+    its own Throttle and the run's `config` (the API tokens). Every
     chapter's rows stay in its chunk's partition, and the fetch runs
     inside the job of whatever reads the RDD, so read it once (the
     reference likewise fetches once per chapter,
@@ -150,26 +153,22 @@ def fetch_records(
         load_chapters(chapters_path), transport, sc.defaultParallelism,
         chapters_per_partition,
     )
-    options = {"transport": transport, "config": config}
     return sc.parallelize(chunks, max(1, len(chunks))).flatMap(
-        lambda chunk: _fetch_rows(chunk, options)
+        lambda chunk: _fetch_rows(chunk, transport, config)
     )
 
 
 def datasource_canonical(
     spark: SparkSession,
     chapters_path: str | None = None,
-    transport: str = "replay",
     chapters_per_partition: int | None = None,
-    config: dict | None = None,
 ) -> DataFrame:
-    """Batch fetch (fetch_records) -> flat golden-schema frame, lazy,
-    parameterized by work-list, transport, task batching and the run's
-    config — the reusable body behind ingest_datasource.
-    `chapters_per_partition` trades scheduler granularity for per-task
-    overhead; None picks the transport-dependent default of
-    `chapter_chunks`."""
-    rows = fetch_records(spark, chapters_path, transport, chapters_per_partition, config)
+    """Replay batch fetch (fetch_records) -> flat golden-schema frame,
+    lazy, parameterized by work-list and task batching — the reusable
+    body behind ingest_datasource. `chapters_per_partition` trades
+    scheduler granularity for per-task overhead; None picks
+    `chapter_chunks`' replay default, one chunk per core."""
+    rows = fetch_records(spark, chapters_path, "replay", chapters_per_partition, None)
     return _flat_frame(spark.createDataFrame(rows, FETCH_SCHEMA))
 
 

@@ -2089,6 +2089,7 @@ _PQ_M = 4  # subspaces
 _PQ_SUB = 16  # dims per subspace (4 x 16 = the 64-dim embeddings)
 _PQ_K = 8  # centroids per subspace codebook
 _PQ_TOPK = 10
+_PQ_PROBE = 0  # vec_id of the query vector (the oracle's `vec_id = 0`)
 
 # ||a-b||^2 expanded via dot products only — the one distance form both
 # engines evaluate with IDENTICAL sequential folds (functions.dot ==
@@ -2176,22 +2177,20 @@ _PQ_ORACLE = f"""
 _PQ_CACHE: dict[tuple, tuple] = register_memo()
 
 
-def _pq_build(spark: SparkSession, sf_dir: str, probe_id: int = 0):
+def _pq_build(spark: SparkSession, sf_dir: str):
     """Shared PQ machinery of pq_adc_topk / ivfpq_topk: returns
     (vecs, codes, lut) — full vectors, the per-(vector, subspace) PQ
     code table from one Lloyd round, and the PROBE-SPECIFIC (s, cid)
-    -> d2 asymmetric-distance LUT for `probe_id`, every distance on
-    the pinned (aa - 2ab) + bb sequential-fold expansion rounded to 6.
-    The memo key includes probe_id because the LUT is probe-specific
-    (r10 ADVICE: a table-only key would hand a different probe's ADC
-    table to a new consumer silently); vecs/codes are probe-independent
-    and simply re-memoize per probe — the training jobs behind them are
-    what the cache exists to skip, and both current consumers share
-    probe 0 so nothing retrains today.
+    -> d2 asymmetric-distance LUT for vector _PQ_PROBE, every distance
+    on the pinned (aa - 2ab) + bb sequential-fold expansion rounded to
+    6. The memo key includes the probe because the LUT is
+    probe-specific (r10 ADVICE: a table-only key would hand a different
+    probe's ADC table to a new consumer silently); both consumers share
+    the one probe, so the training jobs run once per corpus.
     See pq_adc_topk's docstring for the plan-shape argument."""
     from cuttlefish_spark.io import memo_key, memo_put
 
-    key = memo_key(spark, sf_dir, "embeddings") + (probe_id,)
+    key = memo_key(spark, sf_dir, "embeddings") + (_PQ_PROBE,)
     if key in _PQ_CACHE:
         return _PQ_CACHE[key]
     e = load_table(spark, sf_dir, "embeddings")
@@ -2250,7 +2249,7 @@ def _pq_build(spark: SparkSession, sf_dir: str, probe_id: int = 0):
     )
     codes = assign(c1).select("vec_id", "s", "cid")
 
-    probe_subs = subs.filter(F.col("vec_id") == probe_id).select(
+    probe_subs = subs.filter(F.col("vec_id") == _PQ_PROBE).select(
         F.col("s").alias("qs"), F.col("sub").alias("q")
     )
     lut = (

@@ -24,9 +24,12 @@ from pyspark.sql import DataFrame, SparkSession
 from cuttlefish_spark.io import register_memo
 from cuttlefish_spark.registry import query
 
+# Shuffle partitions of every ephemeral stateful stream below.
+_STREAM_PARTITIONS = 4
+
 
 @contextmanager
-def _stream_partitions(spark: SparkSession, n: int = 4):
+def _stream_partitions(spark: SparkSession):
     """Bound shuffle partitions for an ephemeral stateful stream.
 
     Every shuffle partition of a stateful operator owns a state store
@@ -34,12 +37,12 @@ def _stream_partitions(spark: SparkSession, n: int = 4):
     volume — measured 9.5s -> 2.6s on the interval join by going
     32 -> 4 partitions for the same 371-row result, and the warm
     three-query trio drops 8 -> 4 partitions from ~9s to ~6.4s at
-    sf0.1 (n=2 saves only ~0.6s more). Stateful streams therefore
+    sf0.1 (2 saves only ~0.6s more). Stateful streams therefore
     size partitions by STATE VOLUME, not CPU (the opposite of the
     batch `spread()` rule); production picks the count once at stream
     birth since it is frozen into the checkpoint."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
+    spark.conf.set("spark.sql.shuffle.partitions", str(_STREAM_PARTITIONS))
     try:
         yield
     finally:

@@ -110,11 +110,10 @@ def two_phase_prefix_sum(
     key: str,
     order_cols: list[Column],
     val_col: str,
-    key_type: str = "string",
 ) -> DataFrame:
     """Return `df` plus `cum` — the INCLUSIVE running sum of `val_col`
-    within the `key` group under `order_cols` (BIGINT; subtract the
-    row's own value for the exclusive form) — with no per-group
+    within the string `key` group under `order_cols` (BIGINT; subtract
+    the row's own value for the exclusive form) — with no per-group
     single-task sort. Same contract as two_phase_rank."""
     part, slices = _slices(spark, df, key, order_cols, F.sum(val_col))
     offsets: dict = {}
@@ -123,7 +122,7 @@ def two_phase_prefix_sum(
         rows.append((pid, k, offsets.get(k, 0)))
         offsets[k] = offsets.get(k, 0) + int(sub or 0)
     off_df = spark.createDataFrame(
-        rows, f"pid int, {key} {key_type}, off bigint"
+        rows, f"pid int, {key} string, off bigint"
     )
     w = (
         Window.partitionBy("pid", key)

@@ -84,12 +84,10 @@ def global_ordered_windows(df: DataFrame) -> list[str]:
     return flagged
 
 
-def low_card_ordered_windows(
-    df: DataFrame, low_card: frozenset[str] = frozenset({"lang"})
-) -> list[str]:
+def low_card_ordered_windows(df: DataFrame, low_card: frozenset[str]) -> list[str]:
     """windowspecdefinition occurrences that are ORDERED and whose
     partition columns are ALL drawn from a known low-cardinality key
-    set (default: `lang`, a 5-value column) — the same single-task
+    set (e.g. `lang`, a 5-value column) — the same single-task
     funnel as a global ordered window, just split 5 ways. A window
     co-partitioned with a high-cardinality column (e.g. pid, lang) is
     fine and not flagged.

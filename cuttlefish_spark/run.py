@@ -61,24 +61,24 @@ def run_pipeline(
     return spark.createDataFrame(audit, AUDIT_DDL)
 
 
-def append_log(log_dir: str, lines: list[str], today=None) -> None:
+def append_log(log_dir: str, lines: list[str]) -> None:
     """Append audit lines to `cuttlefish.log`, rotating daily (A24,
     reference logger.rkt:54-63: an hourly alarm restarts the log file
     at hour 0 — here the day boundary is checked on write, which is
     the driver-side equivalent without a daemon thread). A log last
     written on an earlier day is renamed `cuttlefish-YYYY-MM-DD.log`
-    before the append starts the fresh file."""
+    before the append starts the fresh file. No lines append nothing."""
     import datetime as _dt
 
     os.makedirs(log_dir, exist_ok=True)
     path = os.path.join(log_dir, "cuttlefish.log")
-    today = today or _dt.date.today()
+    today = _dt.date.today()
     if os.path.exists(path):
         stamp = _dt.date.fromtimestamp(os.path.getmtime(path))
         if stamp < today:
             os.replace(path, os.path.join(log_dir, f"cuttlefish-{stamp.isoformat()}.log"))
     with open(path, "a", encoding="utf-8") as fh:
-        fh.write("\n".join(lines) + "\n")
+        fh.writelines(f"{line}\n" for line in lines)
 
 
 def main() -> None:

@@ -316,11 +316,11 @@ def dispatch_replay(spark: SparkSession, chapters=None) -> DataFrame:
     normalize, as a canonical frame (FETCH_SCHEMA) with the Either
     status/error columns.
 
-    The fetch body is the batch fetch's (`_fetch_rows`: throttle ->
+    The fetch body is the batch fetch's (`_fetch_rows`: backoff ->
     GET -> normalize -> Either rows), run in-process instead of in
     fetch tasks. `chapters` defaults to the golden fixture work-list."""
     from cuttlefish_spark.sources.datasource import _fetch_rows
 
     if chapters is None:
         chapters = fixtures.CHAPTERS
-    return spark.createDataFrame(list(_fetch_rows(chapters, {})), FETCH_SCHEMA)
+    return spark.createDataFrame(list(_fetch_rows(chapters, "replay", None)), FETCH_SCHEMA)

@@ -28,9 +28,10 @@ def load_chapters(path: str | None = None) -> list[tuple]:
     """The chapter work-list of the chapters.json file at `path`; with
     no path, the golden fixture chapters.
 
-    A missing file raises FileNotFoundError and a top level that is not
-    a JSON object raises ValueError — the reference aborts the run on
-    an unreadable chapters table (api-runner.rkt:174-178). A chapter
+    A missing file raises FileNotFoundError, and a file that is not
+    JSON or whose top level is not an object raises ValueError naming
+    the file — the reference aborts the run on an unreadable chapters
+    table (api-runner.rkt:174-178). A chapter
     whose payload or `dataService` is not an object reads as null
     fields (hash.rkt:30-35), so it becomes one `No adapter found: None`
     ERROR row instead of failing the run."""
@@ -39,7 +40,10 @@ def load_chapters(path: str | None = None) -> list[tuple]:
 
         return list(fixtures.CHAPTERS)
     with open(path, encoding="utf-8") as fh:
-        doc = json.load(fh)
+        try:
+            doc = json.load(fh)
+        except ValueError as e:  # not JSON, or not UTF-8
+            raise ValueError(f"chapters file {path} is not JSON: {e}") from e
     if not isinstance(doc, dict):
         raise ValueError(f"chapters file {path} must hold a JSON object")
     items = []

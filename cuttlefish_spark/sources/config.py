@@ -46,7 +46,10 @@ def load_config(
     if not path.is_file():
         return defaults
     with open(path, encoding="utf-8") as fh:
-        overrides = json.load(fh)
+        try:
+            overrides = json.load(fh)
+        except ValueError as e:  # not JSON, or not UTF-8
+            raise ValueError(f"config file {path} is not JSON: {e}") from e
     if not isinstance(overrides, dict):
         raise ValueError(f"config file {path} must hold a JSON object")
     return {**defaults, **overrides}

@@ -11,18 +11,19 @@ worker does the GET and normalizes what it got back (meetup.rkt:39-59,
 83-84): each event goes through its adapter's normalizer
 (`adapters.ADAPTERS`) in the task that fetched it, and the body yields
 canonical rows (`adapters.FETCH_SCHEMA`, with the Either-style
-status/error columns — README.md:30-42). Each caller owns one
-TokenBucket, acquired per request, placing the reference's adaptive
-throttle (meetup.rkt:9-26) where it belongs at scale: one bucket per
-task, not a global lock.
+status/error columns — README.md:30-42). Each call owns one
+`Throttle`, the reference's header backoff (meetup.rkt:9-26), shared
+by every request it makes: one per task, not a global lock. On live
+transport a task holds one chapter, so the backoff a response asks for
+never delays another request until several requests run in one task.
 
-Both modes run the SAME fetch body (sources.fetch.fetch_events:
-throttle -> GET -> header-driven throttle update -> Either errors);
-only the transport differs. `transport=replay` (default) answers from
-the golden fixtures through HTTP-shaped responses (the reference's own
-test strategy, eventbrite.rkt:123-146); `transport=live` performs the
-real urllib GET against the worker APIs (meetup.rkt:83-84,
-facebook.rkt:82-83, eventbrite.rkt:114).
+Both transports run the SAME fetch body (sources.fetch.fetch_events:
+header backoff -> GET -> header-driven throttle update -> Either
+errors). "replay" (every caller but a live `run_pipeline`) answers
+from the golden fixtures through HTTP-shaped responses (the
+reference's own test strategy, eventbrite.rkt:123-146); "live"
+performs the real urllib GET against the worker APIs
+(meetup.rkt:83-84, facebook.rkt:82-83, eventbrite.rkt:114).
 
 Three callers share `_fetch_rows`, and all yield the same rows:
 - the batch pipeline (`operators.ingest.fetch_records`, behind
@@ -53,41 +54,37 @@ def _error_row(chapter_id: str, error: str) -> dict:
             "status": "ERROR", "error": error}
 
 
-def _fetch_rows(chapters: list[tuple], options: dict) -> Iterator[dict]:
-    """The shared fetch body (throttle -> GET -> normalize -> Either
-    rows as FETCH_SCHEMA dicts), one TokenBucket per caller (a batch
-    fetch task, a microbatch slice for the streaming reader, the whole
-    work-list for dispatch_replay) — the reference's adaptive throttle
-    placed per worker (meetup.rkt:9-26). `options["config"]` is the
-    run's config, whose API tokens go into each request
-    (build_request)."""
+def _fetch_rows(chapters: list[tuple], transport: str, config: dict | None) -> Iterator[dict]:
+    """The shared fetch body (backoff -> GET -> normalize -> Either rows
+    as FETCH_SCHEMA dicts) over `transport` ("live" or "replay"), with
+    one Throttle for every request of the call (a batch fetch task, a
+    microbatch slice for the streaming reader, the whole work-list for
+    dispatch_replay) — the reference's adaptive throttle placed per
+    worker (meetup.rkt:9-26). `config` is the run's config, whose API
+    tokens go into each request (build_request)."""
     from cuttlefish_spark.sources.fetch import (
         FixtureTransport,
         fetch_events,
         http_transport,
     )
-    from cuttlefish_spark.sources.throttle import TokenBucket
+    from cuttlefish_spark.sources.throttle import Throttle
 
-    bucket = TokenBucket(
-        rate_per_sec=float(options.get("rate_per_sec", 1000.0))
-    )
-    live = options.get("transport", "replay") == "live"
+    throttle = Throttle()
+    get = http_transport if transport == "live" else FixtureTransport()
     for chapter in chapters:
         chapter_id, _title, adapter, service_id, organization = chapter
         normalize = ADAPTERS.get(adapter)
         if normalize is None:
-            # No request is made, so no token is spent: the bucket
-            # gates requests only (fetch_events acquires per GET).
+            # No request is made, so the throttle is not consulted.
             yield _error_row(chapter_id, f"No adapter found: {adapter}")
             continue
-        transport = http_transport if live else FixtureTransport()
         events, error = fetch_events(
             adapter,
             service_id,
             organization or service_id,
-            transport=transport,
-            bucket=bucket,
-            config=options.get("config"),
+            transport=get,
+            throttle=throttle,
+            config=config,
         )
         if error is not None:
             yield _error_row(chapter_id, error)
@@ -141,7 +138,7 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
         copy.copy()s the iterator it is handed, and generators don't
         copy. The slice is bounded by chapters_per_batch — exactly the
         documented driver-side prefetch budget."""
-        rows = _fetch_rows(self._items[i:j], self.options)
+        rows = _fetch_rows(self._items[i:j], "replay", None)
         return iter([tuple(r[n] for n in FETCH_SCHEMA.names) for r in rows])
 
     def commit(self, end: dict) -> None:

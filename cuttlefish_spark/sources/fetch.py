@@ -24,9 +24,10 @@ urllib GET; tests (and the replay DataSource mode) pass
 `FixtureTransport`, which answers from the golden fixtures with
 HTTP-shaped (status, headers, body) responses — the reference's own
 test strategy (eventbrite.rkt:123-146) lifted to the transport seam.
-Each fetch partition owns a TokenBucket; `acquire()` gates every
-request and `update_from_headers` applies the adaptive backoff, so a
-1000-executor cluster self-limits to executors x rate.
+The caller's `Throttle` waits out any pending header backoff before
+each request and reads the response's X-Ratelimit-* headers after it;
+there is no fixed rate. A live fetch task holds one chapter, so its
+backoff never delays a second request.
 """
 
 from __future__ import annotations
@@ -34,10 +35,11 @@ from __future__ import annotations
 import json
 from typing import Any, Callable
 
-from cuttlefish_spark.sources.throttle import TokenBucket
+from cuttlefish_spark.sources.throttle import Throttle
 
-# transport(url, params) -> (status_code, headers, body_text)
-Transport = Callable[[str, dict], tuple[int, dict, str]]
+# transport(url, params) -> (status_code, headers, body); the body is
+# the JSON text, as bytes or str.
+Transport = Callable[[str, dict], tuple[int, dict, bytes | str]]
 
 _MEETUP_PARAMS = {
     # meetup.rkt:31-36
@@ -82,11 +84,14 @@ def build_request(
 _HTTP_TIMEOUT_S = 30.0
 
 
-def http_transport(url: str, params: dict) -> tuple[int, dict, str]:
-    """Live transport: stdlib urllib GET. HTTP status errors return as
-    (code, headers, '') so the caller owns the Either contract;
-    network/read failures raise OSError for the caller's read-error
-    branch."""
+def http_transport(url: str, params: dict) -> tuple[int, dict, bytes]:
+    """Live transport: stdlib urllib GET, body returned undecoded for
+    `json.loads`. HTTP status errors return as (code, headers, b'') so
+    the caller owns the Either contract; every other failure of the
+    request or the read (a refused connection, a URL http.client
+    rejects, a truncated body) raises OSError for the caller's
+    read-error branch."""
+    from http.client import HTTPException
     from urllib.error import HTTPError
     from urllib.parse import urlencode
     from urllib.request import Request, urlopen
@@ -95,9 +100,11 @@ def http_transport(url: str, params: dict) -> tuple[int, dict, str]:
     req = Request(full, headers={"Accept": "application/json"})
     try:
         with urlopen(req, timeout=_HTTP_TIMEOUT_S) as resp:  # noqa: S310 - https APIs only
-            return resp.status, dict(resp.headers), resp.read().decode("utf-8")
+            return resp.status, dict(resp.headers), resp.read()
     except HTTPError as e:
-        return e.code, dict(e.headers or {}), ""
+        return e.code, dict(e.headers or {}), b""
+    except (HTTPException, UnicodeError) as e:  # InvalidURL, IncompleteRead, non-ASCII URL
+        raise OSError(f"{type(e).__name__}: {e}") from e
 
 
 class FixtureTransport:
@@ -149,26 +156,26 @@ def fetch_events(
     organization: str | None,
     *,
     transport: Transport,
-    bucket: TokenBucket,
+    throttle: Throttle,
     config: dict | None = None,
 ) -> tuple[list | None, str | None]:
     """One throttled chapter fetch -> (events, None) or (None, error).
 
     The worker body of meetup.rkt:66-95 re-expressed over the
-    transport seam: throttle, GET, header-driven throttle update,
-    Either-style error strings."""
-    bucket.acquire()
+    transport seam: wait out any header backoff, GET, header-driven
+    throttle update, Either-style error strings."""
+    throttle.wait()
     url, params = build_request(adapter, service_id, organization, config)
     try:
         status, headers, body = transport(url, params)
     except OSError:
         return None, f"Could not read data for {service_id}"
-    bucket.update_from_headers(headers)
+    throttle.update_from_headers(headers)
     if status != 200:
         return None, f"Couldn't fetch {service_id}: {status}"
     try:
         doc = json.loads(body)
-    except (json.JSONDecodeError, ValueError):
+    except ValueError:  # not JSON, or not UTF-8
         return None, f"Couldn't format {service_id} into correct JSON"
     events = _envelope(adapter, doc)
     # Events are keyed by id in the chapter's file, so an event that is

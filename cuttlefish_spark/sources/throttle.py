@@ -1,16 +1,19 @@
-"""Adaptive rate limiting for external-API fetch partitions.
+"""The reference's adaptive throttle: back off on the rate-limit headers.
 
 Parity: /root/reference/private/workers/meetup.rkt:9-26 — the
 reference tracks `X-Ratelimit-Remaining` / `X-Ratelimit-Reset`
 response headers in shared boxes and sleeps `reset+2` seconds when
 fewer than 3 requests remain (`apply-throttle` / `update-throttle`,
-applied around each GET at meetup.rkt:67,86).
+applied around each GET at meetup.rkt:67,86). There is no fixed rate:
+a server that does not say it is close to its limit is never waited
+for.
 
-On Spark the shared-box pattern becomes *per-executor* state: each
-fetch partition owns a bucket instance (mapInPandas/foreachPartition
-closure), so a 1000-executor cluster self-limits to
-executors x rate — size `rate_per_sec` accordingly, exactly like
-sizing the reference's 3-thread pool (api-runner.rkt:25).
+On Spark the shared boxes become one `Throttle` per `_fetch_rows`
+call, shared by every request that call makes (a batch fetch task's
+chunk, a streaming microbatch's slice, the driver-side work-list). On
+live transport `chapter_chunks` gives each task one chapter, so a
+task makes one request and its backoff never delays another request
+until several requests run in one task.
 """
 
 from __future__ import annotations
@@ -22,34 +25,21 @@ import time
 MIN_REMAINING = 3
 
 
-class TokenBucket:
-    """Token-bucket limiter with header-driven adaptive backoff."""
+class Throttle:
+    """Header-driven backoff: `update_from_headers` after each response,
+    `wait` before each request. `clock`/`sleep` are test seams."""
 
-    def __init__(self, rate_per_sec: float = 5.0, burst: int = 5,
-                 clock=time.monotonic, sleep=time.sleep):
-        self.rate = rate_per_sec
-        self.capacity = float(burst)
-        self.tokens = float(burst)
+    def __init__(self, clock=time.monotonic, sleep=time.sleep):
         self._clock = clock
         self._sleep = sleep
-        self._last = clock()
         self._backoff_until = 0.0
 
-    def acquire(self) -> None:
-        """Block until a request slot is available (apply-throttle,
+    def wait(self) -> None:
+        """Sleep until a pending backoff ends (apply-throttle,
         meetup.rkt:12-17)."""
-        now = self._clock()
-        if now < self._backoff_until:
-            self._sleep(self._backoff_until - now)
-            now = self._clock()
-        self.tokens = min(self.capacity, self.tokens + (now - self._last) * self.rate)
-        self._last = now
-        if self.tokens < 1.0:
-            wait = (1.0 - self.tokens) / self.rate
-            self._sleep(wait)
-            self.tokens = 1.0
-            self._last = self._clock()
-        self.tokens -= 1.0
+        delay = self._backoff_until - self._clock()
+        if delay > 0:
+            self._sleep(delay)
 
     def update_from_headers(self, headers: dict) -> None:
         """Adaptive backoff from API headers (update-throttle,

@@ -23,6 +23,16 @@ from pyspark.sql import types as T
 
 from cuttlefish_spark.functions import dec_sum
 
+# Event-time watermark delay of every stream below: a row older than
+# the stream's max event time minus this is late and dropped.
+WATERMARK = "2 hours"
+SESSION_GAP = "30 minutes"
+# Interval joins pair a purchase with the clicks of the preceding hour.
+HORIZON_MINUTES = 60
+# running_totals_stream evicts a user idle for this much event time.
+TTL_HOURS = 24
+
+
 def _ts_column_index(path: str) -> int:
     """Index of the `ts` column in a parquet file's physical layout."""
     import pyarrow.parquet as pq
@@ -134,11 +144,11 @@ def read_events_stream(
     return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def tumbling_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def tumbling_stream(events: DataFrame) -> DataFrame:
     """Watermarked per-hour tumbling aggregate — the streaming twin of
     operators.relational.tumbling_window (same output columns)."""
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
@@ -150,15 +160,14 @@ def tumbling_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def session_stream(events: DataFrame, gap: str = "30 minutes",
-                   watermark: str = "2 hours") -> DataFrame:
+def session_stream(events: DataFrame) -> DataFrame:
     """Watermarked session windows (30-min gap) — the streaming twin of
     operators.relational.sessionize. F.session_window keeps per-key
     open sessions in the state store; the watermark closes and evicts
     them once event time passes end+gap."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
+        events.withWatermark("ts", WATERMARK)
+        .groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             dec_sum(F.col("value"), alias="session_value"),
@@ -178,7 +187,7 @@ DEDUP_OUT_SCHEMA = (
 )
 
 
-def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup, first-seen wins: the streaming twin of
     the reference's id re-key dedup (meetup.rkt:40-41 / A14 — there
     last-write-wins inside one batch; across an unbounded stream the
@@ -207,7 +216,7 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
             yield first[["event_id", "ts", "user_id", "event_type", "value"]]
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("event_id")
         .applyInPandasWithState(
             first_seen,
@@ -219,10 +228,9 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     )
 
 
-def interval_join_stream(events: DataFrame, watermark: str = "2 hours",
-                         horizon_minutes: int = 60) -> DataFrame:
+def interval_join_stream(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: each purchase joined to the same
-    user's clicks from the preceding `horizon_minutes` — the streaming
+    user's clicks from the preceding HORIZON_MINUTES — the streaming
     twin of the batch as-of/range joins (operators.relational_ext.
     asof_join, operators.scale.range_join_bucketed).
 
@@ -238,7 +246,7 @@ def interval_join_stream(events: DataFrame, watermark: str = "2 hours",
             F.col("ts").alias("click_ts"),
             F.col("event_id").alias("click_id"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", WATERMARK)
     )
     purchases = (
         events.filter(F.col("event_type") == "purchase")
@@ -248,7 +256,7 @@ def interval_join_stream(events: DataFrame, watermark: str = "2 hours",
             F.col("event_id").alias("purchase_id"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
     )
     return purchases.join(
         clicks,
@@ -256,7 +264,7 @@ def interval_join_stream(events: DataFrame, watermark: str = "2 hours",
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (
             F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon_minutes} MINUTES")
+            >= F.col("purchase_ts") - F.expr(f"INTERVAL {HORIZON_MINUTES} MINUTES")
         ),
         "inner",
     ).select("p_user", "purchase_id", "purchase_ts", "purchase_value",
@@ -311,13 +319,12 @@ def run_available_now_to_parquet(stream_df: DataFrame, out_dir: str,
 RUNNING_OUT_SCHEMA = "user_id long, n_events long, total_value double"
 
 
-def running_totals_stream(events: DataFrame, watermark: str = "2 hours",
-                          ttl_hours: int = 24) -> DataFrame:
+def running_totals_stream(events: DataFrame) -> DataFrame:
     """Per-user RUNNING totals with TTL state eviction — the custom
     stateful-aggregation pattern dedup_stream's docstring defers to:
     state keyed by user_id holds (count, sum, last-seen event time);
     every micro-batch emits the user's updated lifetime totals (update
-    mode), and a user idle past `ttl_hours` of EVENT TIME is evicted
+    mode), and a user idle past TTL_HOURS of EVENT TIME is evicted
     via EventTimeTimeout — the state-store-bounding contract that keeps
     an unbounded keyed stream at O(active keys), not O(all keys ever).
 
@@ -330,7 +337,7 @@ def running_totals_stream(events: DataFrame, watermark: str = "2 hours",
 
     import pandas as pd  # noqa: PLC0415
 
-    ttl_ms = ttl_hours * 3600 * 1000
+    ttl_ms = TTL_HOURS * 3600 * 1000
 
     def update(key, pdf_iter, state):
         if state.hasTimedOut:
@@ -350,7 +357,7 @@ def running_totals_stream(events: DataFrame, watermark: str = "2 hours",
         )
 
     return (
-        events.withWatermark("ts", watermark)
+        events.withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
             update,
@@ -362,9 +369,7 @@ def running_totals_stream(events: DataFrame, watermark: str = "2 hours",
     )
 
 
-def interval_left_join_stream(events: DataFrame, cutoff_ts,
-                              watermark: str = "2 hours",
-                              horizon_minutes: int = 60) -> DataFrame:
+def interval_left_join_stream(events: DataFrame, cutoff_ts) -> DataFrame:
     """LEFT-OUTER stream-stream interval join: every purchase paired
     with the same user's preceding-hour clicks, and purchases with NO
     such click emitted with null click columns — the state-EVICTION
@@ -389,7 +394,7 @@ def interval_left_join_stream(events: DataFrame, cutoff_ts,
             F.col("ts").alias("click_ts"),
             F.col("event_id").alias("click_id"),
         )
-        .withWatermark("click_ts", watermark)
+        .withWatermark("click_ts", WATERMARK)
     )
     # The cutoff must be applied AFTER the watermark node: the
     # purchase-side watermark is computed from rows flowing through
@@ -406,7 +411,7 @@ def interval_left_join_stream(events: DataFrame, cutoff_ts,
             F.col("event_id").alias("purchase_id"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
         .filter(F.col("purchase_ts") <= F.lit(cutoff_ts))
     )
     return purchases.join(
@@ -415,7 +420,7 @@ def interval_left_join_stream(events: DataFrame, cutoff_ts,
         & (F.col("click_ts") <= F.col("purchase_ts"))
         & (
             F.col("click_ts")
-            >= F.col("purchase_ts") - F.expr(f"INTERVAL {horizon_minutes} MINUTES")
+            >= F.col("purchase_ts") - F.expr(f"INTERVAL {HORIZON_MINUTES} MINUTES")
         ),
         "leftOuter",
     ).select("p_user", "purchase_id", "purchase_ts", "purchase_value",

@@ -174,12 +174,24 @@ def test_chapters_drive_dispatch(spark, tmp_path):
     assert out.filter("status = 'OK'").count() == 2  # the two meetup fixture events
 
 
+def test_load_config_not_json_names_file(tmp_path):
+    """A .cuttlefishrc that is not JSON fails naming the file, as one
+    whose top level is not an object does."""
+    import pytest
+
+    from cuttlefish_spark.sources.config import load_config
+
+    (tmp_path / ".cuttlefishrc").write_text("json-out-path: /data/out\n")
+    with pytest.raises(ValueError, match=".cuttlefishrc"):
+        load_config(cwd=str(tmp_path))
+
+
 def test_fetch_events_ok_and_throttle_update():
     """fetch_events drives the full worker body (meetup.rkt:66-95):
-    bucket acquired per request, headers fed back to the throttle,
+    backoff waited out per request, headers fed back to the throttle,
     envelope unwrapped per adapter."""
     from cuttlefish_spark.sources.fetch import FixtureTransport, fetch_events
-    from cuttlefish_spark.sources.throttle import TokenBucket
+    from cuttlefish_spark.sources.throttle import Throttle
 
     naps = []
     clock_now = [0.0]
@@ -191,17 +203,17 @@ def test_fetch_events_ok_and_throttle_update():
         naps.append(s)
         clock_now[0] += s
 
-    # remaining below MIN_REMAINING => next acquire backs off reset+2s
+    # remaining below MIN_REMAINING => next wait backs off reset+2s
     transport = FixtureTransport(ratelimit_remaining=1, ratelimit_reset=5.0)
-    bucket = TokenBucket(rate_per_sec=1000.0, clock=clock, sleep=sleep)
+    throttle = Throttle(clock=clock, sleep=sleep)
     events, error = fetch_events(
-        "meetup", "papers-we-love", None, transport=transport, bucket=bucket
+        "meetup", "papers-we-love", None, transport=transport, throttle=throttle
     )
     assert error is None and len(events) > 0
     (url, params), = transport.calls
     assert url == "https://api.meetup.com/papers-we-love/events"
     assert params["status"] == "upcoming,past"  # meetup.rkt:31-36
-    bucket.acquire()
+    throttle.wait()
     assert naps and abs(sum(naps) - 7.0) < 1e-9  # reset(5) + 2
 
 
@@ -209,11 +221,11 @@ def test_fetch_events_404_and_read_error():
     """HTTP error -> \"Couldn't fetch id: 404\" (README.md:66-72);
     transport raise -> read-error message (meetup.rkt:76-80)."""
     from cuttlefish_spark.sources.fetch import FixtureTransport, fetch_events
-    from cuttlefish_spark.sources.throttle import TokenBucket
+    from cuttlefish_spark.sources.throttle import Throttle
 
     events, error = fetch_events(
         "meetup", "no-such-chapter", None,
-        transport=FixtureTransport(), bucket=TokenBucket(rate_per_sec=1000.0),
+        transport=FixtureTransport(), throttle=Throttle(),
     )
     assert events is None and error == "Couldn't fetch no-such-chapter: 404"
 
@@ -221,20 +233,20 @@ def test_fetch_events_404_and_read_error():
         raise OSError("connection reset")
 
     events, error = fetch_events(
-        "meetup", "x", None, transport=broken, bucket=TokenBucket(rate_per_sec=1000.0)
+        "meetup", "x", None, transport=broken, throttle=Throttle()
     )
     assert events is None and error == "Could not read data for x"
 
 
 def test_fetch_events_bad_json():
     from cuttlefish_spark.sources.fetch import fetch_events
-    from cuttlefish_spark.sources.throttle import TokenBucket
+    from cuttlefish_spark.sources.throttle import Throttle
 
     def junk(url, params):
         return 200, {}, "not json {"
 
     events, error = fetch_events(
-        "facebook", "svc", None, transport=junk, bucket=TokenBucket(rate_per_sec=1000.0)
+        "facebook", "svc", None, transport=junk, throttle=Throttle()
     )
     assert events is None and error == "Couldn't format svc into correct JSON"
 
@@ -372,6 +384,17 @@ def test_log_rotation_daily(tmp_path):
     assert (tmp_path / "logs" / "cuttlefish.log").read_text() == "WROTE: b (2)\n"
 
 
+def test_append_log_no_lines_appends_nothing(tmp_path):
+    """An empty work-list audits no chapter, so it adds no line to
+    cuttlefish.log (a bare newline is neither WROTE: nor ERROR:)."""
+    from cuttlefish_spark.run import append_log
+
+    d = str(tmp_path / "logs")
+    append_log(d, ["WROTE: a (1)"])
+    append_log(d, [])
+    assert (tmp_path / "logs" / "cuttlefish.log").read_text() == "WROTE: a (1)\n"
+
+
 def test_run_pipeline_missing_chapters_raises(spark, tmp_path):
     """A misconfigured run must fail loudly, not silently replay the
     built-in fixture chapters (reference: an unreadable chapters table
@@ -392,6 +415,11 @@ def test_run_pipeline_missing_chapters_raises(spark, tmp_path):
     listed.write_text('[{"newyork": {}}]')
     with _pytest.raises(ValueError, match="list.json"):
         run_pipeline(spark, config={**config, "chapter-json-file": str(listed)})
+
+    garbled = tmp_path / "garbled.json"
+    garbled.write_text('{"newyork": ')
+    with _pytest.raises(ValueError, match="garbled.json"):
+        run_pipeline(spark, config={**config, "chapter-json-file": str(garbled)})
 
 
 def test_datasource_chapter_batching_invariance(spark):
@@ -496,22 +524,22 @@ def test_streaming_datasource_matches_batch(spark):
 
 
 def test_unknown_adapter_spends_no_throttle_token(monkeypatch):
-    """The bucket gates requests only (throttle.py, meetup.rkt:67,86):
+    """The throttle gates requests only (throttle.py, meetup.rkt:67,86):
     an unknown-adapter chapter makes no request, so a work-list of only
-    unknown adapters never acquires (and so never sleeps), while a
-    known adapter acquires once per GET."""
+    unknown adapters never waits on it, while a known adapter waits
+    once per GET."""
     from cuttlefish_spark.sources.datasource import _fetch_rows
-    from cuttlefish_spark.sources.throttle import TokenBucket
+    from cuttlefish_spark.sources.throttle import Throttle
 
     calls = []
-    monkeypatch.setattr(TokenBucket, "acquire", lambda self: calls.append(1))
+    monkeypatch.setattr(Throttle, "wait", lambda self: calls.append(1))
     unknown = [(f"x{i}", "X", "carrierpigeon", "deep-six", None) for i in range(20)]
-    rows = list(_fetch_rows(unknown, {"rate_per_sec": 1.0}))
+    rows = list(_fetch_rows(unknown, "replay", None))
     assert [r["status"] for r in rows] == ["ERROR"] * 20
     assert calls == []
 
     known = [("newyork", "New York", "meetup", "papers-we-love", None)]
-    list(_fetch_rows(known, {"rate_per_sec": 1.0}))
+    list(_fetch_rows(known, "replay", None))
     assert len(calls) == 1
 
 
@@ -600,14 +628,14 @@ def test_fetch_events_event_without_id_is_format_error():
     import json as _json
 
     from cuttlefish_spark.sources.fetch import fetch_events
-    from cuttlefish_spark.sources.throttle import TokenBucket
+    from cuttlefish_spark.sources.throttle import Throttle
 
     for events in ([{"id": "e1"}, {"name": "no id"}], [{"id": "e1"}, {"id": None}],
                    [{"id": "e1"}, "not an object"]):
         body = _json.dumps(events)
         got = fetch_events(
             "meetup", "svc", None, transport=lambda url, params: (200, {}, body),
-            bucket=TokenBucket(rate_per_sec=1000.0),
+            throttle=Throttle(),
         )
         assert got == (None, "Couldn't format svc into correct JSON")
 
@@ -631,8 +659,112 @@ def test_fetch_rows_sends_config_tokens(monkeypatch):
            "eventbrite-access-tokens": {"pwl-london": "ebtok"}}
     chapters = [("stlouis", "St. Louis", "facebook", "pwl-stl", None),
                 ("london", "London", "eventbrite", "pwl-london", "2417467656")]
-    list(_fetch_rows(chapters, {"transport": "live", "config": cfg}))
+    list(_fetch_rows(chapters, "live", cfg))
     assert [p.get("access_token", p.get("token")) for _, p in calls] == ["fbtok", "ebtok"]
+
+
+def test_replay_fetch_rows_never_sleeps(monkeypatch):
+    """The header backoff is the one throttle (meetup.rkt:9-26): replay
+    reports plenty of requests remaining, so 2,000 fixture chapters
+    through one _fetch_rows call never sleep."""
+    import functools
+
+    from cuttlefish_spark.sources import throttle
+    from cuttlefish_spark.sources.datasource import _fetch_rows
+    from cuttlefish_spark.sources.fixtures import synth_chapters
+
+    sleeps = []
+    monkeypatch.setattr(throttle, "Throttle",
+                        functools.partial(throttle.Throttle, sleep=sleeps.append))
+    rows = list(_fetch_rows(synth_chapters(2000), "replay", None))
+    assert sum(r["status"] == "OK" for r in rows) == 500 * 7  # 7 events per 4 protos
+    assert sleeps == []
+
+
+def test_fetch_rows_header_backoff_delays_next_request(monkeypatch):
+    """Within one _fetch_rows call every request shares the throttle: a
+    response with X-Ratelimit-Remaining 1 and Reset 5 delays the next
+    chapter's request by reset + 2 = 7 s, and the rows are unchanged."""
+    import functools
+
+    from cuttlefish_spark.sources import fetch, fixtures, throttle
+    from cuttlefish_spark.sources.datasource import _fetch_rows
+
+    now = [0.0]
+
+    def sleep(s):
+        now[0] += s
+
+    monkeypatch.setattr(throttle, "Throttle", functools.partial(
+        throttle.Throttle, clock=lambda: now[0], sleep=sleep))
+    replay = fetch.FixtureTransport(ratelimit_remaining=1, ratelimit_reset=5.0)
+    sent = []
+
+    def transport(url, params):
+        sent.append(now[0])
+        return replay(url, params)
+
+    expected = list(_fetch_rows(fixtures.CHAPTERS, "replay", None))
+    assert now[0] == 0.0
+    monkeypatch.setattr(fetch, "FixtureTransport", lambda: transport)
+    rows = list(_fetch_rows(fixtures.CHAPTERS, "replay", None))
+    assert sent == [0.0, 7.0, 14.0]  # three known adapters, one request each
+    assert rows == expected
+
+
+def test_live_fetch_failures_are_error_rows(monkeypatch):
+    """A live fetch that fails with something other than an OSError is
+    that chapter's ERROR row, not a crashed run: a URL http.client
+    rejects (a space, a non-ASCII id) and a truncated body read as read
+    errors, a body that is not UTF-8 as a format error. Sockets are
+    disabled, so nothing leaves the process."""
+    import http.client
+    import socket
+    import urllib.request
+
+    from cuttlefish_spark.sources.datasource import _fetch_rows
+
+    def no_network(*args, **kwargs):
+        raise AssertionError("the test must not open a connection")
+
+    for name in ("create_connection", "getaddrinfo"):
+        monkeypatch.setattr(socket, name, no_network)
+    monkeypatch.setattr(socket.socket, "connect", no_network)
+
+    class Response:
+        status, headers = 200, {}
+
+        def __init__(self, read):
+            self.read = read
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return False
+
+    def truncated():
+        raise http.client.IncompleteRead(b'[{"id": "e1"', 40)
+
+    bodies = {"latin1": lambda: b'[{"id": "caf\xe9"}]', "cut": truncated}
+    real_urlopen = urllib.request.urlopen
+
+    def urlopen(req, timeout=None):
+        service_id = req.full_url.split("/")[3]
+        if service_id in bodies:
+            return Response(bodies[service_id])
+        return real_urlopen(req, timeout=timeout)
+
+    monkeypatch.setattr(urllib.request, "urlopen", urlopen)
+    chapters = [(sid, sid, "meetup", sid, None)
+                for sid in ("bad id", "m\u00fcnchen", "latin1", "cut")]
+    rows = list(_fetch_rows(chapters, "live", None))
+    assert [(r["chapter_id"], r["status"], r["error"]) for r in rows] == [
+        ("bad id", "ERROR", "Could not read data for bad id"),
+        ("m\u00fcnchen", "ERROR", "Could not read data for m\u00fcnchen"),
+        ("latin1", "ERROR", "Couldn't format latin1 into correct JSON"),
+        ("cut", "ERROR", "Could not read data for cut"),
+    ]
 
 
 def _replay_payload(spark, monkeypatch, adapter: str, events: list) -> dict:

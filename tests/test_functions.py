@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from cuttlefish_spark.functions import get_in, hash60, tokens, word_shingles
 from cuttlefish_spark.functions.markdown import render_markdown
-from cuttlefish_spark.sources.throttle import TokenBucket
+from cuttlefish_spark.sources.throttle import Throttle
 
 # --- get_in: the hash.rkt:110-140 properties, over JSON columns -----
 
@@ -138,36 +138,18 @@ def test_markdown_wrapper_and_subset():
 # --- throttle (meetup.rkt:9-26 parity) -----------------------------
 
 
-def test_token_bucket_paces_requests():
-    clock = [0.0]
-    sleeps = []
-
-    def fake_clock():
-        return clock[0]
-
-    def fake_sleep(s):
-        sleeps.append(s)
-        clock[0] += s
-
-    tb = TokenBucket(rate_per_sec=2.0, burst=1, clock=fake_clock, sleep=fake_sleep)
-    tb.acquire()  # burst token, no sleep
-    tb.acquire()  # must wait ~0.5s
-    assert sleeps and abs(sleeps[0] - 0.5) < 1e-6
-
-
 def test_token_bucket_header_backoff():
     clock = [0.0]
     sleeps = []
-    tb = TokenBucket(
-        rate_per_sec=100.0, burst=10,
+    tb = Throttle(
         clock=lambda: clock[0], sleep=lambda s: (sleeps.append(s), clock.__setitem__(0, clock[0] + s)),
     )
     tb.update_from_headers({"X-Ratelimit-Remaining": "2", "X-Ratelimit-Reset": "7"})
-    tb.acquire()
+    tb.wait()
     assert sleeps and abs(sleeps[0] - 9.0) < 1e-6  # reset + 2 (meetup.rkt:12-17)
     tb.update_from_headers({"X-Ratelimit-Remaining": "50", "X-Ratelimit-Reset": "7"})
     n = len(sleeps)
-    tb.acquire()
+    tb.wait()
     assert len(sleeps) == n  # plenty remaining -> no backoff
 
 

@@ -57,33 +57,6 @@ def test_exclusive_prefix_offsets(subtotals):
     assert acc == sum(subtotals)
 
 
-@given(
-    rate=st.floats(0.5, 100.0),
-    burst=st.integers(1, 5),
-    n=st.integers(1, 40),
-)
-@settings(max_examples=50, deadline=None)
-def test_token_bucket_enforces_rate(rate, burst, n):
-    """Acquiring n tokens through a TokenBucket must consume at least
-    (n - burst)/rate seconds of (simulated) time — the throttle can
-    never run ahead of its configured rate."""
-    from cuttlefish_spark.sources.throttle import TokenBucket
-
-    now = [0.0]
-
-    def clock():
-        return now[0]
-
-    def sleep(s):
-        now[0] += s
-
-    b = TokenBucket(rate_per_sec=rate, burst=burst, clock=clock, sleep=sleep)
-    for _ in range(n):
-        b.acquire()
-    min_elapsed = max(0.0, (n - burst) / rate)
-    assert now[0] >= min_elapsed - 1e-6
-
-
 def _chunk_spans(n_tok: int, w: int, s: int) -> list[tuple[int, int]]:
     """The chunk layout doc_chunking computes: [kS, min(kS+W, n)) for
     k in 0..n_chunks-1 with the closed-form count."""

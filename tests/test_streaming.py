@@ -158,7 +158,6 @@ def test_watermark_drops_late_data(spark, tmp_path):
 
     stream = tumbling_stream(
         read_events_stream(spark, str(d), max_files_per_trigger=1),
-        watermark="2 hours",
     )
     run_available_now(stream, "late_mem", mode="append")
     got = {
