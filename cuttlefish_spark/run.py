@@ -11,8 +11,9 @@ logfile-path (A23, api-runner.rkt:80-89). One Python task per chunk
 fetches its chapters, normalizes each payload (`adapters.ADAPTERS`,
 then `flat_record`) and writes their files, as in the reference's
 worker, and the write returns every chapter's audit tuple: a run is
-one Spark job of one stage with no shuffle, and builds no DataFrame
-but the returned audit frame; the CLI prints the log lines.
+one Spark job of one stage with no shuffle, and builds no DataFrame:
+the audit comes back as a sorted list of tuples, whose log lines the
+CLI prints.
 
 Usage: python -m cuttlefish_spark.run [configfile]
 """
@@ -22,9 +23,7 @@ from __future__ import annotations
 import os
 import sys
 
-from pyspark.sql import DataFrame, SparkSession
-
-AUDIT_DDL = "chapter_id string, status string, n_events long, log_line string"
+from pyspark.sql import SparkSession
 
 
 def run_pipeline(
@@ -32,9 +31,10 @@ def run_pipeline(
     config: dict | None = None,
     config_arg: str | None = None,
     transport: str = "replay",
-) -> DataFrame:
+) -> list[tuple[str, str, int, str]]:
     """Run the whole reference pipeline under `config`; returns the
-    per-chapter audit frame (chapter_id, status, n_events, log_line).
+    per-chapter audit as `(chapter_id, status, n_events, log_line)`
+    tuples sorted by chapter id.
     A chapter that fails anywhere (fetch, an id that is not a safe file
     name, the write) is an ERROR row; the run goes on.
 
@@ -58,7 +58,7 @@ def run_pipeline(
         for cid, status, n, _error in write_keyed_json(records, config["json-out-path"])
     )
     append_log(config["logfile-path"], [f"{line} ({n})" for _, _, n, line in audit])
-    return spark.createDataFrame(audit, AUDIT_DDL)
+    return audit
 
 
 def append_log(log_dir: str, lines: list[str]) -> None:
@@ -87,8 +87,8 @@ def main() -> None:
     spark = get_spark("cuttlefish-run")
     spark.sparkContext.setLogLevel("ERROR")
     audit = run_pipeline(spark, config_arg=sys.argv[1] if len(sys.argv) > 1 else None)
-    for r in audit.orderBy("chapter_id", "status").collect():
-        print(f"{r['log_line']} ({r['n_events']})")
+    for _cid, _status, n, line in audit:
+        print(f"{line} ({n})")
 
 
 if __name__ == "__main__":

@@ -14,10 +14,11 @@ three workers:
   98-114).
 - Errors mirror the worker Either contract (meetup.rkt:72-80): HTTP
   status errors -> "Couldn't fetch {id}: {code}" (the 404 path shown
-  in README.md:66-72), read errors -> "Could not read data for {id}",
-  undecodable bodies, and events that are not objects or whose id is
-  not a string or an integer -> "Couldn't format {id} into correct
-  JSON".
+  in README.md:66-72), read errors -> "Could not read data for {id}"
+  (also an id or organization that is not one URL path segment, which
+  is never requested), undecodable bodies, and events that are not
+  objects or whose id is not a string or an integer -> "Couldn't
+  format {id} into correct JSON".
 
 The transport is injectable: `http_transport` is the live stdlib
 urllib GET; tests (and the replay DataSource mode) pass
@@ -50,6 +51,16 @@ _MEETUP_PARAMS = {
 }
 
 
+def _segment(part: object) -> str:
+    """`part` as one URL path segment. ValueError when it is empty, `.`
+    or `..`, or holds `/`, `?`, `#` or `%`: each of those makes the URL
+    name another path, query or fragment than the chapter's own."""
+    seg = str(part)
+    if seg in ("", ".", "..") or any(c in seg for c in "/?#%"):
+        raise ValueError(f"not one URL path segment: {seg!r}")
+    return seg
+
+
 def build_request(
     adapter: str,
     service_id: str,
@@ -57,13 +68,15 @@ def build_request(
     config: dict | None = None,
 ) -> tuple[str, dict]:
     """URL + query params for one chapter fetch (worker request shapes
-    cited in the module docstring)."""
+    cited in the module docstring). ValueError for an unknown adapter,
+    or when the id that fills the URL's path segment is not one
+    segment."""
     config = config or {}
     if adapter == "meetup":
-        return f"https://api.meetup.com/{service_id}/events", dict(_MEETUP_PARAMS)
+        return f"https://api.meetup.com/{_segment(service_id)}/events", dict(_MEETUP_PARAMS)
     if adapter == "facebook":
         return (
-            f"https://graph.facebook.com/v2.9/{service_id}/events",
+            f"https://graph.facebook.com/v2.9/{_segment(service_id)}/events",
             {
                 "since": "132001640",  # facebook.rkt:68
                 "access_token": config.get("facebook-access-token", ""),
@@ -72,7 +85,7 @@ def build_request(
     if adapter == "eventbrite":
         tokens = config.get("eventbrite-access-tokens", {})
         return (
-            f"https://www.eventbriteapi.com/v3/organizations/{organization}/events/",
+            f"https://www.eventbriteapi.com/v3/organizations/{_segment(organization)}/events/",
             {
                 "expand": "venue.address",  # eventbrite.rkt:99
                 "token": tokens.get(service_id, ""),
@@ -163,9 +176,15 @@ def fetch_events(
 
     The worker body of meetup.rkt:66-95 re-expressed over the
     transport seam: wait out any header backoff, GET, header-driven
-    throttle update, Either-style error strings."""
+    throttle update, Either-style error strings. A request
+    `build_request` refuses (an id that is not one URL path segment,
+    or an unknown adapter, which `_fetch_rows` filters out first) is a
+    read error, and neither waits nor is sent."""
+    try:
+        url, params = build_request(adapter, service_id, organization, config)
+    except ValueError:
+        return None, f"Could not read data for {service_id}"
     throttle.wait()
-    url, params = build_request(adapter, service_id, organization, config)
     try:
         status, headers, body = transport(url, params)
     except OSError:

@@ -268,6 +268,37 @@ def test_fetch_request_shapes():
     assert params == {"expand": "venue.address", "token": "ebtok"}
 
 
+def test_fetch_ids_that_are_not_one_path_segment_are_never_requested():
+    """A dataService id, or an eventbrite organization, that is empty,
+    `.` or `..`, or holds `/`, `?`, `#` or `%` would make the request
+    name another endpoint, query or fragment (`pwl/../other?x=1`,
+    `123#frag` hiding the access token). Such a chapter is a read
+    error, and no request is made."""
+    from cuttlefish_spark.sources.datasource import _fetch_rows
+    from cuttlefish_spark.sources.fetch import FixtureTransport, fetch_events
+    from cuttlefish_spark.sources.throttle import Throttle
+
+    transport = FixtureTransport()
+    events, _ = fetch_events("meetup", "papers-we-love", None,
+                             transport=transport, throttle=Throttle())
+    assert len(events) == 2 and len(transport.calls) == 1
+
+    bad = [".", "..", "pwl/../other?x=1", "123#frag", "a%2Fb", "papers-we-love?x=1"]
+    cases = ([("meetup", sid, None) for sid in ["", *bad]]
+             + [("facebook", sid, None) for sid in ["", *bad]]
+             + [("eventbrite", "papers-we-love-london", org) for org in bad])
+    for adapter, sid, org in cases:
+        got = fetch_events(adapter, sid, org, transport=transport, throttle=Throttle())
+        assert got == (None, f"Could not read data for {sid}"), (adapter, sid, org)
+    assert len(transport.calls) == 1
+
+    rows = list(_fetch_rows([(f"c{i}", "t", *case) for i, case in enumerate(cases)],
+                            "replay", None))
+    assert [(r["chapter_id"], r["status"], r["error"]) for r in rows] == [
+        (f"c{i}", "ERROR", f"Could not read data for {sid}")
+        for i, (_, sid, _) in enumerate(cases)]
+
+
 def test_datasource_404_rows_flow_to_error_channel(spark):
     """A chapter whose fixture is missing surfaces the HTTP 404 through
     the batch fetch's Either columns instead of failing the job."""
@@ -346,7 +377,7 @@ def test_run_pipeline_end_to_end(spark, tmp_path):
         "logfile-path": str(tmp_path / "logs"),
     }))
     audit = run_pipeline(spark, config=load_config(cwd=str(tmp_path)))
-    rows = {(r["chapter_id"], r["status"]): r["n_events"] for r in audit.collect()}
+    rows = {(cid, status): n for cid, status, n, _line in audit}
     assert rows[("newyork", "OK")] == 2
     assert rows[("london", "OK")] == 3
     assert rows[("atlantis", "ERROR")] == 1
@@ -564,7 +595,7 @@ def _worklist_with_404s(path: str) -> None:
 
 
 def test_run_pipeline_matches_format_composition(spark, tmp_path):
-    """run_pipeline's files, audit log and audit frame equal the
+    """run_pipeline's files, audit log and audit tuples equal the
     composition of its parts over the golden DataFrame path:
     datasource_canonical -> write_keyed_json for the files,
     audit_counts for the audit."""
@@ -594,7 +625,7 @@ def test_run_pipeline_matches_format_composition(spark, tmp_path):
     for name in old_files:
         assert (old_dir / name).read_bytes() == (new_dir / name).read_bytes()
     assert (log_dir / "cuttlefish.log").read_text().splitlines() == old_lines
-    assert [tuple(r) for r in audit.collect()] == [tuple(r) for r in old_audit]
+    assert audit == [tuple(r) for r in old_audit]
     assert _json.loads((new_dir / "c00000.json").read_text()).keys() == {
         "qxw9yzl3", "zvbxrpl2"}
 
@@ -617,7 +648,10 @@ def test_run_pipeline_is_one_spark_job(spark, tmp_path):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
-    assert audit.count() == 1003
+    assert len(audit) == 1003
+    # no staging directory or tmp file is left next to the files
+    assert sorted(p.name for p in (tmp_path / "out").iterdir()) == sorted(
+        f"{cid}.json" for cid, status, _n, _line in audit if status == "OK")
 
 
 def test_fetch_events_event_without_id_is_format_error():
@@ -894,7 +928,7 @@ def test_run_pipeline_bad_chapter_ids_and_failed_writes(spark, tmp_path):
         "chapter-json-file": str(path), "json-out-path": str(out),
         "logfile-path": str(tmp_path / "logs")})
 
-    rows = {r["chapter_id"]: (r["status"], r["n_events"]) for r in audit.collect()}
+    rows = {cid: (status, n) for cid, status, n, _line in audit}
     assert rows == {**{cid: ("ERROR", 2) for cid in bad + ["blocked"]},
                     "good": ("OK", 2), "y" * 250: ("OK", 2)}
     assert sorted(p.name for p in out.iterdir()) == sorted(

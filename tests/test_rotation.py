@@ -100,20 +100,26 @@ def test_manifest_in_sync_with_registry():
 
 def test_live_ordering_puts_manifest_rechecks_in_window():
     """End-to-end on the real committed files: every query whose
-    manifest change-round >= its latest committed verdict round must
+    manifest change-round >= its latest committed verdict round, or
+    whose current source hash differs from its manifest hash, must
     appear before the first plain-green entry."""
     import __spark_entry__ as e
+    from cuttlefish_spark.registry import load_all, source_hash
 
     order = list(e._ordered_specs())
     verdicts = e._driver_verdicts()
     manifest = e._change_manifest()
+    specs = load_all()
     must_recheck = {
         n
         for n in manifest
         if n in verdicts
         and verdicts[n][0]
         and not verdicts[n][2]
-        and verdicts[n][1] <= manifest[n]["round"]
+        and (
+            source_hash(specs[n]) != manifest[n]["hash"]
+            or verdicts[n][1] <= manifest[n]["round"]
+        )
     }
     if not must_recheck:
         return

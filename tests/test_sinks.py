@@ -103,3 +103,57 @@ def test_write_keyed_json_counts_events_in_file(spark, tmp_path):
     events = json.loads((out / "c1.json").read_text())
     assert sorted(events) == ["e1", "e2"]
     assert counts == [("c1", "OK", 2, None)]
+
+
+def _next_stage_dirs(spark, out, n=64):
+    """The staging directories in `out` of this SparkContext's next `n`
+    task attempts: attempt ids only grow, so they follow the id of a
+    one-task job run now."""
+    from pyspark import TaskContext
+
+    last = spark.sparkContext.parallelize([0], 1).map(
+        lambda _: TaskContext.get().taskAttemptId()).collect()[0]
+    return [out / f".{last + i}.tmp" for i in range(1, n + 1)]
+
+
+def test_write_keyed_json_unstageable_partition_is_error_tuples(spark, tmp_path):
+    """A task whose staging directory cannot be created (here a file
+    holds its name) turns each of its OK keys into that key's ERROR
+    tuple and writes no file; the job does not fail."""
+    rows = [("a", "e1", "OK", None), ("a", "e2", "OK", None),
+            ("b", None, "ERROR", "Couldn't fetch b: 404")]
+    df = spark.createDataFrame(
+        rows, "chapter_id string, event_id string, status string, error string"
+    ).coalesce(1)
+    out = tmp_path / "unstaged"
+    out.mkdir()
+    blockers = _next_stage_dirs(spark, out)
+    for path in blockers:
+        path.write_text("not a directory")
+    (a, b) = sorted(write_keyed_json(_records(df), str(out)))
+    assert a[:3] == ("a", "ERROR", 2)
+    assert a[3].startswith("Couldn't write 'a': [Errno 17] File exists")
+    assert b == ("b", "ERROR", 1, "Couldn't fetch b: 404")
+    assert sorted(out.iterdir()) == sorted(blockers)
+
+
+def test_write_keyed_json_stale_staging_dir_does_not_change_files(spark, tmp_path):
+    """A staging directory left by a killed attempt, holding a torn tmp
+    file under the tmp name and a stray file, does not change the files
+    a new attempt with the same id writes; the new attempt removes it."""
+    df = dispatch_replay(spark).filter("status = 'OK'").coalesce(1)
+    fresh = tmp_path / "fresh"
+    want = write_keyed_json(_records(df), str(fresh))
+    out = tmp_path / "stale"
+    stale = _next_stage_dirs(spark, out)
+    for stage in stale:
+        stage.mkdir(parents=True)
+        (stage / "chapter.json.tmp").write_text('{"torn": ')
+        (stage / "stray").write_text("x")
+    assert write_keyed_json(_records(df), str(out)) == want
+    files = sorted(p.name for p in fresh.iterdir())
+    assert files == ["london.json", "newyork.json", "stlouis.json"]
+    assert sorted(p.name for p in out.iterdir() if p.suffix == ".json") == files
+    for name in files:
+        assert (out / name).read_bytes() == (fresh / name).read_bytes()
+    assert sum(stage.exists() for stage in stale) == len(stale) - 1
