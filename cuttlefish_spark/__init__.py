@@ -14,8 +14,4 @@ posture: declarative DataFrame plans, broadcast-able dims, partial
 aggregation, pushed-down predicates, no driver-side loops.
 """
 
-from cuttlefish_spark.session import get_spark
-from cuttlefish_spark.io import TABLES, load_table, register_views
-
-__all__ = ["get_spark", "TABLES", "load_table", "register_views"]
 __version__ = "0.1.0"

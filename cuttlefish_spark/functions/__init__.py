@@ -4,7 +4,6 @@ from cuttlefish_spark.functions.columns import (
     dot,
     get_in,
     hash60,
-    minhash,
     tokens,
     word_shingles,
 )
@@ -15,7 +14,6 @@ __all__ = [
     "dot",
     "get_in",
     "hash60",
-    "minhash",
     "tokens",
     "word_shingles",
 ]

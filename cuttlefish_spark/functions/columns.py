@@ -104,15 +104,6 @@ def hash60(col: Column) -> Column:
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
-def minhash(items: Column, salt: str) -> Column:
-    """One salted MinHash over a string array: lexicographic min of
-    md5(salt || item). md5 hex ordering is a fixed pseudo-random
-    permutation of the item universe, so `P[minhash_a == minhash_b]
-    ~= Jaccard(A, B)` — the classic MinHash estimator. String-min keeps
-    it byte-identical with the DuckDB oracle."""
-    return F.array_min(F.transform(items, lambda x: F.md5(F.concat(F.lit(salt), x))))
-
-
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product over two array<double> columns.
 

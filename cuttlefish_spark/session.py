@@ -16,6 +16,12 @@ local[32] and on a 1000-executor cluster:
 - ANSI off: the reference is lenient (missing paths -> defaults, see
   /root/reference/private/hash.rkt:30-35); legacy mode gives
   null-on-miss semantics for element_at/casts instead of runtime errors.
+- Python worker daemon `cuttlefish_spark.daemon`: Spark puts
+  `$SPARK_HOME/python/lib/pyspark.zip` first on the workers' path, and
+  zipimport caches no bytecode, so each worker pool's daemon compiled
+  pyspark from source (about 0.7 s before its first task). The daemon
+  module imports the installed, bytecode-cached pyspark instead when
+  its version is the zip's.
 """
 
 from __future__ import annotations
@@ -48,6 +54,7 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.daemon.module", "cuttlefish_spark.daemon")
         # Long-session hygiene (r13, measured; RE-MEASURED r14):
         # localCheckpoint / broadcast / shuffle state is reclaimed by
         # ContextCleaner only after the JVM garbage-collects the owning

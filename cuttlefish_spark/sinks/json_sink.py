@@ -93,8 +93,10 @@ def write_keyed_json(records: RDD, out_dir: str) -> list[tuple]:
                     raise ValueError("not a safe file name")
                 if staged is not None:
                     raise staged
+                # dumps runs the C one-shot encoder; dump, the Python one.
+                text = json.dumps(evs, sort_keys=True, default=str)
                 with open(tmp, "w") as fh:
-                    json.dump(evs, fh, sort_keys=True, default=str)
+                    fh.write(text)
                 os.replace(tmp, os.path.join(out_dir, f"{key}.json"))
                 audit[key][2] = len(evs)
             except (OSError, ValueError) as exc:

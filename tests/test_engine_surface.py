@@ -5,9 +5,10 @@ parameter of an engine function.
 A definition counts as used when some Python file of the repo outside a
 `tests/` directory names it — a loaded name, an attribute, an import,
 or an identifier string (perfbench patches functions by name) —
-anywhere but inside the definition itself. Registered `@query`
-functions are used through the registry. Code that only tests reach
-belongs in the tests, or nowhere.
+anywhere but inside the definition itself. A package `__init__.py`'s
+imports and `__all__` only re-export names, so they call nothing.
+Registered `@query` functions are used through the registry. Code that
+only tests reach belongs in the tests, or nowhere.
 
 A defaulted parameter counts as used when a call outside the tests to a
 function of that name passes it, by keyword or by position (a `*args`
@@ -86,13 +87,19 @@ def _defined(node: ast.stmt) -> list[str]:
     return [t.id for t in targets if isinstance(t, ast.Name)]
 
 
+def _reexport(path: Path, node: ast.stmt) -> bool:
+    return path.name == "__init__.py" and (
+        isinstance(node, (ast.Import, ast.ImportFrom)) or "__all__" in _defined(node))
+
+
 def test_every_engine_definition_has_a_non_test_caller():
     # One reference set per top-level statement, so a definition's own
     # body never counts as its caller.
     statements = []
     for path in _non_test_sources():
         tree = ast.parse(path.read_text(encoding="utf-8"))
-        statements.extend((path, node, _refs(node)) for node in tree.body)
+        statements.extend((path, node, set() if _reexport(path, node) else _refs(node))
+                          for node in tree.body)
 
     unused = []
     for path, node, _ in statements:
