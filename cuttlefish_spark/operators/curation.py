@@ -1198,15 +1198,12 @@ def _bpe_train(
     spark: SparkSession,
     sf_dir: str,
     n_merges: int,
-    round_secs: list[float] | None = None,
     scoring: str = "count",
     capture: dict[int, DataFrame] | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The BPE training loop, depth-parameterized (bpe_train_merges
-    runs it at _BPE_MERGES = 8; scripts/bpe_depth_stress.py at 64 to
-    prove the per-round cost stays flat as merges accumulate and
-    symbols lengthen). Appends each round's wall-clock to `round_secs`
-    when given. Returns (merge table, final seq) — seq is the ENCODED
+    runs it at _BPE_MERGES = 8, bpe_vocab_prune_audit also at
+    _BPE_MERGES // 2). Returns (merge table, final seq) — seq is the ENCODED
     corpus vocabulary (word, freq, syms after all merges), which
     bpe_token_stats aggregates; both are memoized per (session, corpus,
     depth) so the two queries train once.
@@ -1220,12 +1217,10 @@ def _bpe_train(
     loop materializes anyway, zero extra compute. On a memo hit the
     intermediates no longer exist; callers fall back to per-depth
     training (which then hits the per-depth memos)."""
-    import time as _time
-
     from cuttlefish_spark.io import memo_key, memo_put
 
     key = memo_key(spark, sf_dir, "documents") + (n_merges, scoring)
-    if round_secs is None and capture is None and key in _BPE_CACHE:
+    if capture is None and key in _BPE_CACHE:
         return _BPE_CACHE[key]
 
     d = spread(spark, load_table(spark, sf_dir, "documents"))
@@ -1244,7 +1239,6 @@ def _bpe_train(
 
     merges: list[tuple] = []
     for step in range(1, n_merges + 1):
-        t0 = _time.perf_counter()
         pairs = (
             seq.filter(F.size("syms") >= 2)
             .select(
@@ -1324,8 +1318,6 @@ def _bpe_train(
         ).localCheckpoint(eager=True)
         if capture is not None and step in capture:
             capture[step] = seq
-        if round_secs is not None:
-            round_secs.append(_time.perf_counter() - t0)
 
     schema = (
         "step int, left_sym string, right_sym string, merged string,"
@@ -1334,8 +1326,7 @@ def _bpe_train(
     if scoring == "wordpiece":
         schema += ", wp_score double"
     merges_df = spark.createDataFrame(merges, schema)
-    if round_secs is None:
-        memo_put(_BPE_CACHE, key, (merges_df, seq))
+    memo_put(_BPE_CACHE, key, (merges_df, seq))
     return merges_df, seq
 
 
@@ -3364,8 +3355,7 @@ _E2E_NEAR_J = 0.5  # near-dup Jaccard threshold (minhash_shingles' bar)
 
 
 def _e2e_stage3_pairs(nsh: DataFrame) -> tuple[int, DataFrame, DataFrame]:
-    """The capstone's stage-3 ADAPTIVE banded candidate join, shared
-    with scripts/scale_stress.py --e2e-stage3 (the zipf-decade probe):
+    """The capstone's stage-3 ADAPTIVE banded candidate join:
     given `nsh` = (doc_id, sh) shingle sets of the upstream survivors,
     build the two-family MinHash signature (band1/band2 from the
     shingle md5, band3/band4 from an independent 'w2:'-salted md5 —
@@ -4061,15 +4051,9 @@ def _bpe_train_batched(
     spark: SparkSession,
     sf_dir: str,
     n_rounds: int,
-    round_secs: list[float] | None = None,
 ) -> DataFrame:
     """The batched training loop, depth-parameterized (the query runs
-    it at {_BPE_B_ROUNDS}; scripts/bpe_batched_depth_stress.py at 16
-    rounds over sf1 = 64 merges in 16 driver syncs, the sync-reduction
-    claim measured at depth). Appends per-round wall-clock to
-    `round_secs` when given."""
-    import time as _time
-
+    it at {_BPE_B_ROUNDS})."""
     d = spread(spark, load_table(spark, sf_dir, "documents"))
     words = (
         d.select(F.explode(tokens(F.col("text"))).alias("word"))
@@ -4086,7 +4070,6 @@ def _bpe_train_batched(
 
     rows: list[tuple] = []
     for rnd in range(1, n_rounds + 1):
-        t0 = _time.perf_counter()
         pairs = (
             seq.filter(F.size("syms") >= 2)
             .select(
@@ -4146,8 +4129,6 @@ def _bpe_train_batched(
                 _fold_step,
             ).alias("syms"),
         ).localCheckpoint(eager=True)
-        if round_secs is not None:
-            round_secs.append(_time.perf_counter() - t0)
 
     return spark.createDataFrame(
         rows,

@@ -426,7 +426,6 @@ def _band_candidates(
     sig: DataFrame,
     min_jaccard: float | None = None,
     rows_per_band: int = 2,
-    payload: bool = True,
 ) -> DataFrame:
     """Candidate near-dup pairs via token-set MinHash band collisions.
 
@@ -518,8 +517,6 @@ def _band_candidates(
             (F.col("nw_a") * 1000 >= F.col("nw_b") * scale)
             & (F.col("nw_b") * 1000 >= F.col("nw_a") * scale)
         )
-    if not payload:  # candidate-volume audits count the stream itself
-        return cand
     wa = sig.select(F.col("doc_id").alias("doc_a"), F.col("hw").alias("hw_a"))
     wb = sig.select(F.col("doc_id").alias("doc_b"), F.col("hw").alias("hw_b"))
     # Payload fetch joins carry the token-hash ARRAYS (corpus sized),
@@ -817,8 +814,8 @@ _ADAPT_MULT = 16
 # token-hash set, blanks excluded), then the planner's integral
 # sum-of-C(n,2) over both r=2 band-value frequency tables compared
 # against _ADAPT_MULT * n_reps. Shared by the dedup_clusters oracle and
-# scripts/sf1_oracle_gate.py's union-find path so every gate re-derives
-# the SAME branch decision the Spark operator takes.
+# the incremental minhash oracles (_IMH_CTES) so each re-derives the
+# SAME branch decision the Spark operator takes.
 _ADAPT_DEC_SQL = f"""
     rep AS (
         SELECT min(doc_id) AS rep_id

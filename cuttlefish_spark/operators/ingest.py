@@ -198,16 +198,11 @@ def streaming_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_ingest_canonical(spark)
 
 
-def streaming_ingest_canonical(
-    spark: SparkSession,
-    chapters_path: str | None = None,
-    chapters_per_batch: int = 1,
-) -> DataFrame:
+def streaming_ingest_canonical(spark: SparkSession) -> DataFrame:
     """readStream(cuttlefish_replay) -> drain (default trigger +
-    processAllAvailable — the multi-batch offset walk) -> flatten —
-    the reusable body behind streaming_datasource_ingest and the sf1
-    gate's 10k-chapter scaled run (which raises chapters_per_batch so
-    the walk is ~20 microbatches, not 10k)."""
+    processAllAvailable — the multi-batch offset walk, one fixture
+    chapter per microbatch) -> flatten: the body of
+    streaming_datasource_ingest."""
     import shutil
     import tempfile
     import uuid
@@ -218,14 +213,9 @@ def streaming_ingest_canonical(
     name = f"stream_ds_{uuid.uuid4().hex[:8]}"
     ckpt = tempfile.mkdtemp(prefix="cuttlefish_stream_ds_ckpt_")
     try:
-        reader = (
-            spark.readStream.format("cuttlefish_replay")
-            .option("chapters_per_batch", chapters_per_batch)
-        )
-        if chapters_path:
-            reader = reader.option("chapters_path", chapters_path)
         q = (
-            reader.load()
+            spark.readStream.format("cuttlefish_replay")
+            .load()
             .writeStream.format("memory")
             .queryName(name)
             .option("checkpointLocation", ckpt)

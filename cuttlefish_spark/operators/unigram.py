@@ -353,17 +353,12 @@ def _ug_em(
     spark: SparkSession,
     sf_dir: str,
     rounds: int,
-    round_secs: list[float] | None = None,
 ) -> list[dict[str, int]]:
     """The hard-EM loop, depth-parameterized (the queries run it at
-    rounds=2; scripts/unigram_depth_stress.py at 8 over sf1 to prove
-    the per-round cost stays flat — each E-step is one segmentation
-    pass over the O(vocabulary) word table plus an O(V) usage collect,
-    nothing in that shape grows with the round index). Returns
-    [cost1, ..., cost_rounds]; appends each round's wall-clock to
-    `round_secs` when given."""
-    import time as _time
-
+    rounds=2). Each E-step is one segmentation pass over the
+    O(vocabulary) word table plus an O(V) usage collect; nothing in
+    that shape grows with the round index. Returns
+    [cost1, ..., cost_rounds]."""
     words = _ug_words(spark, sf_dir)
     seeds = _ug_seeds(words)
     singles_rows = seeds.filter(F.length("piece") == 1).collect()
@@ -390,15 +385,12 @@ def _ug_em(
     costs: list[dict[str, int]] = []
     cur = cost0
     for _ in range(rounds):
-        t0 = _time.perf_counter()
         u = {
             r["piece"]: int(r["usage"])
             for r in _ug_usage(words, cur).collect()
         }
         cur = m_step(u)
         costs.append(cur)
-        if round_secs is not None:
-            round_secs.append(_time.perf_counter() - t0)
     return costs
 
 

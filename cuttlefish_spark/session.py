@@ -33,11 +33,11 @@ from pyspark.sql import SparkSession
 
 def get_spark(
     app_name: str = "cuttlefish-spark",
-    cpus: int | str | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Build (or reuse) a SparkSession tuned for the engine."""
-    cpus = int(cpus or os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
+    """Build (or reuse) a SparkSession tuned for the engine, on
+    `local[$SPARK_GRAFT_CPUS]` (default: every core)."""
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 4)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
@@ -55,28 +55,16 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "cuttlefish_spark.daemon")
-        # Long-session hygiene (r13, measured; RE-MEASURED r14):
-        # localCheckpoint / broadcast / shuffle state is reclaimed by
-        # ContextCleaner only after the JVM garbage-collects the owning
-        # objects, so a session running hundreds of queries accumulates
-        # dead MEMORY_AND_DISK blocks whose eviction churn slows later
-        # queries ~5-20x (r13 bench.py numbers). r13 bounded that with a
-        # 2-MINUTE periodic GC — but r14 measured the other edge of that
-        # knob: a periodic System.gc() is a full stop-the-world pause
-        # that lands MID-QUERY and made allocation-heavy stages bimodal
-        # (minhash_accuracy at sf0.1: 11-92 s across runs at 2min vs a
-        # stable 3.8-11 s at 60min; r13's whole 32-core anti-scaling
-        # cluster reads the same way). The interval therefore stays at
-        # Spark's 30min default unless overridden
-        # (SPARK_GRAFT_PERIODIC_GC); per-query engines (bench.py) do an
-        # explicit untimed System.gc() between runs, which is where the
-        # r13 leak is actually reclaimed. Driver-state retention stays
-        # capped: AQE re-plans large queries many times and the status
-        # store otherwise retains 1000 executions of plan strings.
-        .config(
-            "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "30min"),
-        )
+        # Long-session hygiene (r13, measured; re-measured r14): a
+        # periodic System.gc() (spark.cleaner.periodicGC.interval) is a
+        # full stop-the-world pause that lands mid-query and made
+        # allocation-heavy stages bimodal (minhash_accuracy at sf0.1:
+        # 11-92 s across runs at a 2-minute interval against 3.8-11 s
+        # at 60 minutes), so the interval is left at Spark's 30-minute
+        # default; bench.py runs an untimed System.gc() between queries
+        # instead. Driver-state retention stays capped: AQE re-plans
+        # large queries many times and the status store otherwise
+        # retains 1000 executions of plan strings.
         .config("spark.sql.ui.retainedExecutions", "50")
         .config("spark.ui.retainedJobs", "200")
         .config("spark.ui.retainedStages", "200")

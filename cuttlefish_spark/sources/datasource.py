@@ -95,9 +95,9 @@ def _fetch_rows(chapters: list[tuple], transport: str, config: dict | None) -> I
 
 class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
     """The chapter-fetch DataSource's reader (Spark 4
-    simpleStreamReader): the chapter work-list becomes a RATE-LIMITED
-    stream, each microbatch serving the next `chapters_per_batch`
-    work items (offset = index into the list). This is the production
+    simpleStreamReader): the golden fixture work-list becomes a
+    RATE-LIMITED stream, each microbatch serving the next work item
+    (offset = index into the list). This is the production
     shape of a polling ingest: a bounded slice of the upstream work
     per trigger, offsets checkpointed by the engine, recovery replay
     via readBetweenOffsets over the same deterministic fetch body
@@ -105,7 +105,7 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
     strategy, eventbrite.rkt:123-146).
 
     The simple API prefetches each slice DRIVER-side by design —
-    bounded by chapters_per_batch, which is exactly the rate-limit
+    bounded at one chapter, which is exactly the rate-limit
     contract of a polling source; bulk backfills use the batch
     fetch's executor-side tasks (operators.ingest.fetch_records) instead.
     An exhausted list returns an empty slice at a fixed offset, so
@@ -114,10 +114,8 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
     streaming_datasource_ingest query documents and works this engine
     contract)."""
 
-    def __init__(self, options: dict):
-        self.options = options
-        self._items = load_chapters(options.get("chapters_path"))
-        self._per = max(1, int(options.get("chapters_per_batch", 2)))
+    def __init__(self):
+        self._items = load_chapters()
 
     def initialOffset(self) -> dict:
         return {"index": 0}
@@ -126,8 +124,7 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
         i = int(start["index"])
         if i >= len(self._items):
             return iter([]), {"index": i}
-        j = min(i + self._per, len(self._items))
-        return self._rows(i, j), {"index": j}
+        return self._rows(i, i + 1), {"index": i + 1}
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator[tuple]:
         return self._rows(int(start["index"]), int(end["index"]))
@@ -136,8 +133,7 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
         """Work items i..j fetched as FETCH_SCHEMA tuples. A
         list-iterator, not a generator: the engine's prefetch cache
         copy.copy()s the iterator it is handed, and generators don't
-        copy. The slice is bounded by chapters_per_batch — exactly the
-        documented driver-side prefetch budget."""
+        copy."""
         rows = _fetch_rows(self._items[i:j], "replay", None)
         return iter([tuple(r[n] for n in FETCH_SCHEMA.names) for r in rows])
 
@@ -154,7 +150,7 @@ class ChapterReplayDataSource(DataSource):
         return FETCH_SCHEMA
 
     def simpleStreamReader(self, schema: StructType) -> ChapterReplayStreamReader:
-        return ChapterReplayStreamReader(self.options)
+        return ChapterReplayStreamReader()
 
 
 def register(spark) -> None:

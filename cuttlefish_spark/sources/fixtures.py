@@ -175,8 +175,8 @@ EVENTBRITE_RAW = {
 
 def synth_chapters(n: int) -> list[tuple]:
     """An n-chapter work-list cycling the four golden protos — the
-    scaled-fixture corpus behind the ingest throughput/oracle gate
-    (scripts/sf1_oracle_gate.py): chapter i re-fetches proto
+    scaled-fixture corpus of bench.py's ingest throughput line and the
+    batch fetch's scale tests: chapter i re-fetches proto
     CHAPTERS[i % 4] under the fresh id c{i:05d}, so the expected
     output is the golden table fanned out by a pure formula."""
     out = []
@@ -188,8 +188,8 @@ def synth_chapters(n: int) -> list[tuple]:
 
 def write_chapters_json(n: int, path: str) -> None:
     """Materialize synth_chapters(n) in the chapters.json work-list
-    format the ChapterReplayDataSource's `chapters_path` option reads
-    (the reference's config table, api-runner.rkt:171-178)."""
+    format `chapters.load_chapters` reads (the reference's config
+    table, api-runner.rkt:171-178)."""
     import json
 
     doc = {}

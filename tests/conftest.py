@@ -16,10 +16,13 @@ from cuttlefish_spark.session import get_spark  # noqa: E402
 # to run the oracle tests at the driver's correctness scale.
 TEST_SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")
 
+# The suite's session runs on local[8] unless SPARK_GRAFT_CPUS says otherwise.
+os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
+
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("cuttlefish-tests", cpus=os.environ.get("SPARK_GRAFT_CPUS", 8))
+    s = get_spark("cuttlefish-tests")
     yield s
 
 

@@ -513,13 +513,13 @@ def test_datasource_replay_auto_batching(spark, tmp_path):
 
 def test_stream_reader_offsets_and_recovery():
     """The simpleStreamReader's offset walk: read() advances index by
-    chapters_per_batch, an exhausted list returns an empty slice at a
+    one chapter, an exhausted list returns an empty slice at a
     fixed offset (so processAllAvailable terminates), and
     readBetweenOffsets replays EXACTLY the rows the original read()
     served for the same offset range (the recovery contract)."""
     from cuttlefish_spark.sources.datasource import ChapterReplayStreamReader
 
-    r = ChapterReplayStreamReader({"chapters_per_batch": 1})
+    r = ChapterReplayStreamReader()
     off = r.initialOffset()
     assert off == {"index": 0}
     all_rows, n_batches = [], 0

@@ -76,11 +76,11 @@ def test_banded_candidates_are_subset(spark, sf_dir):
 
     wide = _token_signatures(spark, sf_dir, wide=True)
     narrow = (
-        _band_candidates(wide, payload=False, rows_per_band=2)
+        _band_candidates(wide, rows_per_band=2)
         .select("doc_a", "doc_b")
         .distinct()
     )
-    tight = _band_candidates(wide, payload=False, rows_per_band=8).select(
+    tight = _band_candidates(wide, rows_per_band=8).select(
         "doc_a", "doc_b"
     )
     missing = tight.join(narrow, ["doc_a", "doc_b"], "left_anti").count()

@@ -7,8 +7,9 @@ A definition counts as used when some Python file of the repo outside a
 or an identifier string (perfbench patches functions by name) —
 anywhere but inside the definition itself. A package `__init__.py`'s
 imports and `__all__` only re-export names, so they call nothing.
-Registered `@query` functions are used through the registry. Code that
-only tests reach belongs in the tests, or nowhere.
+Registered `@query` functions are used through the registry. A script
+under `scripts/` counts only when something runs it (`RUN_SCRIPTS`).
+Code that only tests reach belongs in the tests, or nowhere.
 
 A defaulted parameter counts as used when a call outside the tests to a
 function of that name passes it, by keyword or by position (a `*args`
@@ -25,9 +26,9 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parents[1]
 ENGINE = ROOT / "cuttlefish_spark"
 
-# plans/checks.py is the plan-assertion toolkit: tests, scale.py and
-# scripts/plan_audit.py import it. dedup_stream is the stateful
-# operator of the checkpoint kill/restart recovery test.
+# plans/checks.py is the plan-assertion toolkit: tests and scale.py
+# import it. dedup_stream is the stateful operator of the checkpoint
+# kill/restart recovery test.
 ALLOWED_FILES = {"plans/checks.py"}
 ALLOWED_NAMES = {"dedup_stream", "DEDUP_OUT_SCHEMA"}
 
@@ -36,6 +37,7 @@ ALLOWED_NAMES = {"dedup_stream", "DEDUP_OUT_SCHEMA"}
 ALLOWED_PARAMS = {
     "run.py:run_pipeline(transport=)":
         "the live path, which no caller can choose yet (ROADMAP item 3)",
+    "sources/adapters.py:dispatch_replay(chapters=)": "test_datasource_matches_replay",
     "sources/config.py:load_config(cwd=)": "test_runtime_config_defaults_and_override",
     "sources/throttle.py:Throttle(clock=)": "test_token_bucket_header_backoff",
     "sources/throttle.py:Throttle(sleep=)": "test_token_bucket_header_backoff",
@@ -45,15 +47,39 @@ ALLOWED_PARAMS = {
         "test_fetch_events_ok_and_throttle_update",
 }
 
+# Each script under scripts/ and the file that runs it: a script counts
+# as a caller only while something runs it.
+RUN_SCRIPTS = {
+    "quick_check.py": "tests/test_streaming.py",
+    "driver_sim.py": ".claude/skills/verify/SKILL.md",
+    "gen_source_hashes.py": "README.md",  # round close-out step 2
+}
+
 _IDENT = re.compile(r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*")
 
 
 def _non_test_sources() -> list[Path]:
-    return [
-        p for p in ROOT.rglob("*.py")
-        if "tests" not in p.relative_to(ROOT).parts
-        and not any(part.startswith(".") for part in p.relative_to(ROOT).parts)
-    ]
+    out = []
+    for p in ROOT.rglob("*.py"):
+        parts = p.relative_to(ROOT).parts
+        if "tests" in parts or any(part.startswith(".") for part in parts):
+            continue
+        if parts[0] == "scripts" and p.name not in RUN_SCRIPTS:
+            continue
+        out.append(p)
+    return out
+
+
+def test_every_script_is_run():
+    scripts = {p.name for p in (ROOT / "scripts").glob("*.py")}
+    unrun = sorted(scripts - RUN_SCRIPTS.keys())
+    assert unrun == [], "scripts nothing runs: " + ", ".join(unrun)
+    stale = sorted(RUN_SCRIPTS.keys() - scripts)
+    assert stale == [], "RUN_SCRIPTS entries with no script: " + ", ".join(stale)
+    unnamed = sorted(f"{runner} does not name scripts/{name}"
+                     for name, runner in RUN_SCRIPTS.items()
+                     if f"scripts/{name}" not in (ROOT / runner).read_text(encoding="utf-8"))
+    assert unnamed == [], "\n".join(unnamed)
 
 
 def _refs(node: ast.AST) -> set[str]:
