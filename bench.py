@@ -201,9 +201,8 @@ def main() -> None:
     # Reference-parity microbenchmark (BASELINE.md): the Layer-A
     # normalize-and-account pipeline over `events`, reported as rows/s.
     # The reference sustains ~5 keyed-groups/s network-bound
-    # (README.md:66-72 of the reference repo). Like the chapter-fetch
-    # line below, it serves only the full-run record — skipped in
-    # subset / --median3 diagnostic runs.
+    # (README.md:66-72 of the reference repo). It serves only the
+    # full-run record — skipped in subset / --median3 diagnostic runs.
     normalize_rps = None
     if not only and not median3:
         ev_rows = load_table(spark, sf_dir, "events").count()
@@ -212,40 +211,6 @@ def main() -> None:
             "noop"
         ).mode("overwrite").save()
         normalize_rps = round(ev_rows / (time.perf_counter() - t0), 1)
-
-    # Chapter-fetch DataSource throughput (reference A4-A5 fan-out
-    # parity): a 1000-chapter synthesized work-list, ONE input
-    # partition per chapter — the per-task Python DataSource overhead
-    # is the honest cost of scheduler-owned fan-out; the 10k-chapter
-    # oracle-checked run lives in SF1_ORACLE.json. Skipped in subset /
-    # --median3 diagnostic runs (~15 s of pure overhead there).
-    chapter_fetch_cps = None
-    if not only and not median3:
-        import shutil
-        import tempfile
-
-        from cuttlefish_spark.operators.ingest import datasource_canonical
-        from cuttlefish_spark.sources.fixtures import write_chapters_json
-
-        ch_n = 1000
-        ch_dir = tempfile.mkdtemp(prefix="benchch")
-        write_chapters_json(ch_n, os.path.join(ch_dir, "chapters.json"))
-        t0 = time.perf_counter()
-        # chapters_per_partition=1 EXPLICITLY: this line records the
-        # reference-parity scheduler-owned fan-out cost (1 task per
-        # chapter); the replay default now auto-batches (r9 item 5),
-        # which would silently change what this metric measures.
-        # datasource_canonical runs one Spark task per chunk, with no
-        # DataSource V2 planning, so the figure holds per-task fetch
-        # cost only, not a Python DataSource's ~6.5 s of lookup and
-        # planner round-trips.
-        datasource_canonical(
-            spark,
-            chapters_path=os.path.join(ch_dir, "chapters.json"),
-            chapters_per_partition=1,
-        ).write.format("noop").mode("overwrite").save()
-        chapter_fetch_cps = round(ch_n / (time.perf_counter() - t0), 1)
-        shutil.rmtree(ch_dir, ignore_errors=True)
 
     total = round(sum(timings.values()), 3)
     # Fixed-cost accounting (r11 VERDICT item 6): the streaming family
@@ -274,11 +239,6 @@ def main() -> None:
         **(
             {"normalize_events_rows_per_sec": normalize_rps}
             if normalize_rps is not None
-            else {}
-        ),
-        **(
-            {"chapter_fetch_chapters_per_sec": chapter_fetch_cps}
-            if chapter_fetch_cps is not None
             else {}
         ),
         # Methodology marker (r13 ADVICE): cross-round diffs can detect

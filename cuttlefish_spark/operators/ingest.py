@@ -3,15 +3,16 @@ markdown pandas_udf.
 
 The three pipeline queries share one fetch body
 (`datasource._fetch_rows`, which normalizes each payload in the task
-that fetched it) and one flattener (`adapters.flat_record`); they
-differ only in where the fetch runs: on the driver (ingest_normalize),
-in batch fetch tasks (ingest_datasource), or in microbatches of the
-streaming reader (streaming_datasource_ingest). Each builds its
-canonical frame with `createDataFrame(rows, FETCH_SCHEMA)` and
-flattens it with `_flat_frame`. The fetch's one throttle is the
-reference's header backoff (`throttle.Throttle`, no fixed rate); live
-transport runs one chapter per fetch task, so there that backoff never
-delays a second request.
+that fetched it into a canonical record dict) and one convert
+(`adapters.flat_record`); they differ only in where the fetch runs: on
+the driver (ingest_normalize), in batch fetch tasks
+(ingest_datasource), or in microbatches of the streaming reader
+(streaming_datasource_ingest). Each builds its frame once, from flat
+records under FLAT_DDL, where the fetch ran: the records cross into
+the JVM once, as `run.run_pipeline`'s do. The fetch's one throttle is
+the reference's header backoff (`throttle.Throttle`, no fixed rate);
+live transport runs one chapter per fetch task, so there that backoff
+never delays a second request.
 All three are checked against one GOLDEN oracle: the fixture inputs
 are fixed, so the exact expected output is stated as a SQL VALUES
 block (the reference's own test strategy — golden capture,
@@ -30,12 +31,8 @@ from pyspark.sql import functions as F
 
 from cuttlefish_spark.io import load_table
 from cuttlefish_spark.registry import query
-from cuttlefish_spark.sources.adapters import (
-    FETCH_SCHEMA,
-    FLAT_DDL,
-    dispatch_replay,
-    flat_record,
-)
+from cuttlefish_spark.sources import fixtures
+from cuttlefish_spark.sources.adapters import FLAT_DDL, flat_record
 
 
 # Golden expected output of all three pipeline queries (driver-side
@@ -80,15 +77,10 @@ def ingest_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ignores sf_dir: inputs are the inline golden fixtures
     (sources.fixtures), mirroring eventbrite.rkt:123-146."""
-    return _flat_frame(dispatch_replay(spark))
+    from cuttlefish_spark.sources.datasource import _fetch_rows
 
-
-def _flat_frame(df: DataFrame) -> DataFrame:
-    """A canonical frame (FETCH_SCHEMA) -> the flat, hash-friendly
-    golden frame (FLAT_DDL) through the one flattener,
-    `adapters.flat_record`, which also shapes the `{id}.json` files."""
-    rows = df.rdd.map(lambda r: flat_record(r.asDict(recursive=True)))
-    return df.sparkSession.createDataFrame(rows, FLAT_DDL)
+    rows = _fetch_rows(fixtures.CHAPTERS, "replay", None)
+    return spark.createDataFrame([flat_record(r) for r in rows], FLAT_DDL)
 
 
 @query("ingest_datasource", layer="A", oracle=_INGEST_GOLDEN_SQL)
@@ -102,27 +94,19 @@ def ingest_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     return datasource_canonical(spark)
 
 
-def chapter_chunks(
-    items: list[tuple],
-    transport: str,
-    parallelism: int,
-    chapters_per_partition: int | None = None,
-) -> list[list[tuple]]:
+def chapter_chunks(items: list[tuple], transport: str, parallelism: int) -> list[list[tuple]]:
     """Split the work-list into fetch-task chunks — the reference's
     chunk-list (chunk-list.rkt:6-18), balanced by count. A fetch task
-    costs ~0.5 core-seconds of Python setup (PLANS.md Notes), so the
-    chunk size depends on the transport:
-      - an explicit `chapters_per_partition` always wins;
+    costs ~0.12 core-seconds of scheduling and Python setup (measured
+    on replay, ROADMAP item 4), so the chunk size depends on the
+    transport:
       - live HTTP: 1 chapter per task, so a slow or failing endpoint
         never stalls a batch of unrelated chapters and the scheduler
         owns retry at item granularity;
       - replay: ceil(n / parallelism), one chunk per core, so the
         whole work-list runs in one wave and each core pays the task
-        setup once (a 10k-chapter replay at 1 per task took 177.8 s at
-        the sf1 gate, ~14 s batched)."""
-    if chapters_per_partition is not None:
-        per = max(1, int(chapters_per_partition))
-    elif transport == "live":
+        setup once."""
+    if transport == "live":
         per = 1
     else:
         per = max(1, -(-len(items) // parallelism))
@@ -133,43 +117,33 @@ def fetch_records(
     spark: SparkSession,
     chapters_path: str | None = None,
     transport: str = "replay",
-    chapters_per_partition: int | None = None,
     config: dict | None = None,
 ) -> RDD:
-    """The chapter fetch as a lazy RDD of canonical rows (FETCH_SCHEMA
-    dicts): the work-list at `chapters_path` (the golden fixture
-    chapters without one) is split by `chapter_chunks`, and each chunk
-    is one partition running `_fetch_rows` (fetch, then normalize) with
-    its own Throttle and the run's `config` (the API tokens). Every
-    chapter's rows stay in its chunk's partition, and the fetch runs
-    inside the job of whatever reads the RDD, so read it once (the
-    reference likewise fetches once per chapter,
+    """The chapter fetch as a lazy RDD of canonical record dicts with
+    the Either `status`/`error`: the work-list at `chapters_path` (the
+    golden fixture chapters without one) is split by `chapter_chunks`,
+    and each chunk is one partition running `_fetch_rows` (fetch, then
+    normalize) with its own Throttle and the run's `config` (the API
+    tokens). Every chapter's rows stay in its chunk's partition, and
+    the fetch runs inside the job of whatever reads the RDD, so read it
+    once (the reference likewise fetches once per chapter,
     api-runner.rkt:129-143)."""
     from cuttlefish_spark.sources.chapters import load_chapters
     from cuttlefish_spark.sources.datasource import _fetch_rows
 
     sc = spark.sparkContext
-    chunks = chapter_chunks(
-        load_chapters(chapters_path), transport, sc.defaultParallelism,
-        chapters_per_partition,
-    )
+    chunks = chapter_chunks(load_chapters(chapters_path), transport, sc.defaultParallelism)
     return sc.parallelize(chunks, max(1, len(chunks))).flatMap(
         lambda chunk: _fetch_rows(chunk, transport, config)
     )
 
 
-def datasource_canonical(
-    spark: SparkSession,
-    chapters_path: str | None = None,
-    chapters_per_partition: int | None = None,
-) -> DataFrame:
-    """Replay batch fetch (fetch_records) -> flat golden-schema frame,
-    lazy, parameterized by work-list and task batching — the reusable
-    body behind ingest_datasource. `chapters_per_partition` trades
-    scheduler granularity for per-task overhead; None picks
-    `chapter_chunks`' replay default, one chunk per core."""
-    rows = fetch_records(spark, chapters_path, "replay", chapters_per_partition, None)
-    return _flat_frame(spark.createDataFrame(rows, FETCH_SCHEMA))
+def datasource_canonical(spark: SparkSession) -> DataFrame:
+    """The golden fixture work-list through the replay batch fetch
+    (fetch_records, one chunk per core), each fetch task converting its
+    rows with `flat_record`, as a lazy frame under FLAT_DDL — the body
+    of ingest_datasource."""
+    return spark.createDataFrame(fetch_records(spark).map(flat_record), FLAT_DDL)
 
 
 @query("streaming_datasource_ingest", layer="A", oracle=_INGEST_GOLDEN_SQL)
@@ -180,10 +154,10 @@ def streaming_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     readStream, the chapter work-list served as a rate-limited stream
     of one chapter per microbatch (offset = index into the list,
     checkpointed by the engine; recovery replays readBetweenOffsets
-    over the deterministic fixture transport). Its rows are the
-    canonical rows of the batch fetch, flattened by the same
-    `_flat_frame` as ingest_datasource — same golden oracle, so the
-    driver hash holds the streaming source to the batch fetch.
+    over the deterministic fixture transport). Its rows are the flat
+    records of the batch fetch, converted by the same `flat_record` as
+    ingest_datasource — same golden oracle, so the driver hash holds
+    the streaming source to the batch fetch.
 
     Engine contract, measured: availableNow on a simple stream reader
     drains exactly ONE read() slice, so the drain uses the default
@@ -192,8 +166,8 @@ def streaming_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     multi-batch offset walk is the thing this rung exercises (4
     fixture chapters at 1/batch = 4 non-empty microbatches). Scale
     posture: the simple API prefetches each slice DRIVER-side, bounded
-    by chapters_per_batch — the rate-limit contract of a polling
-    ingest; bulk backfills use the batch fetch's executor-side tasks
+    at one chapter — the rate-limit contract of a polling ingest; bulk
+    backfills use the batch fetch's executor-side tasks
     (ingest_datasource)."""
     return streaming_ingest_canonical(spark)
 
@@ -201,7 +175,7 @@ def streaming_datasource_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def streaming_ingest_canonical(spark: SparkSession) -> DataFrame:
     """readStream(cuttlefish_replay) -> drain (default trigger +
     processAllAvailable — the multi-batch offset walk, one fixture
-    chapter per microbatch) -> flatten: the body of
+    chapter per microbatch) -> the drained flat records: the body of
     streaming_datasource_ingest."""
     import shutil
     import tempfile
@@ -226,7 +200,7 @@ def streaming_ingest_canonical(spark: SparkSession) -> DataFrame:
         rows = spark.table(name).localCheckpoint(eager=True)
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return _flat_frame(rows)
+    return rows
 
 
 _VIDEOS_GOLDEN_SQL = """

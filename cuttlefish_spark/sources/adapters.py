@@ -12,13 +12,20 @@ Reference parity map (all anchors in /root/reference/private):
 - default-on-missing-path          hash.rkt:30-35 (nullable-everything)
 - Either error values              README.md:30-42, api-runner.rkt:133-147
 
-As in the reference, where each worker does the GET and normalizes the
-JSON it got back, the fetch body (`datasource._fetch_rows`) applies
-`ADAPTERS[adapter]` to every event in the task that fetched it and
-yields canonical rows (FETCH_SCHEMA: the record plus the Either
-`status`/`error`). `flat_record` is the one flattener: the `{id}.json`
-files and the golden ingest frames carry its record.
-`dispatch_replay` is the driver-side fetch as a DataFrame.
+The canonical event record (FIXTURES.md §1.2, reference
+data_formats.md:15-44) is a plain dict, every value nullable: string
+`event_id`, `url`, `title`, `description`; int64 `time` and
+`utcOffset` (epoch millis); a `venue` dict of strings `name`,
+`address1`, `address2`, `country`, `city`, `postalCode` and floats
+`lon`, `lat`; and `photos`, null or a list of `{url, width, height}`.
+As in the reference, where each worker does the GET and turns the JSON
+it got back straight into the record it writes (meetup.rkt:39-59,
+api-runner.rkt:39-52), the fetch body (`datasource._fetch_rows`)
+applies `ADAPTERS[adapter]` to every event in the task that fetched it
+and yields the record plus `chapter_id` and the Either
+`status`/`error`. `flat_record` is the one convert from there: the
+`{id}.json` files and the golden ingest frames (FLAT_DDL) carry its
+record, so no Spark type is built for the nested one.
 
 Lenient reads (hash.rkt:30-35): a missing path or a value of the wrong
 JSON type reads null and the event's other fields survive. A string
@@ -37,56 +44,7 @@ import re
 from datetime import datetime, timedelta, timezone
 from zoneinfo import ZoneInfo, ZoneInfoNotFoundError
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
 from cuttlefish_spark.functions.markdown import render_markdown
-from cuttlefish_spark.sources import fixtures
-
-VENUE_SCHEMA = T.StructType(
-    [
-        T.StructField("name", T.StringType()),
-        T.StructField("address1", T.StringType()),
-        T.StructField("address2", T.StringType()),
-        T.StructField("country", T.StringType()),
-        T.StructField("city", T.StringType()),
-        T.StructField("postalCode", T.StringType()),
-        T.StructField("lon", T.DoubleType()),
-        T.StructField("lat", T.DoubleType()),
-    ]
-)
-
-PHOTO_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-# Canonical normalized event record (FIXTURES.md §1.2 /
-# reference data_formats.md:15-44). All fields nullable — the
-# reference defaults missing paths to null rather than erroring.
-CANONICAL_SCHEMA = T.StructType(
-    [
-        T.StructField("chapter_id", T.StringType()),
-        T.StructField("event_id", T.StringType()),
-        T.StructField("url", T.StringType()),
-        T.StructField("time", T.LongType()),
-        T.StructField("utcOffset", T.LongType()),
-        T.StructField("title", T.StringType()),
-        T.StructField("description", T.StringType()),
-        T.StructField("venue", VENUE_SCHEMA),
-        T.StructField("photos", T.ArrayType(PHOTO_SCHEMA)),
-    ]
-)
-
-# What every fetch yields per row: the canonical record plus the Either
-# columns (README.md:30-42). ERROR rows carry null event fields.
-FETCH_SCHEMA = T.StructType(
-    CANONICAL_SCHEMA.fields
-    + [T.StructField("status", T.StringType()), T.StructField("error", T.StringType())]
-)
 
 # The flat record the `{id}.json` files and the golden ingest frames
 # carry (`flat_record`).
@@ -288,9 +246,11 @@ ADAPTERS = {
 
 
 def flat_record(rec: dict) -> dict:
-    """A canonical row (FETCH_SCHEMA) -> the flat record (FLAT_DDL):
-    venue city/postal code/coordinates lifted out, photos counted. The
-    `{id}.json` files and the golden ingest frames both carry it."""
+    """A fetched row (the canonical record plus `chapter_id` and the
+    Either `status`/`error`; an ERROR row holds only those three) ->
+    the flat record (FLAT_DDL, in its column order): venue city/postal
+    code/coordinates lifted out, photos counted. The `{id}.json` files
+    and the golden ingest frames both carry it."""
     venue = rec.get("venue") or {}
     return {
         "chapter_id": rec["chapter_id"],
@@ -309,18 +269,3 @@ def flat_record(rec: dict) -> dict:
         "error": rec.get("error"),
     }
 
-
-def dispatch_replay(spark: SparkSession, chapters=None) -> DataFrame:
-    """The full Layer-A pipeline with the fetch on the driver: chapters
-    work-list -> per-adapter dispatch -> fetch (fixture transport) ->
-    normalize, as a canonical frame (FETCH_SCHEMA) with the Either
-    status/error columns.
-
-    The fetch body is the batch fetch's (`_fetch_rows`: backoff ->
-    GET -> normalize -> Either rows), run in-process instead of in
-    fetch tasks. `chapters` defaults to the golden fixture work-list."""
-    from cuttlefish_spark.sources.datasource import _fetch_rows
-
-    if chapters is None:
-        chapters = fixtures.CHAPTERS
-    return spark.createDataFrame(list(_fetch_rows(chapters, "replay", None)), FETCH_SCHEMA)

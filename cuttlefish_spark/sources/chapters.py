@@ -14,7 +14,7 @@ reference file), and is keyed by dynamic chapter ids. `load_chapters`
 reads it on the driver into the work-list tuples
 (chapter_id, title, adapter, service_id, organization) that every
 fetch path takes: the batch fetch's chunks, the streaming
-reader's offset space, and the driver-side `dispatch_replay`. Driver
+reader's offset space, and ingest_normalize's driver-side fetch. Driver
 residency mirrors the reference broadcasting config to its workers
 (api-runner.rkt:196-199).
 """

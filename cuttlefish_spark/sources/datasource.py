@@ -10,12 +10,12 @@ owns fan-out, retry and locality.
 worker does the GET and normalizes what it got back (meetup.rkt:39-59,
 83-84): each event goes through its adapter's normalizer
 (`adapters.ADAPTERS`) in the task that fetched it, and the body yields
-canonical rows (`adapters.FETCH_SCHEMA`, with the Either-style
-status/error columns — README.md:30-42). Each call owns one
-`Throttle`, the reference's header backoff (meetup.rkt:9-26), shared
-by every request it makes: one per task, not a global lock. On live
-transport a task holds one chapter, so the backoff a response asks for
-never delays another request until several requests run in one task.
+canonical records as dicts, with the Either-style `status`/`error`
+(README.md:30-42). Each call owns one `Throttle`, the reference's
+header backoff (meetup.rkt:9-26), shared by every request it makes:
+one per task, not a global lock. On live transport a task holds one
+chapter, so the backoff a response asks for never delays another
+request until several requests run in one task.
 
 Both transports run the SAME fetch body (sources.fetch.fetch_events:
 header backoff -> GET -> header-driven throttle update -> Either
@@ -25,17 +25,18 @@ reference's own test strategy, eventbrite.rkt:123-146); "live"
 performs the real urllib GET against the worker APIs
 (meetup.rkt:83-84, facebook.rkt:82-83, eventbrite.rkt:114).
 
-Three callers share `_fetch_rows`, and all yield the same rows:
+Three callers share `_fetch_rows`, and each turns its dicts into the
+flat record (`adapters.flat_record`) once, where it fetched them:
 - the batch pipeline (`operators.ingest.fetch_records`, behind
   `run.run_pipeline` and `datasource_canonical`) splits the work-list
   with `chapter_chunks` and runs one fetch task per chunk over
   `sparkContext.parallelize`;
 - the registered `cuttlefish_replay` format, a stream-only source of
-  canonical rows for `readStream` (`streaming_datasource_ingest`). It
-  has no batch reader, so `spark.read.format("cuttlefish_replay")`
-  fails at analysis;
-- the driver-side `adapters.dispatch_replay` (`ingest_normalize`),
-  which runs the fetch in-process, without fetch tasks.
+  flat records (FLAT_DDL) for `readStream`
+  (`streaming_datasource_ingest`). It has no batch reader, so
+  `spark.read.format("cuttlefish_replay")` fails at analysis;
+- `ingest_normalize`, which runs the fetch on the driver, without
+  fetch tasks.
 """
 
 from __future__ import annotations
@@ -45,23 +46,25 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 from pyspark.sql.types import StructType
 
-from cuttlefish_spark.sources.adapters import ADAPTERS, FETCH_SCHEMA
+from cuttlefish_spark.sources.adapters import ADAPTERS, FLAT_DDL, flat_record
 from cuttlefish_spark.sources.chapters import load_chapters
 
 
 def _error_row(chapter_id: str, error: str) -> dict:
-    return {**dict.fromkeys(FETCH_SCHEMA.names), "chapter_id": chapter_id,
-            "status": "ERROR", "error": error}
+    """A chapter's one ERROR row: no event fields, which every reader
+    (`flat_record`, the sink) takes as null."""
+    return {"chapter_id": chapter_id, "status": "ERROR", "error": error}
 
 
 def _fetch_rows(chapters: list[tuple], transport: str, config: dict | None) -> Iterator[dict]:
     """The shared fetch body (backoff -> GET -> normalize -> Either rows
-    as FETCH_SCHEMA dicts) over `transport` ("live" or "replay"), with
-    one Throttle for every request of the call (a batch fetch task, a
-    microbatch slice for the streaming reader, the whole work-list for
-    dispatch_replay) — the reference's adaptive throttle placed per
-    worker (meetup.rkt:9-26). `config` is the run's config, whose API
-    tokens go into each request (build_request)."""
+    as canonical record dicts) over `transport` ("live" or "replay"),
+    with one Throttle for every request of the call (a batch fetch
+    task, a microbatch slice for the streaming reader, the whole
+    work-list for ingest_normalize) — the reference's adaptive
+    throttle placed per worker (meetup.rkt:9-26). `config` is the
+    run's config, whose API tokens go into each request
+    (build_request)."""
     from cuttlefish_spark.sources.fetch import (
         FixtureTransport,
         fetch_events,
@@ -130,12 +133,12 @@ class ChapterReplayStreamReader(SimpleDataSourceStreamReader):
         return self._rows(int(start["index"]), int(end["index"]))
 
     def _rows(self, i: int, j: int) -> Iterator[tuple]:
-        """Work items i..j fetched as FETCH_SCHEMA tuples. A
-        list-iterator, not a generator: the engine's prefetch cache
-        copy.copy()s the iterator it is handed, and generators don't
-        copy."""
+        """Work items i..j fetched as flat record tuples (`flat_record`
+        keeps FLAT_DDL's column order). A list-iterator, not a
+        generator: the engine's prefetch cache copy.copy()s the
+        iterator it is handed, and generators don't copy."""
         rows = _fetch_rows(self._items[i:j], "replay", None)
-        return iter([tuple(r[n] for n in FETCH_SCHEMA.names) for r in rows])
+        return iter([tuple(flat_record(r).values()) for r in rows])
 
     def commit(self, end: dict) -> None:
         pass
@@ -146,8 +149,8 @@ class ChapterReplayDataSource(DataSource):
     def name(cls) -> str:
         return "cuttlefish_replay"
 
-    def schema(self) -> StructType:
-        return FETCH_SCHEMA
+    def schema(self) -> str:
+        return FLAT_DDL
 
     def simpleStreamReader(self, schema: StructType) -> ChapterReplayStreamReader:
         return ChapterReplayStreamReader()

@@ -8,6 +8,10 @@ reference's own test strategy (eventbrite.rkt:123-146 runs convert-json
 on a captured payload, no network). Synthetic content, real structure.
 The eventbrite rows intentionally straddle a US DST boundary
 (2018-03-11) so the IANA-zone offset path is exercised both sides.
+
+`CHAPTERS` is the golden work-list that the three ingest queries fetch
+(and `chapters.load_chapters` returns without a path); the `*_RAW`
+tables are what `fetch.FixtureTransport` answers for each service id.
 """
 
 CHAPTERS = [
@@ -171,32 +175,3 @@ EVENTBRITE_RAW = {
         ],
     }
 }
-
-
-def synth_chapters(n: int) -> list[tuple]:
-    """An n-chapter work-list cycling the four golden protos — the
-    scaled-fixture corpus of bench.py's ingest throughput line and the
-    batch fetch's scale tests: chapter i re-fetches proto
-    CHAPTERS[i % 4] under the fresh id c{i:05d}, so the expected
-    output is the golden table fanned out by a pure formula."""
-    out = []
-    for i in range(n):
-        _cid, title, adapter, sid, org = CHAPTERS[i % len(CHAPTERS)]
-        out.append((f"c{i:05d}", title, adapter, sid, org))
-    return out
-
-
-def write_chapters_json(n: int, path: str) -> None:
-    """Materialize synth_chapters(n) in the chapters.json work-list
-    format `chapters.load_chapters` reads (the reference's config
-    table, api-runner.rkt:171-178)."""
-    import json
-
-    doc = {}
-    for cid, title, adapter, sid, org in synth_chapters(n):
-        ds: dict = {"adapter": adapter, "id": sid}
-        if org is not None:
-            ds["organization"] = org
-        doc[cid] = {"title": title, "dataService": ds}
-    with open(path, "w", encoding="utf-8") as fh:
-        json.dump(doc, fh)

@@ -6,11 +6,15 @@ reference never tested.
 
 from __future__ import annotations
 
+import json
+
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
+
 from cuttlefish_spark.sinks.json_sink import audit_counts
-from cuttlefish_spark.sources.adapters import (
-    CANONICAL_SCHEMA,
-    dispatch_replay,
-)
+from cuttlefish_spark.sources import fixtures
+from cuttlefish_spark.sources.adapters import ADAPTERS, FLAT_DDL, flat_record
+from cuttlefish_spark.sources.datasource import _fetch_rows
 
 CANONICAL_KEYS = {
     "chapter_id", "event_id", "url", "time", "utcOffset", "title",
@@ -19,18 +23,57 @@ CANONICAL_KEYS = {
 VENUE_KEYS = {"name", "address1", "address2", "country", "city", "postalCode", "lon", "lat"}
 
 
-def test_canonical_shape(spark):
+def _replay(chapters=fixtures.CHAPTERS) -> list[dict]:
+    """The fetch body's rows for `chapters` over the fixture transport."""
+    return list(_fetch_rows(chapters, "replay", None))
+
+
+def _events(chapter_id: str) -> dict:
+    """The golden fixture events of `chapter_id`, by event id."""
+    return {r["event_id"]: r for r in _replay() if r["chapter_id"] == chapter_id}
+
+
+def _synth_chapters(n: int) -> list[tuple]:
+    """An n-chapter work-list cycling the four golden protos: chapter i
+    re-fetches proto CHAPTERS[i % 4] under the fresh id c{i:05d}, so the
+    expected output is the golden table fanned out by a pure formula."""
+    out = []
+    for i in range(n):
+        _cid, title, adapter, sid, org = fixtures.CHAPTERS[i % len(fixtures.CHAPTERS)]
+        out.append((f"c{i:05d}", title, adapter, sid, org))
+    return out
+
+
+def _write_chapters_json(n: int, path: str) -> None:
+    """_synth_chapters(n) in the chapters.json work-list format
+    `chapters.load_chapters` reads (the reference's config table,
+    api-runner.rkt:171-178)."""
+    doc = {}
+    for cid, title, adapter, sid, org in _synth_chapters(n):
+        ds: dict = {"adapter": adapter, "id": sid}
+        if org is not None:
+            ds["organization"] = org
+        doc[cid] = {"title": title, "dataService": ds}
+    with open(path, "w", encoding="utf-8") as fh:
+        json.dump(doc, fh)
+
+
+def test_canonical_shape():
     """Shape parity with the reference's golden test
-    (eventbrite.rkt:136-146): canonical key set + venue key set."""
-    out = dispatch_replay(spark)
-    assert set(f.name for f in CANONICAL_SCHEMA.fields) == CANONICAL_KEYS
-    fields = {f.name: f for f in out.schema.fields}
-    assert CANONICAL_KEYS <= set(fields)
-    assert {f.name for f in fields["venue"].dataType.fields} == VENUE_KEYS
+    (eventbrite.rkt:136-146): every OK row holds the canonical key set
+    and the venue key set; an ERROR row holds only its Either fields."""
+    rows = _replay()
+    assert {r["status"] for r in rows} == {"OK", "ERROR"}
+    for r in rows:
+        if r["status"] == "OK":
+            assert set(r) == CANONICAL_KEYS | {"status", "error"}
+            assert set(r["venue"]) == VENUE_KEYS
+        else:
+            assert set(r) == {"chapter_id", "status", "error"}
 
 
-def test_meetup_normalization(spark):
-    rows = {r["event_id"]: r for r in dispatch_replay(spark).filter("chapter_id='newyork'").collect()}
+def test_meetup_normalization():
+    rows = _events("newyork")
     e = rows["zvbxrpl2"]
     assert e["url"].startswith("https://www.meetup.com/")  # link -> url rename
     assert e["time"] == 1526425200000 and e["utcOffset"] == -14400000  # epoch pass-through
@@ -45,8 +88,8 @@ def test_meetup_normalization(spark):
     assert m["venue"]["name"] is None and m["photos"] == []
 
 
-def test_facebook_offset_and_markdown(spark):
-    rows = {r["event_id"]: r for r in dispatch_replay(spark).filter("chapter_id='stlouis'").collect()}
+def test_facebook_offset_and_markdown():
+    rows = _events("stlouis")
     e = rows["186112975332637"]
     # 2018-05-15T19:00:00-0500 == 2018-05-16T00:00:00Z
     assert e["time"] == 1526428800000
@@ -57,8 +100,8 @@ def test_facebook_offset_and_markdown(spark):
     assert e["photos"] is None  # facebook.rkt:55
 
 
-def test_eventbrite_dst_offsets(spark):
-    rows = {r["event_id"]: r for r in dispatch_replay(spark).filter("chapter_id='london'").collect()}
+def test_eventbrite_dst_offsets():
+    rows = _events("london")
     # Europe/London before DST: offset 0
     assert rows["44544109937"]["utcOffset"] == 0
     assert rows["44544109937"]["time"] == 1520533800000  # == fixture utc
@@ -72,34 +115,38 @@ def test_eventbrite_dst_offsets(spark):
     assert abs(rows["44544109937"]["venue"]["lat"] - 51.5229) < 1e-9
 
 
-def test_unknown_adapter_dead_letter(spark):
+def test_unknown_adapter_dead_letter():
     """Unknown adapter -> ERROR row (api-runner.rkt:144-147)."""
-    out = dispatch_replay(spark)
-    errs = out.filter("status = 'ERROR'").collect()
+    rows = _replay()
+    errs = [r for r in rows if r["status"] == "ERROR"]
     assert len(errs) == 1
     assert errs[0]["chapter_id"] == "atlantis"
     assert "carrierpigeon" in errs[0]["error"]
-    assert out.filter("status = 'OK'").count() == 7  # 2 meetup + 2 fb + 3 eb
+    assert sum(r["status"] == "OK" for r in rows) == 7  # 2 meetup + 2 fb + 3 eb
 
 
 def test_audit_counts(spark):
+    golden = spark.createDataFrame([flat_record(r) for r in _replay()], FLAT_DDL)
     audit = {
         (r["chapter_id"], r["status"]): (r["n_events"], r["log_line"])
-        for r in audit_counts(dispatch_replay(spark)).collect()
+        for r in audit_counts(golden).collect()
     }
     assert audit[("newyork", "OK")][0] == 2
     assert audit[("newyork", "OK")][1] == "WROTE: newyork"
     assert audit[("atlantis", "ERROR")][1] == "ERROR: atlantis"
 
 
+def _flat_tuples(rows) -> list[tuple]:
+    return sorted(tuple(flat_record(r).values()) for r in rows)
+
+
 def test_datasource_matches_replay(spark, sf_dir, tmp_path):
-    """The Spark-4 Python DataSource fetch path (scheduler-owned
-    fan-out) must produce byte-identical canonical rows to the
-    driver-side fetch, on the fixture work-list and on a 1,003-chapter
-    one with 404 chapters."""
+    """The batch fetch (scheduler-owned fan-out, one chunk per core)
+    must produce identical flat records to the driver-side fetch, on
+    the fixture work-list and on a 1,003-chapter one with 404
+    chapters."""
     from cuttlefish_spark.operators.ingest import (
-        _flat_frame,
-        datasource_canonical,
+        fetch_records,
         ingest_datasource,
         ingest_normalize,
     )
@@ -112,12 +159,8 @@ def test_datasource_matches_replay(spark, sf_dir, tmp_path):
 
     path = str(tmp_path / "chapters.json")
     _worklist_with_404s(path)
-    a = sorted(tuple(r) for r in datasource_canonical(spark, chapters_path=path).collect())
-    b = sorted(
-        tuple(r)
-        for r in _flat_frame(dispatch_replay(spark, load_chapters(path))).collect()
-    )
-    assert a == b
+    a = _flat_tuples(fetch_records(spark, chapters_path=path).collect())
+    assert a == _flat_tuples(_fetch_rows(load_chapters(path), "replay", None))
     # 250 cycles of the 4 protos (2 + 2 + 3 events + 1 error) + 3 lost
     assert len(a) == 2003
     lost = [r for r in a if r[0].startswith("lost_")]
@@ -159,19 +202,17 @@ def test_read_chapters_json(tmp_path):
         load_chapters(str(tmp_path / "missing.json"))
 
 
-def test_chapters_drive_dispatch(spark, tmp_path):
-    """End-to-end config->pipeline: a chapters file drives
-    dispatch_replay exactly like the inline fixture work-list."""
-    import json
-
+def test_chapters_drive_dispatch(tmp_path):
+    """End-to-end config->pipeline: a chapters file drives the fetch
+    body exactly like the inline fixture work-list."""
     from cuttlefish_spark.sources.chapters import load_chapters
 
     doc = {"newyork": {"title": "New York",
                        "dataService": {"adapter": "meetup", "id": "papers-we-love"}}}
     p = tmp_path / "chapters.json"
     p.write_text(json.dumps(doc))
-    out = dispatch_replay(spark, load_chapters(str(p)))
-    assert out.filter("status = 'OK'").count() == 2  # the two meetup fixture events
+    rows = _replay(load_chapters(str(p)))
+    assert [r["status"] for r in rows] == ["OK", "OK"]  # the two meetup fixture events
 
 
 def test_load_config_not_json_names_file(tmp_path):
@@ -453,62 +494,47 @@ def test_run_pipeline_missing_chapters_raises(spark, tmp_path):
         run_pipeline(spark, config={**config, "chapter-json-file": str(garbled)})
 
 
-def test_datasource_chapter_batching_invariance(spark):
-    """`chapters_per_partition` must change ONLY the partitioning, not
-    the rows: the 4-chapter fixture work-list read at 1/partition and
-    batched into a single partition must produce identical canonical
-    output (and the expected partition counts)."""
-    from cuttlefish_spark.operators.ingest import chapter_chunks, datasource_canonical
+def test_datasource_chapter_batching_invariance():
+    """The chunking changes ONLY the partitioning, not the rows: the
+    4-chapter fixture work-list fetched chunk by chunk, at one chapter
+    per chunk up to all four in one, gives the rows of one fetch over
+    the whole list, in order (and the expected chunk counts)."""
+    from cuttlefish_spark.operators.ingest import chapter_chunks
     from cuttlefish_spark.sources.chapters import load_chapters
-
-    one = datasource_canonical(spark).toPandas()
-    batched = datasource_canonical(spark, chapters_per_partition=7).toPandas()
-    key = sorted(one.columns)
-    a = one[key].sort_values(key).reset_index(drop=True).astype(str)
-    b = batched[key].sort_values(key).reset_index(drop=True).astype(str)
-    assert a.equals(b), "batched DataSource output diverges"
 
     items = load_chapters()
-    assert len(chapter_chunks(items, "replay", 8)) == 4
-    assert len(chapter_chunks(items, "replay", 8, chapters_per_partition=7)) == 1
-    assert len(chapter_chunks(items, "replay", 8, chapters_per_partition=3)) == 2
+    want = _replay(items)
+    for transport, parallelism, n_chunks in [
+        ("replay", 8, 4), ("replay", 3, 2), ("replay", 1, 1), ("live", 1, 4),
+    ]:
+        chunks = chapter_chunks(items, transport, parallelism)
+        assert len(chunks) == n_chunks
+        assert [r for chunk in chunks for r in _replay(chunk)] == want
 
 
-def test_datasource_replay_auto_batching(spark, tmp_path):
+def test_datasource_replay_auto_batching(tmp_path):
     """Replay transport makes one chunk per core, ceil(n/parallelism)
-    chapters each, when no explicit chapters_per_partition is given
-    (r9 VERDICT item 5 — a 10k-chapter replay at 1 task/chapter paid
-    ~0.5 core-s of Python task setup per chapter; one wave pays it
-    once per core); live transport keeps 1/partition so the
-    scheduler owns per-item retry granularity; an explicit value always
-    wins; and the auto-batched output is row-identical."""
-    from cuttlefish_spark.operators.ingest import chapter_chunks, datasource_canonical
+    chapters each (r9 VERDICT item 5 — at 1 task per chapter each
+    chapter pays the task's scheduling and Python setup; one wave pays
+    it once per core); live transport keeps 1/partition so the
+    scheduler owns per-item retry granularity. Either way the chunks
+    hold the work-list in order, each chapter once."""
+    from cuttlefish_spark.operators.ingest import chapter_chunks
     from cuttlefish_spark.sources.chapters import load_chapters
-    from cuttlefish_spark.sources.fixtures import write_chapters_json
 
     path = str(tmp_path / "chapters.json")
-    write_chapters_json(1000, path)
+    _write_chapters_json(1000, path)
     items = load_chapters(path)
 
     # replay + parallelism 8: per = ceil(1000 / 8) = 125 -> 8 chunks
     assert len(chapter_chunks(items, "replay", 8)) == 8
     # live ignores the auto size
     assert len(chapter_chunks(items, "live", 8)) == 1000
-    # explicit beats auto
-    assert len(chapter_chunks(items, "replay", 8, chapters_per_partition=10)) == 100
     # tiny work-lists never batch below 1/partition
     assert len(chapter_chunks(load_chapters(), "replay", 8)) == 4
-
-    # Auto default (what ingest_datasource now runs) is row-identical
-    # to explicit 1/partition on the same work-list.
-    auto = datasource_canonical(spark, chapters_path=path).toPandas()
-    one = datasource_canonical(
-        spark, chapters_path=path, chapters_per_partition=1
-    ).toPandas()
-    key = sorted(auto.columns)
-    a = auto[key].sort_values(key).reset_index(drop=True).astype(str)
-    b = one[key].sort_values(key).reset_index(drop=True).astype(str)
-    assert a.equals(b), "auto-batched DataSource output diverges"
+    for transport in ("replay", "live"):
+        chunks = chapter_chunks(items, transport, 8)
+        assert [c for chunk in chunks for c in chunk] == items
 
 
 def test_stream_reader_offsets_and_recovery():
@@ -575,13 +601,11 @@ def test_unknown_adapter_spends_no_throttle_token(monkeypatch):
 
 
 def _worklist_with_404s(path: str) -> None:
-    """write_chapters_json(1000) plus one unknown-service chapter per
+    """_write_chapters_json(1000) plus one unknown-service chapter per
     adapter, which the fixture transport answers with HTTP 404."""
     import json as _json
 
-    from cuttlefish_spark.sources.fixtures import write_chapters_json
-
-    write_chapters_json(1000, path)
+    _write_chapters_json(1000, path)
     with open(path, encoding="utf-8") as fh:
         doc = _json.load(fh)
     doc["lost_meetup"] = {"title": "Lost", "dataService": {
@@ -596,19 +620,21 @@ def _worklist_with_404s(path: str) -> None:
 
 def test_run_pipeline_matches_format_composition(spark, tmp_path):
     """run_pipeline's files, audit log and audit tuples equal the
-    composition of its parts over the golden DataFrame path:
-    datasource_canonical -> write_keyed_json for the files,
+    composition of its parts over the golden frame's body
+    (fetch_records -> flat_record under FLAT_DDL, as
+    datasource_canonical builds it): write_keyed_json for the files,
     audit_counts for the audit."""
     import json as _json
 
-    from cuttlefish_spark.operators.ingest import datasource_canonical
+    from cuttlefish_spark.operators.ingest import fetch_records
     from cuttlefish_spark.run import run_pipeline
     from cuttlefish_spark.sinks.json_sink import write_keyed_json
 
     path = str(tmp_path / "chapters.json")
     _worklist_with_404s(path)
 
-    out = datasource_canonical(spark, chapters_path=path)
+    out = spark.createDataFrame(
+        fetch_records(spark, chapters_path=path).map(flat_record), FLAT_DDL)
     old_dir = tmp_path / "old"
     write_keyed_json(out.rdd.map(lambda r: r.asDict()), str(old_dir))
     old_audit = audit_counts(out).orderBy("chapter_id", "status").collect()
@@ -704,13 +730,11 @@ def test_replay_fetch_rows_never_sleeps(monkeypatch):
     import functools
 
     from cuttlefish_spark.sources import throttle
-    from cuttlefish_spark.sources.datasource import _fetch_rows
-    from cuttlefish_spark.sources.fixtures import synth_chapters
 
     sleeps = []
     monkeypatch.setattr(throttle, "Throttle",
                         functools.partial(throttle.Throttle, sleep=sleeps.append))
-    rows = list(_fetch_rows(synth_chapters(2000), "replay", None))
+    rows = _replay(_synth_chapters(2000))
     assert sum(r["status"] == "OK" for r in rows) == 500 * 7  # 7 events per 4 protos
     assert sleeps == []
 
@@ -801,25 +825,23 @@ def test_live_fetch_failures_are_error_rows(monkeypatch):
     ]
 
 
-def _replay_payload(spark, monkeypatch, adapter: str, events: list) -> dict:
-    """dispatch_replay over the fixture chapter of `adapter`, with its
-    replayed payload holding `events`; rows by event id."""
-    from cuttlefish_spark.sources import fixtures
-
+def _replay_payload(monkeypatch, adapter: str, events: list) -> dict:
+    """The fetch body over the fixture chapter of `adapter`, with its
+    replayed payload holding `events`; rows by event id (None for an
+    ERROR row)."""
     table, key, body, chapter = {
         "meetup": ("MEETUP_RAW", "papers-we-love", events, 0),
         "facebook": ("FACEBOOK_RAW", "1776622612568197", {"data": events}, 1),
         "eventbrite": ("EVENTBRITE_RAW", "2417467656", {"events": events}, 2),
     }[adapter]
     monkeypatch.setitem(getattr(fixtures, table), key, body)
-    out = dispatch_replay(spark, [fixtures.CHAPTERS[chapter]]).collect()
-    return {r["event_id"]: r for r in out}
+    return {r.get("event_id"): r for r in _replay([fixtures.CHAPTERS[chapter]])}
 
 
-def test_convert_wrong_typed_field_reads_null(spark, monkeypatch):
+def test_convert_wrong_typed_field_reads_null(monkeypatch):
     """A field of the wrong JSON type reads null; the event's other
     fields survive."""
-    rows = _replay_payload(spark, monkeypatch, "meetup", [
+    rows = _replay_payload(monkeypatch, "meetup", [
         {"id": "w1", "time": "soon", "utc_offset": -14400000, "name": "Kept",
          "venue": {"city": "New York", "lon": [1]}}])
     e = rows["w1"]
@@ -828,51 +850,51 @@ def test_convert_wrong_typed_field_reads_null(spark, monkeypatch):
     assert e["venue"]["city"] == "New York" and e["venue"]["lon"] is None
 
 
-def test_convert_numeric_event_id_is_its_string(spark, monkeypatch):
+def test_convert_numeric_event_id_is_its_string(monkeypatch):
     """An integer id becomes its decimal string: it is the file key."""
-    rows = _replay_payload(spark, monkeypatch, "meetup", [{"id": 7, "name": "Seven"}])
+    rows = _replay_payload(monkeypatch, "meetup", [{"id": 7, "name": "Seven"}])
     assert list(rows) == ["7"] and rows["7"]["title"] == "Seven"
-    rows = _replay_payload(spark, monkeypatch, "facebook", [{"id": 186112975332637}])
+    rows = _replay_payload(monkeypatch, "facebook", [{"id": 186112975332637}])
     assert rows["186112975332637"]["url"] == "https://facebook.com/186112975332637"
 
 
-def test_convert_non_object_photo_empties_photos(spark, monkeypatch):
+def test_convert_non_object_photo_empties_photos(monkeypatch):
     """A `photo_sample` element that is not an object empties the
     photos; a null element is a photo with null fields."""
-    rows = _replay_payload(spark, monkeypatch, "meetup", [
+    rows = _replay_payload(monkeypatch, "meetup", [
         {"id": "p1", "photo_album": {"photo_sample": [{"photo_link": "u1"}, 3]}},
         {"id": "p2", "photo_album": {"photo_sample": [None, {"photo_link": "u2"}]}}])
     assert rows["p1"]["photos"] == []
     assert [p["url"] for p in rows["p2"]["photos"]] == [None, "u2"]
 
 
-def test_convert_facebook_z_time_reads_null(spark, monkeypatch):
+def test_convert_facebook_z_time_reads_null(monkeypatch):
     """Facebook times carry a ±HHMM offset; a `Z` time has neither a
     time nor an offset."""
-    rows = _replay_payload(spark, monkeypatch, "facebook", [
+    rows = _replay_payload(monkeypatch, "facebook", [
         {"id": "z1", "start_time": "2018-05-15T19:00:00Z"},
         {"id": "z2", "start_time": "2018-05-15T19:00:00+0530"}])
     assert rows["z1"]["time"] is None and rows["z1"]["utcOffset"] is None
     assert rows["z2"]["time"] == 1526391000000 and rows["z2"]["utcOffset"] == 19800000
 
 
-def test_convert_eventbrite_local_without_seconds(spark, monkeypatch):
+def test_convert_eventbrite_local_without_seconds(monkeypatch):
     """An Eventbrite local time without seconds parses; 01:30 on the
     2018-11-04 overlap in New York takes the earlier offset (EDT), and
     02:30 in the 2018-03-11 gap moves forward by the gap."""
     start = {"timezone": "America/New_York"}
-    rows = _replay_payload(spark, monkeypatch, "eventbrite", [
+    rows = _replay_payload(monkeypatch, "eventbrite", [
         {"id": "o1", "start": {**start, "local": "2018-11-04 01:30"}},
         {"id": "g1", "start": {**start, "local": "2018-03-11T02:30:00"}}])
     assert rows["o1"]["time"] == 1541309400000 and rows["o1"]["utcOffset"] == -14400000
     assert rows["g1"]["time"] == 1520753400000 and rows["g1"]["utcOffset"] == -18000000
 
 
-def test_eventbrite_unknown_zone_reads_null(spark, monkeypatch):
+def test_eventbrite_unknown_zone_reads_null(monkeypatch):
     """An unknown IANA zone (or an unparseable local time) gives that
     event null time and utcOffset; the chapter stays OK and its other
     events convert (the zone lookup used to fail the whole fetch)."""
-    rows = _replay_payload(spark, monkeypatch, "eventbrite", [
+    rows = _replay_payload(monkeypatch, "eventbrite", [
         {"id": "b1", "name": {"text": "Kept"},
          "start": {"timezone": "Bogus/Zone", "local": "2018-03-08T18:30:00"}},
         {"id": "b2", "start": {"timezone": "Europe/London", "local": "soon"}},
@@ -884,27 +906,27 @@ def test_eventbrite_unknown_zone_reads_null(spark, monkeypatch):
     assert rows["g1"]["time"] == 1520533800000 and rows["g1"]["utcOffset"] == 0
 
 
-def test_convert_lenient_reads(spark, monkeypatch):
+def test_convert_lenient_reads(monkeypatch):
     """How the normalizers read values of another JSON type: a
     coordinate held in a string reads as its number for every adapter;
     a float, boolean, object or array in a string field reads null; an
     Eventbrite local time with a zone suffix reads null; an event whose
     id is neither a string nor an integer makes its chapter a format
     error."""
-    rows = _replay_payload(spark, monkeypatch, "meetup", [
+    rows = _replay_payload(monkeypatch, "meetup", [
         {"id": "m1", "name": 3.5, "description": True,
          "venue": {"lat": "40.7", "lon": " -74.0 ", "zip": {"a": 1}, "city": ["x"]}}])
     v = rows["m1"]["venue"]
     assert (v["lat"], v["lon"], v["postalCode"], v["city"]) == (40.7, -74.0, None, None)
     assert rows["m1"]["title"] is None and rows["m1"]["description"] is None
-    rows = _replay_payload(spark, monkeypatch, "facebook", [
+    rows = _replay_payload(monkeypatch, "facebook", [
         {"id": "f1", "place": {"location": {"latitude": "38.6", "longitude": "west"}}}])
     assert (rows["f1"]["venue"]["lat"], rows["f1"]["venue"]["lon"]) == (38.6, None)
-    rows = _replay_payload(spark, monkeypatch, "eventbrite", [
+    rows = _replay_payload(monkeypatch, "eventbrite", [
         {"id": "e1", "start": {"timezone": "UTC", "local": "2018-11-04T01:30:00Z"}}])
     assert rows["e1"]["time"] is None
     for bad_id in (1.5, True, {"x": 1}):
-        rows = _replay_payload(spark, monkeypatch, "meetup", [{"id": bad_id}])
+        rows = _replay_payload(monkeypatch, "meetup", [{"id": bad_id}])
         assert rows[None]["error"] == "Couldn't format papers-we-love into correct JSON"
 
 
@@ -937,3 +959,109 @@ def test_run_pipeline_bad_chapter_ids_and_failed_writes(spark, tmp_path):
     log = (tmp_path / "logs" / "cuttlefish.log").read_text().splitlines()
     assert "WROTE: good (2)" in log and "ERROR: blocked (2)" in log
     assert "ERROR: ../escape (2)" in log and len(log) == len(doc)
+
+
+# Any JSON value json.loads can give: null, booleans, integers, floats
+# (NaN and infinities included), strings, arrays and objects.
+_JSON = st.recursive(
+    st.none() | st.booleans() | st.integers() | st.floats() | st.text(max_size=20),
+    lambda inner: st.lists(inner, max_size=3) | st.dictionaries(st.text(max_size=5), inner,
+                                                                max_size=3),
+    max_leaves=8,
+)
+# The values a raw event field is meant to hold, so that the typed
+# branches (ids, epoch millis, decimal coordinates, offset and local
+# times, IANA zones) run as well as the lenient ones.
+_TEXT = st.text(max_size=20)
+_ID = _TEXT | st.integers()
+_MILLIS = st.integers(-(2**64), 2**64)
+_COORD = st.floats() | st.floats(allow_nan=False).map(str) | st.integers().map(str) | _TEXT
+_FB_TIME = st.builds(lambda d, off: d.strftime("%Y-%m-%dT%H:%M:%S") + f"{off:+05d}",
+                     st.datetimes(), st.integers(-9999, 9999))
+_LOCAL = st.builds(lambda d, sep, spec: d.isoformat(sep, spec), st.datetimes(),
+                   st.sampled_from("T "), st.sampled_from(["auto", "minutes", "seconds"]))
+_ZONE = st.sampled_from(["UTC", "Europe/London", "America/New_York", "Asia/Kolkata",
+                         "Australia/Lord_Howe", "Bogus/Zone", "../etc", ""])
+
+
+def _shaped(shape):
+    """Values for a raw event path: three times in four what `shape`
+    names (a strategy for a field, a dict for an object, a one-item
+    list for an array), else any JSON value in its place."""
+    if isinstance(shape, dict):
+        typed = _object(shape)
+    elif isinstance(shape, list):
+        typed = st.lists(_shaped(shape[0]), max_size=3)
+    else:
+        typed = shape
+    return st.integers(0, 3).flatmap(lambda i: typed if i else _JSON)
+
+
+@st.composite
+def _object(draw, shape: dict) -> dict:
+    """A raw JSON object of `shape`, each key missing one time in five."""
+    return {k: draw(_shaped(v)) for k, v in shape.items() if draw(st.integers(0, 4))}
+
+
+_RAW_EVENTS = {
+    "meetup": {
+        "id": _ID, "link": _TEXT, "time": _MILLIS, "utc_offset": _MILLIS, "name": _TEXT,
+        "description": _TEXT,
+        "venue": {**dict.fromkeys(["name", "address_1", "address_2", "country", "city",
+                                   "zip"], _ID), "lon": _COORD, "lat": _COORD},
+        "photo_album": {"photo_sample": [{"photo_link": _TEXT}]},
+    },
+    "facebook": {
+        "id": _ID, "name": _TEXT, "description": _TEXT, "start_time": _FB_TIME,
+        "place": {"name": _TEXT, "location": {
+            **dict.fromkeys(["street", "country", "city", "zip"], _ID),
+            "longitude": _COORD, "latitude": _COORD}},
+    },
+    "eventbrite": {
+        "id": _ID, "url": _TEXT, "name": {"text": _TEXT}, "description": {"text": _TEXT},
+        "start": {"timezone": _ZONE, "local": _LOCAL},
+        "venue": {"name": _TEXT, "latitude": _COORD, "longitude": _COORD, "address": {
+            **dict.fromkeys(["address_1", "address_2", "city", "postal_code", "country"],
+                            _ID),
+            "latitude": _COORD, "longitude": _COORD}},
+    },
+}
+
+
+def _str_or_none(v) -> bool:
+    return v is None or type(v) is str
+
+
+def _long_or_none(v) -> bool:
+    return v is None or (type(v) is int and -(2**63) <= v < 2**63)
+
+
+def _float_or_none(v) -> bool:
+    return v is None or type(v) is float
+
+
+@settings(max_examples=200, deadline=None, suppress_health_check=list(HealthCheck))
+@given(st.sampled_from(sorted(ADAPTERS)).flatmap(
+    lambda adapter: st.tuples(st.just(adapter), _object(_RAW_EVENTS[adapter]))))
+def test_normalizers_give_canonical_types(adapter_event):
+    """Whatever JSON an event holds in any field, its adapter's
+    normalizer returns exactly the canonical keys, each value of its
+    canonical type or null: strings, int64 epoch millis, float
+    coordinates, and photos null or a list of {url, width, height}."""
+    adapter, event = adapter_event
+    rec = ADAPTERS[adapter](event)
+    assert set(rec) == CANONICAL_KEYS - {"chapter_id"}
+    for k in ("event_id", "url", "title", "description"):
+        assert _str_or_none(rec[k]), (k, rec[k])
+    assert _long_or_none(rec["time"]) and _long_or_none(rec["utcOffset"])
+    venue = rec["venue"]
+    assert set(venue) == VENUE_KEYS
+    for k in VENUE_KEYS - {"lon", "lat"}:
+        assert _str_or_none(venue[k]), (k, venue[k])
+    assert _float_or_none(venue["lon"]) and _float_or_none(venue["lat"])
+    photos = rec["photos"]
+    assert photos is None or type(photos) is list
+    for photo in photos or []:
+        assert set(photo) == {"url", "width", "height"}
+        assert _str_or_none(photo["url"])
+        assert _long_or_none(photo["width"]) and _long_or_none(photo["height"])

@@ -37,7 +37,6 @@ ALLOWED_NAMES = {"dedup_stream", "DEDUP_OUT_SCHEMA"}
 ALLOWED_PARAMS = {
     "run.py:run_pipeline(transport=)":
         "the live path, which no caller can choose yet (ROADMAP item 3)",
-    "sources/adapters.py:dispatch_replay(chapters=)": "test_datasource_matches_replay",
     "sources/config.py:load_config(cwd=)": "test_runtime_config_defaults_and_override",
     "sources/throttle.py:Throttle(clock=)": "test_token_bucket_header_backoff",
     "sources/throttle.py:Throttle(sleep=)": "test_token_bucket_header_backoff",

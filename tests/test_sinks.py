@@ -7,7 +7,8 @@ import json
 import os
 
 from cuttlefish_spark.sinks.json_sink import write_keyed_json
-from cuttlefish_spark.sources.adapters import dispatch_replay
+from cuttlefish_spark.sources import fixtures
+from cuttlefish_spark.sources.datasource import _fetch_rows
 
 
 def _records(df):
@@ -15,10 +16,16 @@ def _records(df):
     return df.rdd.map(lambda r: r.asDict(recursive=True))
 
 
+def _ok_fixture_records(spark):
+    """The golden fixture work-list's OK rows (canonical records) in
+    one partition."""
+    rows = [r for r in _fetch_rows(fixtures.CHAPTERS, "replay", None) if r["status"] == "OK"]
+    return spark.sparkContext.parallelize(rows, 1)
+
+
 def test_write_keyed_json_one_file_per_key(spark, tmp_path):
     out = str(tmp_path / "keyed")
-    df = dispatch_replay(spark).filter("status = 'OK'").coalesce(1)
-    write_keyed_json(_records(df), out)
+    write_keyed_json(_ok_fixture_records(spark), out)
     files = sorted(os.listdir(out))
     assert files == ["london.json", "newyork.json", "stlouis.json"]
     ny = json.load(open(f"{out}/newyork.json"))
@@ -30,10 +37,10 @@ def test_write_keyed_json_replace_mode(spark, tmp_path):
     """Re-running replaces outputs (reference overwrite semantics,
     api-runner.rkt:50-51)."""
     out = str(tmp_path / "keyed2")
-    df = dispatch_replay(spark).filter("status = 'OK'").coalesce(1)
-    write_keyed_json(_records(df), out)
+    records = _ok_fixture_records(spark)
+    write_keyed_json(records, out)
     first = os.path.getmtime(f"{out}/london.json")
-    write_keyed_json(_records(df), out)
+    write_keyed_json(records, out)
     assert os.path.getmtime(f"{out}/london.json") >= first
     assert len(json.load(open(f"{out}/london.json"))) == 3
 
@@ -141,16 +148,16 @@ def test_write_keyed_json_stale_staging_dir_does_not_change_files(spark, tmp_pat
     """A staging directory left by a killed attempt, holding a torn tmp
     file under the tmp name and a stray file, does not change the files
     a new attempt with the same id writes; the new attempt removes it."""
-    df = dispatch_replay(spark).filter("status = 'OK'").coalesce(1)
+    records = _ok_fixture_records(spark)
     fresh = tmp_path / "fresh"
-    want = write_keyed_json(_records(df), str(fresh))
+    want = write_keyed_json(records, str(fresh))
     out = tmp_path / "stale"
     stale = _next_stage_dirs(spark, out)
     for stage in stale:
         stage.mkdir(parents=True)
         (stage / "chapter.json.tmp").write_text('{"torn": ')
         (stage / "stray").write_text("x")
-    assert write_keyed_json(_records(df), str(out)) == want
+    assert write_keyed_json(records, str(out)) == want
     files = sorted(p.name for p in fresh.iterdir())
     assert files == ["london.json", "newyork.json", "stlouis.json"]
     assert sorted(p.name for p in out.iterdir() if p.suffix == ".json") == files
