@@ -86,15 +86,26 @@ def tokens(text: Column | str, lowercase: bool = True) -> Column:
 
 def word_shingles(words: Column, k: int = 3, sep: str = "_") -> Column:
     """k-word shingles from a token array: positions i..i+k-1 joined by
-    `sep`; fewer than k tokens -> empty array.
+    `sep`; fewer than k tokens (or null) -> empty array.
 
-    Built with sequence+slice so it stays inside codegen (no explode
-    needed to *build* shingles; explode only if a caller wants rows).
+    Shingle i is `concat_ws` over the i-th struct of `arrays_zip` of the
+    k shifted slices `w[j+1 .. j+n-k+1]`, j = 0..k-1. `words` is bound
+    once per row, as the lambda variable `w` of a one-element
+    `transform`: Spark's common-subexpression elimination does not reach
+    inside a higher-order function, so a caller's expression
+    (`tokens(text)`: lower, trim, split) would otherwise be evaluated
+    once per reference, and a `transform` over positions that slices
+    `words` re-evaluates it for every shingle.
     """
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), n - (k - 1))
-    sh = F.transform(idx, lambda i: F.array_join(F.slice(words, i, k), sep))
-    return F.when(n >= k, sh).otherwise(F.array().cast("array<string>"))
+
+    def build(w: Column) -> Column:
+        n = F.size(w)
+        m = F.greatest(n - (k - 1), F.lit(0))
+        cols = F.arrays_zip(*[F.slice(w, j + 1, m) for j in range(k)])
+        sh = F.transform(cols, lambda s: F.concat_ws(sep, *[s[str(j)] for j in range(k)]))
+        return F.when(n >= k, sh).otherwise(F.array().cast("array<string>"))
+
+    return F.element_at(F.transform(F.array(words), build), 1)
 
 
 def hash60(col: Column) -> Column:

@@ -22,6 +22,15 @@ local[32] and on a 1000-executor cluster:
   pyspark from source (about 0.7 s before its first task). The daemon
   module imports the installed, bytecode-cached pyspark instead when
   its version is the zip's.
+- One Python worker pool per session: Spark keys its worker pools by
+  the job's environment variables, and its SQL-side Python runners
+  (`pandas_udf`, `udf`, `mapInPandas`/`mapInArrow`, `applyInPandas`,
+  UDTFs) add `SPARK_SIMPLIFIED_TRACEBACK=1`, which RDD jobs (the
+  pipeline's fetch-convert-write job, `createDataFrame` over local
+  rows) lack. `spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK=1` puts the
+  variable in `sc.environment`, which both kinds of job carry, so they
+  share one daemon and its warm workers instead of starting a second
+  daemon; RDD task errors get the SQL side's short tracebacks.
 - Class-data sharing: a fresh driver JVM maps a dynamic AppCDS archive
   of the classes an earlier run loaded (JEP 350), which roughly halves
   its start-up. One archive is kept per JDK and Spark jar set, as
@@ -37,7 +46,12 @@ local[32] and on a 1000-executor cluster:
   empty one in the cache; one holding any other file is kept, and the
   JVM starts without CDS. So does a JVM whose cache dir cannot be
   written. A stale or corrupt archive falls back to a normal start
-  (`-Xshare:auto`). The JVM's CDS log goes to `<key>.log`, not stdout.
+  (`-Xshare:auto`); once the JVM is up, an archive that it did not map
+  (absent from `/proc/<pid>/maps`) is deleted, so the next start dumps
+  a fresh one. The JVM's CDS log goes to `<key>.log`, not stdout.
+- No JVM outlives Python: every session that launched its JVM
+  registers one exit hook that stops the SparkContext, closes the
+  gateway's stdin and waits for the JVM to exit.
 """
 
 from __future__ import annotations
@@ -53,8 +67,10 @@ from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
-# How long the exit hook waits for the dumping JVM before it kills it.
+# How long the exit hook waits for the JVM to exit before it kills it:
+# a dumping JVM writes its archive (10-20 s) first.
 DUMP_WAIT_S = 300
+STOP_WAIT_S = 30
 
 
 def get_spark(
@@ -81,6 +97,7 @@ def get_spark(
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.python.daemon.module", "cuttlefish_spark.daemon")
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
         # Long-session hygiene (r13, measured; re-measured r14): a
         # periodic System.gc() (spark.cleaner.periodicGC.interval) is a
         # full stop-the-world pause that lands mid-query and made
@@ -97,27 +114,31 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
     )
     # Only a session that launches the JVM can choose its flags.
-    flags, dump = _class_data_sharing() if SparkContext._gateway is None else ("", None)
+    launches = SparkContext._gateway is None
+    flags, jsa, tmp = _class_data_sharing() if launches else ("", None, None)
     if flags:
         builder = builder.config("spark.driver.defaultJavaOptions", flags)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     proc = getattr(SparkContext._gateway, "proc", None)
-    if dump is not None and proc is not None:
-        atexit.register(_keep_dump, proc, *dump)
+    if launches and proc is not None:
+        if jsa is not None and tmp is None:
+            _drop_refused_archive(proc.pid, jsa)
+        atexit.register(_stop_jvm, proc, tmp, jsa)
     return spark
 
 
-def _class_data_sharing() -> tuple[str, tuple[str, str] | None]:
-    """The driver JVM's CDS flags ("" to start without CDS) and, when
-    this JVM dumps the archive, its `(tmp, jsa)` paths. Points
-    `SPARK_CONF_DIR` at the cache's empty conf dir when CDS is on."""
+def _class_data_sharing() -> tuple[str, str | None, str | None]:
+    """The driver JVM's CDS flags ("" to start without CDS), the
+    archive's `jsa` path (None without CDS) and, when this JVM dumps the
+    archive, its `tmp` path (else None). Points `SPARK_CONF_DIR` at the
+    cache's empty conf dir when CDS is on."""
     spark_home = _find_spark_home()
     conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
     with contextlib.suppress(FileNotFoundError):
         if any(not name.endswith(".template") for name in os.listdir(conf_dir)):
-            return "", None
+            return "", None, None
     cache = os.path.join(
         os.path.abspath(os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")),
         "cuttlefish-spark",
@@ -125,17 +146,18 @@ def _class_data_sharing() -> tuple[str, tuple[str, str] | None]:
     try:
         os.makedirs(os.path.join(cache, "conf"), exist_ok=True)
     except OSError:
-        return "", None
+        return "", None, None
     if not os.access(cache, os.W_OK):
-        return "", None
+        return "", None, None
     os.environ["SPARK_CONF_DIR"] = os.path.join(cache, "conf")
     base = os.path.join(cache, _archive_key(spark_home))
     flags = f'"-Xlog:cds*=off" "-Xlog:cds*=warning:file={base}.log::filecount=0"'
-    if os.path.exists(base + ".jsa"):
-        return f'{flags} "-XX:SharedArchiveFile={base}.jsa"', None
+    jsa = base + ".jsa"
+    if os.path.exists(jsa):
+        return f'{flags} "-XX:SharedArchiveFile={jsa}"', jsa, None
     _remove_orphan_dumps(cache)
     tmp = f"{base}.{os.getpid()}.tmp"
-    return f'{flags} "-XX:ArchiveClassesAtExit={tmp}"', (tmp, base + ".jsa")
+    return f'{flags} "-XX:ArchiveClassesAtExit={tmp}"', jsa, tmp
 
 
 def _archive_key(spark_home: str) -> str:
@@ -173,24 +195,43 @@ def _remove_orphan_dumps(cache: str) -> None:
             pass
 
 
-def _keep_dump(proc: subprocess.Popen, tmp: str, jsa: str) -> None:
-    """Exit hook of a dumping JVM: stop the SparkContext (its accumulator
-    server would otherwise print the JVM's hang-up as an EOFError), close
-    the gateway's stdin (the JVM exits on EOF and dumps the archive),
-    wait for it, and keep the dump only if the JVM exited 0, so no JVM
-    outlives Python and a torn dump is never mapped."""
+def _drop_refused_archive(pid: int, jsa: str) -> None:
+    """Delete `jsa` when the running JVM `pid` did not map it (a corrupt
+    or mismatched archive, refused under `-Xshare:auto`), so the next
+    start dumps a fresh one instead of mapping it again. A mapped archive
+    shows in `/proc/<pid>/maps`; where that cannot be read, the archive
+    is kept."""
+    try:
+        with open(f"/proc/{pid}/maps") as fh:
+            mapped = os.path.realpath(jsa) in fh.read()
+    except OSError:
+        return
+    if not mapped:
+        with contextlib.suppress(OSError):
+            os.remove(jsa)
+
+
+def _stop_jvm(proc: subprocess.Popen, tmp: str | None, jsa: str | None) -> None:
+    """Exit hook of a session that launched its JVM: stop the
+    SparkContext (its accumulator server would otherwise print the JVM's
+    hang-up as an EOFError), close the gateway's stdin (the JVM exits on
+    EOF, dumping the archive to `tmp` if it was asked to) and wait for
+    it, so no JVM outlives Python. A dump is kept as `jsa` only if the
+    JVM exited 0, so a torn dump is never mapped. After an explicit
+    `stop()` that already waited for the JVM, this does nothing more."""
     sc = SparkContext._active_spark_context
     if sc is not None:
         sc.stop()
     proc.stdin.close()
     try:
-        ok = proc.wait(timeout=DUMP_WAIT_S) == 0
+        ok = proc.wait(timeout=STOP_WAIT_S if tmp is None else DUMP_WAIT_S) == 0
     except subprocess.TimeoutExpired:
         proc.kill()
         proc.wait()
         ok = False
-    with contextlib.suppress(OSError):
-        if ok:
-            os.replace(tmp, jsa)
-        else:
-            os.remove(tmp)
+    if tmp is not None:
+        with contextlib.suppress(OSError):
+            if ok:
+                os.replace(tmp, jsa)
+            else:
+                os.remove(tmp)

@@ -106,6 +106,32 @@ def test_word_shingles(spark, words, k, expect):
     assert df.select(word_shingles(F.col("w"), k=k).alias("s")).first()["s"] == expect
 
 
+def _word_shingles_per_position(words, k, sep="_"):
+    """The former builder, kept as the reference: a `transform` over
+    positions 1..n-k+1 that slices and joins `words` at each."""
+    n = F.size(words)
+    idx = F.sequence(F.lit(1), n - (k - 1))
+    sh = F.transform(idx, lambda i: F.array_join(F.slice(words, i, k), sep))
+    return F.when(n >= k, sh).otherwise(F.array().cast("array<string>"))
+
+
+# Tabs, newlines and other whitespace that `F.trim` (spaces only) keeps
+# but the `\s+` split consumes, so texts can start with an empty token.
+_WHITESPACE_HEAVY = st.text(st.sampled_from(list(" \t\n\r\x0b\x0c\u00a0\u3000") + list("aBé_")),
+                            max_size=24)
+
+
+@given(texts=st.lists(st.none() | _WHITESPACE_HEAVY, min_size=1, max_size=20),
+       k=st.integers(1, 5))
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_word_shingles_matches_the_per_position_builder(spark, texts, k):
+    df = spark.createDataFrame([(t,) for t in texts], "text string")
+    toks = tokens(F.col("text"))
+    rows = df.select(word_shingles(toks, k=k).alias("new"),
+                     _word_shingles_per_position(toks, k).alias("old")).collect()
+    assert [r["new"] for r in rows] == [r["old"] for r in rows]
+
+
 def test_hash60_matches_duckdb(spark):
     import duckdb
 
